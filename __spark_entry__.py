@@ -1321,7 +1321,7 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     _register_views(spark, sf_dir)
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 8)
-    exact = cosine_topk(emb, q, k=KNN_K).select("query_id", "vec_id").cache()
+    exact = cosine_topk(emb, q, k=KNN_K).select("query_id", "vec_id").localCheckpoint()
     n_exact = exact.count()
     tagged = None
     for d in (16, 32, 64):
@@ -6401,10 +6401,10 @@ def emb_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     _register_views(spark, sf_dir)
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 8)
-    # ground truth is computed ONCE (cached): it feeds every method's hit
-    # join plus the denominator — 4 recomputations of the brute-force
+    # ground truth is computed ONCE (materialized): it feeds every method's
+    # hit join plus the denominator — 4 recomputations of the brute-force
     # cosine otherwise dominated this query's runtime
-    exact = cosine_topk(emb, q, k=KNN_K).select("query_id", "vec_id").cache()
+    exact = cosine_topk(emb, q, k=KNN_K).select("query_id", "vec_id").localCheckpoint()
     n_exact = exact.count()
     methods = [
         (
@@ -10533,563 +10533,6 @@ _ROUND10_SAMPLE_FIRST = [
     # heaviest operator optimized this round — driver re-verification
     "emb_semantic_dedup",
 ]
-
-
-
-# Round-9 driver-sample rotation: the 16 r8 hash-red gates FIRST — this
-# round's ingestion-policy fixes (NaN≙NULL missing-value normalization,
-# FLOOR ns→µs) sit behind the user_id/doc_id-grouped family, so their
-# colors are the round's acceptance test — then 27 `xfil_*`
-# exfiltration probes (each reports a driver-side integer fact as its row
-# count; see the family comment; the 4 lowest-marginal-information probes
-# — zero_value, orders_nan_custkey, docs_nan_id, li_rows — yielded their
-# slots), then 5 never-driver-sampled gates (VERDICT r8 #5: kriging's
-# first-ever driver value bit via the integer-exact Cramer twin, one
-# media codec, one graph, emb_kmeans, orders_yoy_growth), then 2
-# ingestion-regression slots: the µs/value-consuming gates most exposed
-# to the new float/ts normalizations.
-_ROUND9_SAMPLE_FIRST = [
-    # r8 reds (retest after the r9 ingestion fixes)
-    "docs_chi2_terms",
-    "events_mann_kendall",
-    "docs_token_stream_probe",
-    "events_pair_probe",
-    "docs_simpson_diversity",
-    "events_markov_transitions",
-    "events_mad_anomaly",
-    "events_ns_residue_probe",
-    "events_column_probe",
-    "orders_dq_report",
-    "docs_stratified_sample",
-    "events_gini_users",
-    "lineitem_weighted_median",
-    "orders_priority_markov",
-    "orders_total_mad",
-    "events_nulltally_probe",
-    # exfiltration probes (row counts ARE the measurement)
-    "xfil_env_versions",
-    "xfil_events_rows",
-    "xfil_events_null_ts",
-    "xfil_events_null_user",
-    "xfil_events_nan_user",
-    "xfil_events_null_value",
-    "xfil_events_nan_value",
-    "xfil_events_inf_value",
-    "xfil_events_distinct_user",
-    "xfil_events_type_user_pairs",
-    "xfil_events_ns_residue",
-    "xfil_events_pre1970",
-    "xfil_events_dtypes",
-    "xfil_orders_rows",
-    "xfil_orders_null_custkey",
-    "xfil_orders_tp_missing",
-    "xfil_orders_tp_chk",
-    "xfil_orders_med2",
-    "xfil_orders_dtypes",
-    "xfil_li_q_missing",
-    "xfil_li_q_frac",
-    "xfil_li_ep_chk",
-    "xfil_docs_rows",
-    "xfil_docs_null_id",
-    "xfil_docs_neg_id",
-    "xfil_docs_dup_id",
-    "xfil_docs_null_lst",
-    # never-driver-sampled gates (first driver value-bits)
-    "sensors_kriging_exact3",
-    "emb_kmeans",
-    "media_png_histogram",
-    "events_graph_jaccard",
-    "orders_yoy_growth",
-    # ingestion-regression slots
-    "events_asof_purchase",
-    "events_ohlc_bars",
-]
-
-
-# Round-8 driver-sample rotation (VERDICT r7 #2/#9): the 16 r7 hash-red
-# gates FIRST — every one has a round-8 fix behind it (NULL ordering,
-# exact-integer median/MAD, trim/tokenizer portability, modular
-# checksums, paired ORDER BYs) and their colors are the round's
-# acceptance test — then the 20 one-fact probes (each red names a single
-# mechanism; probe_order_sensitivity settles whether the driver hash is
-# row-order-sensitive), then 14 gates whose SEMANTICS changed this round
-# (scaled-rounding codemod, quantized sums, asof struct fix) so the
-# driver independently re-verifies them.
-_ROUND8_SAMPLE_FIRST = [
-    # r7 reds (retest)
-    "docs_chi2_terms",
-    "events_mann_kendall",
-    "docs_token_stream_probe",
-    "events_pair_probe",
-    "docs_simpson_diversity",
-    "events_markov_transitions",
-    "events_mad_anomaly",
-    "events_compacted_scan",
-    "events_ns_residue_probe",
-    "events_column_probe",
-    "orders_dq_report",
-    "docs_stratified_sample",
-    "events_gini_users",
-    "lineitem_weighted_median",
-    "orders_priority_markov",
-    "orders_total_mad",
-    # one-fact probes
-    "probe_order_sensitivity",
-    "events_rowset_probe",
-    "events_nulltally_probe",
-    "events_idchk_probe",
-    "events_userchk_probe",
-    "events_tschk_probe",
-    "events_vfloor_probe",
-    "events_vround_probe",
-    "docs_charchk_probe",
-    "docs_trimlen_probe",
-    "docs_tokcount_probe",
-    "docs_foldchk_probe",
-    "docs_tokchk_b0",
-    "docs_tokchk_b1",
-    "docs_tokchk_b2",
-    "docs_tokchk_b3",
-    "docs_tokchk_b4",
-    "docs_tokchk_b5",
-    "docs_tokchk_b6",
-    "docs_tokchk_b7",
-    # changed-semantics regressions
-    "semantics_probe",
-    "events_asof_purchase",
-    "events_ohlc_bars",
-    "events_state_merge",
-    "events_lag_delta",
-    "events_scd2",
-    "events_sessionize",
-    "customer_snapshot_diff",
-    "docs_unigram_logprob",
-    "docs_jaccard_pairs",
-    "customer_upsert_merge",
-    "events_time_rollup",
-    "events_sax_words",
-    "events_hll_portable",
-]
-
-
-# Round-7 driver-sample rotation: the eight r6 hash-red gates first (their
-# r7 colors are the round's acceptance test for the ASCII-lower and exact-
-# epoch fixes), then the five new decomposition probes (column/order/ns-
-# residue/compaction-identity/constant-input semantics — each red/green is
-# one diagnostic bit), then never-before-sampled queries filling the
-# 50-entry window (cumulative driver-checked after r6: 257 of 305; the 11
-# still-unsampled queries roll to r8).
-_ROUND7_SAMPLE_FIRST = [
-    "docs_chi2_terms",
-    "events_mann_kendall",
-    "docs_token_stream_probe",
-    "events_pair_probe",
-    "docs_simpson_diversity",
-    "events_markov_transitions",
-    "events_mad_anomaly",
-    "events_compacted_scan",
-    "semantics_probe",
-    "events_ns_residue_probe",
-    "events_column_probe",
-    "events_order_probe",
-    "events_compaction_identity",
-    "docs_char_entropy",
-    "docs_bigram_topk",
-    "events_position_attribution",
-    "events_km_survival",
-    "events_cms_heavy_hitters",
-    "events_kmv_distinct",
-    "events_cusum_alarms",
-    "orders_dq_report",
-    "emb_pq_topk",
-    "emb_ivfpq_topk",
-    "emb_matryoshka_recall",
-    "docs_bigram_logprob",
-    "events_kmv_overlap",
-    "events_rolling_actives",
-    "events_seasonal_decompose",
-    "docs_stratified_sample",
-    "orders_cohort_ltv",
-    "part_abc_classification",
-    "lineitem_basket_pairs",
-    "docs_ngram_novelty",
-    "customer_upsert_merge",
-    "events_value_trend",
-    "events_active_islands",
-    "events_island_overlaps",
-    "docs_rake_keywords",
-    "events_seasonal_naive",
-    "orders_benford_audit",
-    "events_autocorrelation",
-    "docs_byte_probe",
-    "semantics_ns_canary",
-    "events_funnel",
-    "events_scd2",
-    "emb_semantic_dedup",
-    "events_gini_users",
-    "lineitem_weighted_median",
-    "orders_priority_markov",
-    "orders_total_mad",
-]
-
-# Round-6 driver-sample rotation: the two persistent red gates first
-# (now integer-only), their two bisection probes, this round's 11 new
-# gates, then never-before-sampled queries up to the 50-entry window the
-# external gate samples — 2 retests + 48 queries with no prior
-# CORRECTNESS row (cumulative driver-checked after r5: 212 of 280).
-_ROUND6_SAMPLE_FIRST = [
-    "docs_chi2_terms",
-    "events_mann_kendall",
-    "docs_token_stream_probe",
-    "events_pair_probe",
-    "sensors_zonal_from_geotiff_fpred",
-    "media_wav_g711",
-    "zones_gpkg_ingest_dist",
-    "media_wav_dft8",
-    "events_log_histogram",
-    "docs_simpson_diversity",
-    "events_markov_transitions",
-    "events_mad_anomaly",
-    "docs_neardedup_keep_longest",
-    "sensors_gpkg_points",
-    "emb_vector_sumsq",
-    "events_markov_transitions",
-    "docs_simpson_diversity",
-    "events_log_histogram",
-    "events_compacted_scan",
-    "docs_setsim_join",
-    "docs_readability",
-    "docs_zipf_slope",
-    "events_quality_audit",
-    "q18_large_orders",
-    "lineitem_cube",
-    "events_approx_distinct",
-    "sensors_morton_order",
-    "orders_semi_join",
-    "customer_anti_join",
-    "events_rms_udaf",
-    "docs_word_udtf",
-    "events_distinct_users",
-    "q11_important_parts",
-    "q12_late_priority",
-    "q13_customer_distribution",
-    "q16_supplier_cnt",
-    "q19_disjunctive_revenue",
-    "q20_part_promotion",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    "events_session_native",
-    "events_robust_stats",
-    "lineitem_grouping_sets",
-    "docs_normalize",
-    "events_resample_ffill",
-    "events_resample_interp",
-    "events_corr_hour",
-    "events_regr_trend",
-    "events_stats_unpivot",
-    "lineitem_moments",
-]
-
-# Round-5 driver-sample rotation: the two r4 hash-red gates (now
-# tie-free -- their green r5 rows are the round's acceptance test)
-# and this round's new deflate-GeoTIFF gate first, then the 107
-# queries that have never appeared in any CORRECTNESS_r* file, so
-# the 50-query sample maximizes fresh independent coverage
-# (cumulative driver-checked after r4: 164 of 271).
-_ROUND5_SAMPLE_FIRST = [
-    "docs_chi2_terms",
-    "events_mann_kendall",
-    "sensors_zonal_from_geotiff_deflate",
-    "sensors_shapefile_export",
-    "docs_winnowing_fps",
-    "docs_winnowing_pairs",
-    "docs_phrase_search",
-    "customer_er_matches",
-    "events_skyline",
-    "events_sax_words",
-    "events_bfs_reach",
-    "docs_containment_pairs",
-    "docs_gopher_quality",
-    "events_time_rollup",
-    "orders_month_spine",
-    "events_safe_math",
-    "events_variant_props",
-    "q17_small_quantity_revenue",
-    "customer_upsert",
-    "events_orc_roundtrip",
-    "events_range_window",
-    "customer_segment_quartiles",
-    "docs_train_split",
-    "docs_decontaminate",
-    "pipeline_training_prep",
-    "events_partitioned_scan",
-    "emb_cosine_topk",
-    "emb_ann_lsh",
-    "emb_ann_lsh_multi",
-    "emb_ann_ivf",
-    "emb_ann_ivf_probe2",
-    "emb_neardup",
-    "docs_token_count",
-    "docs_ttr",
-    "docs_pii_scrub",
-    "docs_pack_sequences",
-    "events_percentiles",
-    "lineitem_rollup",
-    "events_union_dedup",
-    "events_except",
-    "events_daily_profile",
-    "events_bottomk_per_sensor",
-    "docs_quality",
-    "sensors_webmercator",
-    "pipeline_quality_lang",
-    "events_asof_purchase",
-    "events_sessionize",
-    "events_moving_avg",
-    "events_salted_join",
-    "events_runtime_filter_join",
-    "events_quality_audit",
-    "q18_large_orders",
-    "lineitem_cube",
-    "events_approx_distinct",
-    "sensors_morton_order",
-    "orders_semi_join",
-    "customer_anti_join",
-    "events_rms_udaf",
-    "docs_word_udtf",
-    "events_distinct_users",
-    "q11_important_parts",
-    "q12_late_priority",
-    "q13_customer_distribution",
-    "q16_supplier_cnt",
-    "q19_disjunctive_revenue",
-    "q20_part_promotion",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    "events_session_native",
-    "events_robust_stats",
-    "lineitem_grouping_sets",
-    "docs_normalize",
-    "events_resample_ffill",
-    "events_resample_interp",
-    "events_corr_hour",
-    "events_regr_trend",
-    "events_stats_unpivot",
-    "lineitem_moments",
-    "docs_char_entropy",
-    "docs_bigram_topk",
-    "events_position_attribution",
-    "events_km_survival",
-    "events_cms_heavy_hitters",
-    "events_kmv_distinct",
-    "events_cusum_alarms",
-    "orders_dq_report",
-    "emb_pq_topk",
-    "emb_ivfpq_topk",
-    "emb_matryoshka_recall",
-    "docs_bigram_logprob",
-    "events_kmv_overlap",
-    "events_rolling_actives",
-    "events_seasonal_decompose",
-    "docs_stratified_sample",
-    "orders_cohort_ltv",
-    "part_abc_classification",
-    "lineitem_basket_pairs",
-    "docs_ngram_novelty",
-    "customer_upsert_merge",
-    "events_value_trend",
-    "events_active_islands",
-    "events_island_overlaps",
-    "docs_rake_keywords",
-    "events_seasonal_naive",
-    "orders_benford_audit",
-    "events_autocorrelation",
-    "emb_kmeans",
-    "events_funnel",
-    "events_scd2",
-    "docs_pagerank",
-    "emb_semantic_dedup",
-    "sensors_kriging",
-    "sensors_kriging_tiled",
-    "docs_media_features",
-    "media_frame_sample",
-    "media_wav_frames",
-    "events_stream_interval",
-    "events_stream_sliding",
-]
-
-
-# Round-4 driver-sample rotation: this round's new/changed-shape queries
-# first (fresh GeoJSON/raster/media gates, the dedup family whose plans
-# changed), then the 79 queries never yet driver-checked (r01+r02+r03
-# covered 114 of the prior surface). 50 get sampled per round.
-_ROUND4_SAMPLE_FIRST = [
-    "zones_geohash_join",
-    "orders_cdc_apply",
-    "events_pivot_daily",
-    "events_unpivot_roundtrip",
-    "events_stream_hll_merge",
-    "emb_ann_rrf",
-    "events_frequent_sequences",
-    "events_hll_portable",
-    "docs_bpe_merges",
-    "docs_bpe_segments",
-    "sensors_geohash_cells",
-    "media_ppm_histogram",
-    "media_wav_zcr",
-    "sensors_dbscan",
-    "docs_chi2_terms",
-    "docs_nb_confusion",
-    "events_theilsen_trend",
-    "events_mann_kendall",
-    "events_ohlc_bars",
-    "events_adamic_adar",
-    "events_kcore",
-    "zones_geojson_ingest",
-    "zones_geojson_holes_agg",
-    "zones_shapefile_ingest",
-    "zones_gpkg_ingest",
-    "docs_paragraph_dedup",
-    "docs_substring_dedup",
-    "docs_stream_neardedup",
-    "media_ppm_resize",
-    "media_wav_resample",
-    "media_image_dhash",
-    "media_audio_fingerprint",
-    "media_dhash_pairs",
-    "docs_global_shuffle",
-    "sensors_kriging_spherical",
-    "events_xml_roundtrip",
-    "sensors_zonal_from_grid",
-    "sensors_zonal_from_geotiff",
-    "docs_url_filter",
-    "docs_term_blocklist",
-    "docs_dsir_weights",
-    "docs_dsir_select",
-    "docs_paragraph_langs",
-    "docs_url_canon_dedup",
-    "docs_contamination_report",
-    "customer_snapshot_diff",
-    "emb_hard_negatives",
-    "docs_group_split",
-    "docs_token_budget",
-    "events_linear_attribution",
-    "events_position_attribution",
-    "events_km_survival",
-    "events_cms_heavy_hitters",
-    "events_kmv_distinct",
-    "events_cusum_alarms",
-    "orders_dq_report",
-    "emb_pq_topk",
-    "emb_ivfpq_topk",
-    "emb_matryoshka_recall",
-    "docs_bigram_logprob",
-    "events_kmv_overlap",
-    "events_rolling_actives",
-    "events_seasonal_decompose",
-    "docs_stratified_sample",
-    "orders_cohort_ltv",
-    "part_abc_classification",
-    "lineitem_basket_pairs",
-    "docs_ngram_novelty",
-    "customer_upsert_merge",
-    "events_value_trend",
-    "events_active_islands",
-    "events_island_overlaps",
-    "docs_rake_keywords",
-    "events_seasonal_naive",
-    "orders_benford_audit",
-    "events_autocorrelation",
-    "docs_media_features",
-    "media_wav_frames",
-    "docs_containment_pairs",
-    "docs_jaccard_pairs",
-    "docs_dup_components",
-    "docs_incremental_neardedup",
-    "docs_incremental_dedup",
-    "emb_semantic_dedup",
-    "events_cogroup_asof",
-    "docs_weighted_median",
-    "q11_important_parts",
-    "q12_late_priority",
-    "q13_customer_distribution",
-    "q16_supplier_cnt",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q20_part_promotion",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    "emb_cosine_topk",
-    "emb_ann_lsh",
-    "emb_ann_lsh_multi",
-    "emb_ann_ivf",
-    "emb_ann_ivf_probe2",
-    "emb_neardup",
-    "docs_decontaminate",
-    "events_resample_ffill",
-    "events_resample_interp",
-    "events_asof_purchase",
-    "events_time_rollup",
-    "events_robust_stats",
-    "events_sessionize",
-    "events_session_native",
-    "events_moving_avg",
-    "pipeline_training_prep",
-    "pipeline_quality_lang",
-    "docs_train_split",
-    "docs_token_count",
-    "docs_ttr",
-    "docs_pii_scrub",
-    "docs_pack_sequences",
-    "docs_quality",
-    "docs_normalize",
-    "events_percentiles",
-    "lineitem_rollup",
-    "lineitem_cube",
-    "lineitem_grouping_sets",
-    "lineitem_moments",
-    "events_salted_join",
-    "events_runtime_filter_join",
-    "customer_upsert",
-    "customer_anti_join",
-    "orders_semi_join",
-    "orders_month_spine",
-    "events_safe_math",
-    "events_variant_props",
-    "events_orc_roundtrip",
-    "events_range_window",
-    "customer_segment_quartiles",
-    "events_partitioned_scan",
-    "events_union_dedup",
-    "events_except",
-    "events_daily_profile",
-    "events_bottomk_per_sensor",
-    "sensors_webmercator",
-    "events_quality_audit",
-    "events_approx_distinct",
-    "sensors_morton_order",
-    "events_rms_udaf",
-    "docs_word_udtf",
-    "events_distinct_users",
-    "events_corr_hour",
-    "events_regr_trend",
-    "events_stats_unpivot",
-    "docs_char_entropy",
-    "docs_bigram_topk",
-    "docs_gopher_quality",
-    "emb_kmeans",
-    "events_funnel",
-    "events_scd2",
-    "docs_pagerank",
-    "sensors_kriging",
-    "sensors_kriging_tiled",
-    "media_frame_sample",
-    "events_stream_interval",
-    "events_stream_sliding"
-]
-# rotated each round; alias keeps the queries() wiring stable
-_ROUND3_SAMPLE_FIRST = _ROUND4_SAMPLE_FIRST
-
 
 
 # --------------------------------------------------------------------------

@@ -104,16 +104,6 @@ def main() -> int:
             timings[name] = -1.0
             runs[name] = samples
             print(f"bench error in {name}: {exc}", file=sys.stderr)
-        # Release this query's .cache() entries: CacheManager holds strong
-        # references, so without this every cached subtree (substring_dedup,
-        # naive_bayes, incremental_neardedup, ...) stays pinned in storage
-        # memory for the REST of the sweep and every later query's planning
-        # walks the accumulated entries (guide §5 — unpersist when done).
-        # After the repeats, so within-query timing semantics are unchanged.
-        try:
-            spark.catalog.clearCache()
-        except Exception:
-            pass
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     payload = {
@@ -139,8 +129,9 @@ def main() -> int:
         # since r10 per VERDICT r9 #3): the first full sweep of a round at a
         # given core count wins; later re-runs (e.g. the driver's 8-core
         # scaling pass, ad-hoc re-sweeps) get their own file or are skipped,
-        # so the 32-core per-query archive survives the round.
-        # SPARK_GRAFT_ARCHIVE_FORCE=1 overrides.
+        # so the 32-core per-query archive survives the round. A sweep with
+        # an errored query writes no archive. SPARK_GRAFT_ARCHIVE_FORCE=1
+        # overrides both rules.
         try:
             rnd = None
             with open(os.path.join(here, "PROGRESS.jsonl")) as pf:
@@ -148,12 +139,13 @@ def main() -> int:
                     rec = json.loads(line)
                     rnd = rec.get("round", rnd)
             if rnd is not None:
-                cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+                cpus = spark.sparkContext.defaultParallelism
                 arch = os.path.join(
                     here, f"bench_out_r{int(rnd):02d}_c{cpus}.json"
                 )
                 force = os.environ.get("SPARK_GRAFT_ARCHIVE_FORCE") == "1"
-                if force or not os.path.exists(arch):
+                clean = all(t >= 0 for t in timings.values())
+                if force or (clean and not os.path.exists(arch)):
                     with open(arch, "w") as f:
                         f.write(json.dumps(payload, separators=(",", ":")) + "\n")
         except Exception:

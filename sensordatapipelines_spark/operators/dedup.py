@@ -121,22 +121,26 @@ def _shingle_postings(
     Returns ``(exploded, sizes)``: the posting table ``(__id, __s)`` and the
     per-doc informative-shingle counts ``(__id, __n)``.
     """
-    # Cache the shingled form: it feeds both the size table and the posting
-    # lists — without the cache, tokenization + shingling re-runs per use.
     # spread_by first: shingling must not run on a single input split.
-    shingled = (
-        spread_by(df.select(F.col(id_col).alias("__id"), F.col(text_col)), "__id")
-        .select(
-            "__id",
-            F.array_distinct(word_ngrams_kernel(n)(F.col(text_col))).alias("__sh"),
-        )
-        .cache()
+    shingled = spread_by(
+        df.select(F.col(id_col).alias("__id"), F.col(text_col)), "__id"
+    ).select(
+        "__id",
+        F.array_distinct(word_ngrams_kernel(n)(F.col(text_col))).alias("__sh"),
     )
     # Work on the 8-byte hash of the shingle, not the string: key width is
     # the dominant shuffle cost at scale (collision odds ~n²/2⁶⁴).
-    exploded = shingled.select(
-        "__id", F.explode(F.transform("__sh", lambda s: F.xxhash64(s))).alias("__s")
-    ).distinct()
+    # Materialize the postings: they feed the stop-shingle frequency table
+    # and the anti-join (or, unguarded, both self-join sides + sizes) —
+    # without it, tokenization + shingling re-runs per consumer.
+    exploded = (
+        shingled.select(
+            "__id",
+            F.explode(F.transform("__sh", lambda s: F.xxhash64(s))).alias("__s"),
+        )
+        .distinct()
+        .localCheckpoint()
+    )
     # ^ distinct at the (id, shingle) level, not just within each row's
     # array: duplicate-id input rows must MERGE into one shingle set (the
     # set semantics every oracle states) — without it, shared shingles
@@ -157,19 +161,19 @@ def _shingle_postings(
         # keeps the guard map-side; broadcasting the kept majority would
         # itself be a scale bug.
         hot = freq.filter(F.col("__df") > max_shingle_df).select("__s")
-        # Cache the FILTERED postings: they feed three consumers (both
-        # self-join sides + the sizes aggregate), and without the cache the
-        # explode + hot-set anti-join re-executes per consumer — measured as
-        # the dominant duplication in the containment/jaccard plans. The two
-        # join-side exchanges over the same cached scan also become
-        # ReuseExchange-able (identical canonical subtrees).
-        exploded = exploded.join(F.broadcast(hot), "__s", "left_anti").cache()
-        sizes = exploded.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    else:
-        exploded = exploded.cache()
-        # sizes from the DISTINCT postings (per-row array sizes would
-        # double-count duplicate-id rows' shared shingles)
-        sizes = exploded.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
+        # Materialize the FILTERED postings: they feed three consumers
+        # (both self-join sides + the sizes aggregate), and without it the
+        # hot-set anti-join re-executes per consumer — measured as the
+        # dominant duplication in the containment/jaccard plans. The two
+        # join-side exchanges over the same checkpoint scan also become
+        # ReuseExchange-able (identical canonical subtrees). The unfiltered
+        # postings are dead once the filtered copy exists.
+        unfiltered = exploded
+        exploded = exploded.join(F.broadcast(hot), "__s", "left_anti").localCheckpoint()
+        unpersist_checkpoint(unfiltered)
+    # sizes from the DISTINCT postings (per-row array sizes would
+    # double-count duplicate-id rows' shared shingles)
+    sizes = exploded.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
     return exploded, sizes
 
 
@@ -214,7 +218,7 @@ def jaccard_pairs(
     Observability (the semantic shift is measurable, not silent): pass a
     dict as ``metrics`` and the guard fills ``n_stop_shingles`` (distinct
     shingles actually dropped) and ``n_distinct_shingles`` eagerly — ONE
-    small aggregate over the cached shingled form, negligible next to the
+    small aggregate over the materialized postings, negligible next to the
     candidate join. ``n_stop_shingles == 0`` certifies the guarded result
     is bit-identical to the exact (``max_shingle_df=None``) Jaccard.
     (An ``Observation`` can't carry this: the guard's subtree is replicated
@@ -353,20 +357,19 @@ def minhash_dedup_pairs(
     tf = HashingTF(
         inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
     )
-    # Cache + materialize the MODEL-TRANSFORMED frame (features + MinHash
+    # Materialize the MODEL-TRANSFORMED frame (features + MinHash
     # signatures), not just the featurized one: approxSimilarityJoin reuses
     # an existing ``hashes`` column, so the per-doc MinHash UDF runs ONCE
     # instead of once per join side (~3× wall-clock on the self-join).
-    # The cache also pins the empty-shingle filter upstream of the hash UDF —
-    # Catalyst's project-collapse otherwise evaluates it on unfiltered rows
-    # and MinHash rejects all-zero vectors.
+    # The checkpoint also pins the empty-shingle filter upstream of the hash
+    # UDF — Catalyst's project-collapse otherwise evaluates it on unfiltered
+    # rows and MinHash rejects all-zero vectors.
     feats = tf.transform(shingled)
     lsh = MinHashLSH(
         inputCol="features", outputCol="hashes", numHashTables=num_hashes, seed=seed
     )
     model = lsh.fit(feats)
-    hashed = model.transform(feats).cache()
-    hashed.count()
+    hashed = model.transform(feats).localCheckpoint()
     joined = model.approxSimilarityJoin(
         hashed, hashed, 1.0 - jaccard_threshold, distCol="jdist"
     )
@@ -470,14 +473,15 @@ def minhash_pairs(
     structural answer for those is exact/canonical dedup first, or
     ``neardedup_corpus``'s components over the surviving pairs, never an
     O(d²) pair listing. Pass a ``metrics`` dict to observe
-    ``n_hot_buckets`` / ``n_buckets`` (one small aggregate over the cached
-    signatures)."""
+    ``n_hot_buckets`` / ``n_buckets`` (one small aggregate over the
+    materialized signatures)."""
     if num_hashes % band_rows != 0:
         raise ValueError("num_hashes must be divisible by band_rows")
     n_bands = num_hashes // band_rows
+    # Materialized once: the band table and both verify-join sides read it.
     sig = minhash_signature(
         df, id_col=id_col, text_col=text_col, n=n, num_hashes=num_hashes, seed=seed
-    ).cache()
+    ).localCheckpoint()
     bands = sig.select(
         F.col(id_col),
         F.explode(
@@ -582,7 +586,7 @@ def setsim_join(
         # scans of the corpus and the post-exchange distinct aggregate ran
         # per consumer (runtime exchange reuse covers only the shuffle
         # write, not the operators above it). Same materialize-once
-        # contract as substring_dedup's token cache (guide §2.4/§5).
+        # contract as substring_dedup's token checkpoint (guide §2.4/§5).
         .localCheckpoint()
     )
     sizes = toks.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
@@ -1136,7 +1140,7 @@ def incremental_neardedup(
     sig_b = minhash_signature(
         batch, id_col=id_col, text_col=text_col, n=n,
         num_hashes=num_hashes, seed=seed,
-    ).cache()
+    ).localCheckpoint()
     bands_b = _sig_bands(sig_b, id_col, num_hashes, band_rows)
 
     agree = sum(
@@ -1210,12 +1214,12 @@ def incremental_neardedup(
     # and the state's surviving-signature anti-join), and callers run
     # those as separate actions (the foreachBatch handler writes
     # survivors then state; the batch gate materializes day-1 state for
-    # day 2). Without a cache the entire banded-join cascade re-executes
+    # day 2). Unmaterialized, the entire banded-join cascade re-executes
     # per consumer; the set itself is only ids (guide §2.4 — remove
-    # recomputed subtrees). Tiny, so MEMORY_ONLY semantics via cache().
+    # recomputed subtrees).
     all_losers = (
         losers_bb if losers is None else losers.unionByName(losers_bb).distinct()
-    ).cache()
+    ).localCheckpoint()
     survivors = batch.join(
         all_losers, on=F.col(id_col) == F.col("__loser"), how="left_anti"
     )
@@ -1348,13 +1352,13 @@ def substring_dedup(
     ).otherwise(F.array().cast("array<bigint>"))
     # The tokenized frame feeds FOUR consumers (gram hashing, the token
     # table, totals) and the hashed gram table feeds TWO (winner fold +
-    # loser join) — uncached, tokenization ran 4× and the xxhash64 gram
-    # transform 2× in one action (guide §2.4 / §5: cache only what is
-    # reused AND expensive to recompute; both frames are narrow).
-    toks = toks.cache()
+    # loser join) — unmaterialized, tokenization ran 4× and the xxhash64
+    # gram transform 2× in one action (guide §2.4 / §5: materialize only
+    # what is reused AND expensive to recompute; both frames are narrow).
+    toks = toks.localCheckpoint()
     grams = toks.select(
         "__id", F.posexplode(gram_hashes).alias("__start", "__g")
-    ).cache()
+    ).localCheckpoint()
     winners = grams.groupBy("__g").agg(
         F.min(F.struct("__id", "__start")).alias("__w"),
         F.count(F.lit(1)).alias("__n"),

@@ -35,7 +35,7 @@ pushed through the projection chain by ``PushPredicateThroughNonJoin``,
 whose ``trimAliases`` substitution re-inlines the ladder into the
 predicate exponentially. Scans, aggregations, and joins on the outputs
 are unaffected (verified); if you must filter on a composed re-encode,
-put an aggregation or ``.cache()`` barrier in between.
+put an aggregation or ``localCheckpoint()`` barrier in between.
 """
 
 from __future__ import annotations

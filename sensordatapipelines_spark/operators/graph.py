@@ -467,9 +467,11 @@ def bfs_depths(
         .localCheckpoint()
     )
     frontier = visited
-    # checkpoints folded into ``visited`` so far; all but the current
-    # frontier become dead the moment a compaction materializes.
+    # checkpoints ``visited`` reads; a compaction supersedes all of them.
     pending = [visited]
+    # a frontier already folded into a compaction: dead once the next
+    # round's frontier materializes.
+    stale = None
     for d in range(1, int(max_depth) + 1):
         # The empty-frontier test rides the checkpoint job as an observed
         # metric (same fix as connected_components' convergence test):
@@ -485,7 +487,11 @@ def bfs_depths(
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
+        if stale is not None:
+            unpersist_checkpoint(stale)
+            stale = None
         if not obs.get["n"]:
+            unpersist_checkpoint(nxt)
             break
         # No per-round checkpoint on visited: it is a pure UNION of frames
         # that are each already checkpointed (seeds + every nxt), so
@@ -501,13 +507,17 @@ def bfs_depths(
         pending.append(nxt)
         if d % 8 == 0:
             visited = visited.localCheckpoint()
-            # the compacted copy supersedes every folded-in block except
-            # the current frontier (still the next round's join input)
-            for old in pending:
-                if old is not nxt:
-                    unpersist_checkpoint(old)
-            pending = [visited, nxt]
+            # the compacted copy supersedes every folded-in block; the
+            # current frontier stays until the next round has joined it
+            for old in pending[:-1]:
+                unpersist_checkpoint(old)
+            pending = [visited]
+            stale = nxt
         frontier = nxt
+    if stale is not None:
+        unpersist_checkpoint(stale)
+    # only the per-round joins read sym; the result reads ``pending``
+    unpersist_checkpoint(sym)
     return visited.select(
         F.col("node"), F.col("depth").cast("long").alias("depth")
     )

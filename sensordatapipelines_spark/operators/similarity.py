@@ -610,7 +610,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     dim: int = 64,
     engine: str = "kernel",
-    cache: bool = False,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): embedding-level semantic deduplication.
     Cluster with deterministic k-means, then WITHIN each cluster drop any
@@ -636,15 +635,11 @@ def semantic_dedup(
     clustered = kmeans_assign(
         df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, dim=dim, engine=engine
     )
-    if cache:
-        # the clustered frame feeds BOTH self-join sides and the final
-        # anti-join (assignment kernel re-executes 3x without it) — but
-        # MEASURED at bench scale the materialization costs more than the
-        # recompute saves (3.4 -> 3.7 s), so this is opt-in: turn it on
-        # when the input is an expensive upstream pipeline rather than a
-        # parquet scan, or persist the clustered form yourself (what a
-        # production SemDeDup run does before the pair pass).
-        clustered = clustered.cache()
+    # The clustered frame feeds both self-join sides and the final
+    # anti-join, so the assignment kernel runs 3× — measured at bench
+    # scale, cheaper than materializing it (3.4 vs 3.7 s). A caller whose
+    # input is an expensive upstream pipeline can localCheckpoint() it
+    # first.
     slim = clustered.select(
         F.col("cluster").alias("__cl"),
         F.col(id_col).alias("__id"),

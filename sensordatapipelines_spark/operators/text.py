@@ -1754,11 +1754,14 @@ def naive_bayes_classify(
     # ct is vocabulary×class-sized (scale-safe to hold) and is consumed
     # by the EAGER v_size count below as well as by the final plan —
     # cross-ACTION reuse that ReuseExchange cannot provide (it dedups
-    # identical subtrees within one plan only), so without the cache the
+    # identical subtrees within one plan only), so unmaterialized the
     # corpus tokenize+explode+count ran once for the count and again for
-    # the query (guide §5: cache what is reused across actions). The
-    # v_size count doubles as the cache materialization.
-    ct = stream.groupBy("__true", "__tok").agg(F.count(F.lit(1)).alias("__c")).cache()
+    # the query (guide §5: materialize what is reused across actions).
+    ct = (
+        stream.groupBy("__true", "__tok")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .localCheckpoint()
+    )
     totals = ct.groupBy("__true").agg(F.sum("__c").alias("__ns"))
     v_size = ct.select("__tok").distinct().count()
     priors = df.groupBy(F.col(class_col).alias("__cls")).agg(

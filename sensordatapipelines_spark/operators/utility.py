@@ -13,6 +13,7 @@
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -24,6 +25,8 @@ from sensordatapipelines_spark.registry import register
 _NUMERIC_KEY_TYPES = frozenset(
     {"tinyint", "smallint", "int", "bigint", "float", "double"}
 )
+
+_unpersist_warned = False
 
 
 def unpersist_checkpoint(df: DataFrame) -> None:
@@ -42,11 +45,21 @@ def unpersist_checkpoint(df: DataFrame) -> None:
 
     Best-effort: the checkpointed RDD is reached through the analyzed
     ``LogicalRDD``; any internals drift degrades to the old GC-cadence
-    behavior instead of breaking the operator."""
+    behavior instead of breaking the operator, with one warning per
+    process (``tests/test_materialization.py`` pins the path itself)."""
+    global _unpersist_warned
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    except Exception as exc:
+        if not _unpersist_warned:
+            _unpersist_warned = True
+            warnings.warn(
+                "unpersist_checkpoint cannot reach the checkpointed RDD "
+                f"({type(exc).__name__}); superseded checkpoints now wait "
+                "for driver GC",
+                RuntimeWarning,
+                stacklevel=2,
+            )
 
 
 def canon_key_str(df: DataFrame, key_col: str):

@@ -54,21 +54,17 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
     # Long-running sessions (the 390-query bench, a production driver)
     # accumulate dead RDD/broadcast/shuffle state that the ContextCleaner
-    # only reclaims after a driver GC notices the references died. r9
-    # leaned on an aggressive 30 s cadence because superseded
-    # localCheckpoint blocks from the iterative loops piled up between
-    # GCs; r10 releases those blocks explicitly at each supersede point
-    # (operators/utility.unpersist_checkpoint — VERDICT r9 #6) and clears
-    # per-query .cache() entries at the harness boundary, after which the
-    # cadence is measurably a wash (interleaved A/B over the 16 heaviest
-    # checkpoint/cache queries, repeats=3, two passes each: 30 s 60.9/54.1,
-    # 90 s 62.0/56.1, 30min 61.9/54.9 — all within noise). 90 s keeps a
-    # safety net for garbage the explicit paths don't cover (shuffle
-    # state, broadcasts, foreign callers) without hammering a large
-    # production driver heap with twice-a-minute full GCs.
-    "spark.cleaner.periodicGC.interval": os.environ.get(
-        "SPARK_GRAFT_PERIODIC_GC", "90s"
-    ),
+    # only reclaims after a driver GC notices the references died. The
+    # engine materializes only through localCheckpoint(), whose blocks go
+    # with the frame that reads them, and the iterative loops release
+    # superseded checkpoints explicitly (unpersist_checkpoint). The GC
+    # cadence measured as a wash (interleaved A/B over the 16 heaviest
+    # checkpoint/cache queries, repeats=3, two passes each: 30 s
+    # 60.9/54.1, 90 s 62.0/56.1, 30 min 61.9/54.9 — all within noise).
+    # 90 s keeps a safety net for garbage the explicit path doesn't cover
+    # (dropped frames, shuffle state, broadcasts) without twice-a-minute
+    # full GCs on a large production heap; override via extra_conf.
+    "spark.cleaner.periodicGC.interval": "90s",
 }
 
 

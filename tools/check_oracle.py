@@ -129,15 +129,13 @@ def run_checks(
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     results: dict[str, dict] = {}
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     for name, fn in qs.items():
         if names and name not in names:
             continue
         rec: dict = {"status": "pass", "rows": None, "value_hash": None, "detail": None}
         try:
             sdf = fn(spark, sf_dir).toPandas()
-            # release this query's .cache() entries (CacheManager pins them
-            # for the whole session otherwise — same hygiene as bench.py)
-            spark.catalog.clearCache()
         except Exception as exc:
             rec.update(status="fail", detail=f"spark error: {exc}")
             results[name] = rec
@@ -145,6 +143,17 @@ def run_checks(
                 print(f"FAIL {name}: spark error: {exc}")
             continue
         rec["rows"] = len(sdf)
+        # The engine materializes only through localCheckpoint(), whose
+        # blocks go with the frame; a CacheManager entry outlives every
+        # frame and pins storage for the rest of the session.
+        if not cache_manager.isEmpty():
+            rec.update(
+                status="fail", detail="cache leak: CacheManager non-empty after the gate"
+            )
+            results[name] = rec
+            if verbose:
+                print(f"FAIL {name}: cache leak")
+            continue
         if name not in oracles:
             rec["status"] = "rows_only"
             rec["value_hash"] = value_hash(canon(sdf))
