@@ -5777,8 +5777,9 @@ def _stage_shapefile(spark: SparkSession, sf_dir: str) -> str:
 
 def zones_shapefile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shapefile ingestion end-to-end: the WKB zones staged as a real
-    .shp/.dbf layer, parsed pure-python on executors via the binaryFile
-    source (``open_shapefile``), attributes joined from the .dbf, and the
+    .shp/.dbf layer, read via the binaryFile source and parsed
+    pure-python (``open_shapefile``; a layer this small decodes on the
+    driver), attributes joined from the .dbf, and the
     same ray-cast zonal aggregation — identical vertices (windings
     normalized; the even-odd cast is winding-independent), identical
     oracle as the WKB and GeoJSON twins."""

@@ -15,19 +15,30 @@ covers the polygon/point layers a pipeline actually exchanges:
   same raw-string convention as ``open_geojson``'s properties map —
   callers cast).
 - ``open_shapefile`` — Spark entry: the .shp and .dbf arrive through the
-  built-in ``binaryFile`` source (one row per file, file-parallel across
-  layers — the normal many-small-layers shape), pair by path stem, and an
-  Arrow ``mapInPandas`` kernel emits the engine's standard ring format:
+  built-in ``binaryFile`` source (one row per file), pair by path stem,
+  and one ``decode`` kernel emits the engine's standard ring format:
   one row per polygon PART with outer ``xs``/``ys`` plus the full
   ``rings`` array (holes included) and a ``properties`` map. Point layers
   emit single-vertex rows with ``lon``/``lat`` semantics via ``xs[0]``.
+  A small layer is decoded on the driver, a larger one in an Arrow
+  ``mapInPandas`` task per file (see the scale note).
 - ``write_shp_polygons`` / ``write_dbf`` — the export half (S5 sink
   parity): driver-side writers for a collected (small) layer, the same
   contract as the GeoJSON sink's ``max_rows``-guarded collect.
 
-Scale note: ONE shapefile decodes in one task (the format is not
-splittable), which is the right trade for vector dim layers; a layer too
-big for one task should be ingested once and persisted as WKB parquet
+Scale note: where the decode runs follows the input's file bytes (all
+.shp + .dbf under ``path``), read from the listing-time plan statistics
+of the two ``binaryFile`` relations (no job). Up to
+``_DRIVER_DECODE_MAX_BYTES`` (8 MiB) the payloads are collected in one
+job, decoded on the driver, and returned as a ``LocalRelation``. A lazy
+``mapInPandas`` plan would re-run the decode as a Python task on every
+plan reference (operators join their stats back onto the input and take
+its bounds), and that task's fixed cost (~0.25 s on 4 cores) dwarfs
+decoding a dim layer (~2 ms for 500 points). The cap bounds driver
+memory, not speed: the decode's transient Python peak is ~9x the file
+bytes. Above it, ONE shapefile decodes in one task (the format is not
+splittable), file-parallel across layers; a layer too big for one task
+should be ingested once and persisted as WKB parquet
 (``parse_wkb_polygons`` path) — the same advice any engine gives for
 shapefiles at scale.
 """
@@ -35,10 +46,17 @@ shapefiles at scale.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Inputs (.shp + .dbf bytes) up to this size decode on the driver. From
+# the second plan reference on, the driver decode beat the per-task one at
+# every size measured (50 KB to 60 MB), but its transient Python peak is
+# ~9x the file bytes, so the cap holds that near 70 MB (SCALE.md,
+# shapefile decode table).
+_DRIVER_DECODE_MAX_BYTES = 8 * 1024 * 1024
 
 SHP_POINT = 1
 SHP_POLYLINE = 3
@@ -174,33 +192,33 @@ def open_shapefile(
 
     ``path`` is a directory (or glob base) holding ``*.shp`` with optional
     same-stem ``*.dbf`` attribute tables; both arrive via the built-in
-    ``binaryFile`` source and pair by stem, so multi-layer directories
-    parallelize file-per-task. Attributes surface as a raw-text map (the
-    ``open_geojson`` properties convention). ``validate`` drops
-    unsupported/degenerate records (< 3 vertices for polygons) — the S1
-    validity filter."""
-    from sensordatapipelines_spark.runtime import ensure_shipped
+    ``binaryFile`` source and pair by stem. Attributes surface as a
+    raw-text map (the ``open_geojson`` properties convention). ``validate``
+    drops unsupported/degenerate records (< 3 vertices for polygons) — the
+    S1 validity filter.
 
-    ensure_shipped(spark)  # the decode kernel imports this module on workers
-    shp = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.shp")
-        .load(path)
-        .select(
-            F.regexp_replace(F.col("path"), r"\.shp$", "").alias("__stem"),
-            F.col("content").alias("__shp"),
-        )
+    When the .shp + .dbf files under ``path`` total at most
+    ``_DRIVER_DECODE_MAX_BYTES`` (8 MiB), they are read and decoded on the
+    driver when this is called (snapshot semantics: later file edits are
+    not seen, and a corrupt file raises ``ValueError`` here). Every later
+    plan reference then rescans a ``LocalRelation`` in the JVM instead of
+    paying a Python task to decode again. Larger inputs keep the lazy
+    file-per-task ``mapInPandas`` decode, which raises at the first
+    action."""
+    shp_files = (
+        spark.read.format("binaryFile").option("pathGlobFilter", "*.shp").load(path)
     )
-    dbf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.dbf")
-        .load(path)
-        .select(
-            F.regexp_replace(F.col("path"), r"\.dbf$", "").alias("__stem"),
-            F.col("content").alias("__dbf"),
-        )
+    dbf_files = (
+        spark.read.format("binaryFile").option("pathGlobFilter", "*.dbf").load(path)
     )
-    paired = shp.join(F.broadcast(dbf), "__stem", "left")
+    shp = shp_files.select(
+        F.regexp_replace(F.col("path"), r"\.shp$", "").alias("__stem"),
+        F.col("content").alias("__shp"),
+    )
+    dbf = dbf_files.select(
+        F.regexp_replace(F.col("path"), r"\.dbf$", "").alias("__stem"),
+        F.col("content").alias("__dbf"),
+    )
     schema = (
         "layer string, fid int, geom_type string, "
         "properties map<string,string>, part int, "
@@ -303,7 +321,19 @@ def open_shapefile(
                 ],
             )
 
-    out = paired.mapInPandas(decode, schema=schema)
+    # File bytes from the listing-time plan statistics: no job runs here.
+    layer_bytes = sum(
+        f._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        for f in (shp_files, dbf_files)
+    )
+    paired = shp.join(F.broadcast(dbf), "__stem", "left")
+    if layer_bytes <= _DRIVER_DECODE_MAX_BYTES:
+        out = _decode_on_driver(spark, paired, decode, schema)
+    else:
+        from sensordatapipelines_spark.runtime import ensure_shipped
+
+        ensure_shipped(spark)  # the decode kernel imports this module on workers
+        out = paired.mapInPandas(decode, schema=schema)
     if validate:
         # degeneracy floor per type: polygons need a ring (3+), polylines
         # a segment (2+), points are 1-vertex by construction
@@ -321,6 +351,28 @@ def open_shapefile(
             )
         )
     return out
+
+
+def _decode_on_driver(
+    spark: SparkSession,
+    paired: DataFrame,
+    decode: Callable[[Iterator], Iterator],
+    schema: str,
+) -> DataFrame:
+    """Collect a small layer's paired payloads, run ``decode`` here and
+    return the rows as a ``LocalRelation``. The Arrow table keeps it local
+    whether or not ``spark.sql.execution.arrow.pyspark.enabled`` is set."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pandas(
+        next(decode(iter([paired.toPandas()]))),
+        schema=to_arrow_schema(struct),
+        preserve_index=False,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def _is_clockwise(xs: list, ys: list) -> bool:

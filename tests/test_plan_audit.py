@@ -88,3 +88,10 @@ def test_committed_plan_audit_complete_and_clean():
             f"{n} has a pickled-row BatchEvalPython node — use Arrow "
             "(useArrow=True / pandas_udf / mapInArrow)"
         )
+    # A small Shapefile layer decodes once on the driver into a local
+    # relation; a Python node here means every plan reference to the layer
+    # pays a decode task again.
+    for n in ("sensors_shapefile_export", "zones_shapefile_ingest"):
+        assert audit[n]["python_eval"] == 0, (
+            f"{n} decodes its Shapefile in a Python task"
+        )

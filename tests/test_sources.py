@@ -1,6 +1,7 @@
 """Source/sink tests (S1-S6): fallback chain, dir union + tagging, nested
 flattening, GeoJSON escape hatch."""
 
+import contextlib
 import json
 from pathlib import Path
 
@@ -513,11 +514,31 @@ def test_open_ascii_grid_decode(spark, tmp_path):
     assert c[(0, 0)]["x"] == 10.0 + 0.25 and c[(0, 0)]["y"] == 20.0 + 0.25
 
 
+@contextlib.contextmanager
+def _shapefile_decode_cap(max_bytes):
+    """Run ``open_shapefile`` with its driver-decode size cap at
+    ``max_bytes`` (``None`` keeps the default, under which every test
+    layer decodes on the driver; -1 sends every layer to mapInPandas)."""
+    from sensordatapipelines_spark.sources import shapefile
+
+    saved = shapefile._DRIVER_DECODE_MAX_BYTES
+    if max_bytes is not None:
+        shapefile._DRIVER_DECODE_MAX_BYTES = max_bytes
+    try:
+        yield
+    finally:
+        shapefile._DRIVER_DECODE_MAX_BYTES = saved
+
+
+# both sides of open_shapefile's size rule: driver decode, mapInPandas
+_DECODE_CAPS = (None, -1)
+
+
 def test_shapefile_roundtrip_multipart_holes_points(spark, tmp_path):
     """Pure-python ESRI Shapefile round-trip: multi-part record (two outer
     rings), donut record (outer + hole, grouped by winding), .dbf
     attributes joined by record index; degenerate record dropped by the
-    validity filter."""
+    validity filter. Checked on both sides of the reader's size rule."""
     from sensordatapipelines_spark.sources.shapefile import (
         open_shapefile,
         parse_dbf,
@@ -537,34 +558,45 @@ def test_shapefile_roundtrip_multipart_holes_points(spark, tmp_path):
             ([2.0, 4.0, 4.0, 2.0], [2.0, 2.0, 4.0, 4.0]),
             ([2.5, 3.5, 3.5, 2.5], [2.5, 2.5, 3.5, 3.5]),
         ]],
+        # record 3: degenerate 2-vertex ring — the validity filter drops it
+        [[([7.0, 8.0], [7.0, 8.0])]],
     ]
     write_shp_polygons(str(tmp_path / "z.shp"), shapes)
-    write_dbf(str(tmp_path / "z.dbf"), ["zone_id", "name"], [["1", "multi"], ["2", "donut"]])
+    write_dbf(
+        str(tmp_path / "z.dbf"),
+        ["zone_id", "name"],
+        [["1", "multi"], ["2", "donut"], ["3", "sliver"]],
+    )
 
     names, rows = parse_dbf((tmp_path / "z.dbf").read_bytes())
-    assert names == ["zone_id", "name"] and rows == [["1", "multi"], ["2", "donut"]]
+    assert names == ["zone_id", "name"]
+    assert rows == [["1", "multi"], ["2", "donut"], ["3", "sliver"]]
     recs = parse_shp((tmp_path / "z.shp").read_bytes())
-    assert [r[0] for r in recs] == [1, 2]
+    assert [r[0] for r in recs] == [1, 2, 3]
     assert len(recs[0][2]) == 2 and len(recs[1][2]) == 2  # flat ring counts
 
-    out = {(r["fid"], r["part"]): r for r in open_shapefile(spark, str(tmp_path)).collect()}
-    assert set(out) == {(1, 0), (1, 1), (2, 0)}
-    assert out[(1, 0)]["properties"]["name"] == "multi"
-    # multipart: both rings are OUTER (two parts, one ring each)
-    assert len(out[(1, 0)]["rings"]) == 1 and len(out[(1, 1)]["rings"]) == 1
-    assert sorted(out[(1, 1)]["xs"]) == [5.0, 5.5, 6.0]
-    # donut: one part with outer + hole
-    donut = out[(2, 0)]
-    assert len(donut["rings"]) == 2
-    assert sorted(donut["rings"][1]["xs"]) == [2.5, 2.5, 3.5, 3.5]
-    assert donut["properties"]["zone_id"] == "2"
+    for cap in _DECODE_CAPS:
+        with _shapefile_decode_cap(cap):
+            df = open_shapefile(spark, str(tmp_path))
+            out = {(r["fid"], r["part"]): r for r in df.collect()}
+        assert set(out) == {(1, 0), (1, 1), (2, 0)}, cap
+        assert out[(1, 0)]["properties"]["name"] == "multi"
+        # multipart: both rings are OUTER (two parts, one ring each)
+        assert len(out[(1, 0)]["rings"]) == 1 and len(out[(1, 1)]["rings"]) == 1
+        assert sorted(out[(1, 1)]["xs"]) == [5.0, 5.5, 6.0]
+        # donut: one part with outer + hole
+        donut = out[(2, 0)]
+        assert len(donut["rings"]) == 2
+        assert sorted(donut["rings"][1]["xs"]) == [2.5, 2.5, 3.5, 3.5]
+        assert donut["properties"]["zone_id"] == "2"
 
 
 def test_shapefile_point_polyline_writers_roundtrip(spark, tmp_path):
     """Type-1 (POINT — the reference's DEFAULT sensor export,
     data_preprocessing.py:201-206) and type-3 (POLYLINE) writers
     round-trip bit-exact through open_shapefile, and a deleted .dbf
-    record keeps later attributes aligned to their geometry."""
+    record keeps later attributes aligned to their geometry. Checked on
+    both sides of the reader's size rule."""
     import struct
 
     from sensordatapipelines_spark.sources.shapefile import (
@@ -585,17 +617,6 @@ def test_shapefile_point_polyline_writers_roundtrip(spark, tmp_path):
         ["sensor_id", "val"],
         [["s1", "1.25"], ["s2", "2.5"], ["s3", "3.75"]],
     )
-    got = (
-        open_shapefile(spark, str(d))
-        .select("fid", "geom_type", "properties", "xs", "ys")
-        .collect()
-    )
-    assert [(r.fid, r.geom_type) for r in got] == [
-        (1, "point"), (2, "point"), (3, "point")
-    ]
-    assert [(r.xs[0], r.ys[0]) for r in got] == pts  # doubles bit-exact
-    assert got[1].properties == {"sensor_id": "s2", "val": "2.5"}
-
     # polylines: a 2-part record + a single-part record
     lines = [
         [([0.0, 1.0, 2.0], [0.0, 1.0, 0.0]), ([5.0, 6.0], [5.0, 5.0])],
@@ -609,14 +630,6 @@ def test_shapefile_point_polyline_writers_roundtrip(spark, tmp_path):
         (1, "polyline", 2), (2, "polyline", 1)
     ]
     assert recs[0][2][0] == ([0.0, 1.0, 2.0], [0.0, 1.0, 0.0])
-    rows = (
-        open_shapefile(spark, str(d2))
-        .select("fid", "part", "geom_type", "xs")
-        .collect()
-    )
-    assert [(r.fid, r.part, r.geom_type) for r in rows] == [
-        (1, 0, "polyline"), (1, 1, "polyline"), (2, 0, "polyline")
-    ]
     # closed polyline parts keep their repeated endpoint (real geometry)
     d3 = tmp_path / "looplayer"
     d3.mkdir()
@@ -626,6 +639,29 @@ def test_shapefile_point_polyline_writers_roundtrip(spark, tmp_path):
     (loop,) = parse_shp((d3 / "loop.shp").read_bytes())
     assert len(loop[2][0][0]) == 5
 
+    for cap in _DECODE_CAPS:
+        with _shapefile_decode_cap(cap):
+            got = (
+                open_shapefile(spark, str(d))
+                .select("fid", "geom_type", "properties", "xs", "ys")
+                .collect()
+            )
+            rows = (
+                open_shapefile(spark, str(d2))
+                .select("fid", "part", "geom_type", "xs")
+                .collect()
+            )
+            (loop_row,) = open_shapefile(spark, str(d3)).collect()
+        assert [(r.fid, r.geom_type) for r in got] == [
+            (1, "point"), (2, "point"), (3, "point")
+        ], cap
+        assert [(r.xs[0], r.ys[0]) for r in got] == pts  # doubles bit-exact
+        assert got[1].properties == {"sensor_id": "s2", "val": "2.5"}
+        assert [(r.fid, r.part, r.geom_type) for r in rows] == [
+            (1, 0, "polyline"), (1, 1, "polyline"), (2, 0, "polyline")
+        ]
+        assert loop_row.xs == [0.0, 1.0, 1.0, 0.0, 0.0] and loop_row.properties == {}
+
     # deleted dbf record: flag row 2 deleted; row 3's attrs must stay on
     # geometry 3 (positional pairing), not shift onto geometry 2
     raw = bytearray((d / "sensors.dbf").read_bytes())
@@ -634,11 +670,79 @@ def test_shapefile_point_polyline_writers_roundtrip(spark, tmp_path):
     (d / "sensors.dbf").write_bytes(bytes(raw))
     names, rows2 = parse_dbf((d / "sensors.dbf").read_bytes())
     assert rows2[1] is None and rows2[2] == ["s3", "3.75"]
-    got2 = {
-        r.fid: r.properties
-        for r in open_shapefile(spark, str(d)).collect()
-    }
-    assert got2[2] == {} and got2[3] == {"sensor_id": "s3", "val": "3.75"}
+    for cap in _DECODE_CAPS:
+        with _shapefile_decode_cap(cap):
+            got2 = {
+                r.fid: r.properties
+                for r in open_shapefile(spark, str(d)).collect()
+            }
+        assert got2[2] == {} and got2[3] == {"sensor_id": "s3", "val": "3.75"}, cap
+
+
+def test_shapefile_driver_and_executor_decode_agree(spark, tmp_path):
+    """A layer at or under the size cap is decoded once on the driver into
+    a local relation (no Python node in the executed plan); a larger one
+    keeps the file-parallel mapInPandas decode. Both give the same rows and
+    schema for a .shp without .dbf and a two-layer directory, and the cap
+    compares against the exact .shp + .dbf bytes."""
+    from sensordatapipelines_spark.sources.shapefile import (
+        open_shapefile,
+        write_dbf,
+        write_shp_points,
+        write_shp_polylines,
+    )
+
+    no_dbf = tmp_path / "no_dbf"
+    no_dbf.mkdir()
+    write_shp_points(str(no_dbf / "bare.shp"), [(4.0, 5.0), (6.0, 7.0)])
+    two = tmp_path / "two_layers"
+    two.mkdir()
+    write_shp_points(str(two / "a.shp"), [(1.0, 2.0), (3.0, 4.0)])
+    write_dbf(str(two / "a.dbf"), ["k"], [["a1"], ["a2"]])
+    write_shp_polylines(str(two / "b.shp"), [[([0.0, 1.0], [0.0, 1.0])]])
+    write_dbf(str(two / "b.dbf"), ["k"], [["b1"]])
+
+    def opened(path, cap):
+        with _shapefile_decode_cap(cap):
+            df = open_shapefile(spark, str(path))
+            rows = sorted(df.collect(), key=lambda r: (r.layer, r.fid, r.part))
+        return rows, df.schema, df._jdf.queryExecution().executedPlan().toString()
+
+    for path in (no_dbf, two):
+        d_rows, d_schema, d_plan = opened(path, None)
+        e_rows, e_schema, e_plan = opened(path, -1)
+        assert d_rows == e_rows and d_schema == e_schema, path.name
+        assert "MapInPandas" not in d_plan and "MapInPandas" in e_plan, path.name
+        if path == no_dbf:
+            assert [(r.properties, r.xs, r.ys) for r in d_rows] == [
+                ({}, [4.0], [5.0]), ({}, [6.0], [7.0])
+            ]
+        else:
+            assert [(r.layer, r.fid, r.properties) for r in d_rows] == [
+                ("a", 1, {"k": "a1"}), ("a", 2, {"k": "a2"}), ("b", 1, {"k": "b1"})
+            ]
+
+    two_bytes = sum(f.stat().st_size for f in two.iterdir())
+    assert "MapInPandas" not in opened(two, two_bytes)[2]
+    assert "MapInPandas" in opened(two, two_bytes - 1)[2]
+
+
+def test_shapefile_small_layer_errors_at_open(spark, tmp_path):
+    """A small layer is read when ``open_shapefile`` is called, so a
+    truncated .shp raises ValueError there; the executor path defers the
+    same failure to the first action."""
+    from sensordatapipelines_spark.sources.shapefile import open_shapefile, write_shp_points
+
+    write_shp_points(str(tmp_path / "s.shp"), [(1.0, 2.0), (3.0, 4.0)])
+    raw = (tmp_path / "s.shp").read_bytes()
+    (tmp_path / "s.shp").write_bytes(raw[:100 + 8 + 10])  # cut inside record 1
+    with pytest.raises(ValueError, match="corrupt shapefile"):
+        open_shapefile(spark, str(tmp_path))
+
+    with _shapefile_decode_cap(-1):
+        df = open_shapefile(spark, str(tmp_path))
+        with pytest.raises(Exception, match="corrupt shapefile"):
+            df.collect()
 
 
 def test_geopackage_roundtrip(spark, tmp_path):

@@ -1,9 +1,11 @@
-"""Dump ``.explain("formatted")`` for named queries to plans/<tag>/<q>_<suffix>.txt.
+"""Dump the executed ``.explain("formatted")`` plan of named queries.
 
-Usage: python tools/dump_plans.py <suffix> <query> [query ...]
-       python tools/dump_plans.py <suffix> --all
+Usage: python tools/dump_plans.py <tag> <suffix> <query> [query ...]
+       python tools/dump_plans.py <tag> <suffix> --all
 
-Writes plans/r10/<query>_<suffix>.txt (suffix = "before" / "after").
+Writes plans/<tag>/<query>_<suffix>.txt (suffix = "before" / "after").
+Each query is collected first, so the file shows the plan that ran
+(AQE's final plan), not the initial one.
 Streaming gates (events_stream_*, docs_stream_*, orders_stream_*) execute on
 build; they are skipped (their micro-batch plans are pinned by
 tests/test_streaming.py).
@@ -20,8 +22,8 @@ SKIP_SUBSTR = ("_stream_",)
 
 
 def main() -> int:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    tag, suffix = sys.argv[1:3]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entry
     from sensordatapipelines_spark import get_spark
@@ -31,13 +33,14 @@ def main() -> int:
     qs = entry.queries()
     if names == ["--all"]:
         names = [n for n in qs if not any(s in n for s in SKIP_SUBSTR)]
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10")
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     for n in names:
         if any(s in n for s in SKIP_SUBSTR):
             print(f"skip streaming {n}")
             continue
         df = qs[n](spark, sf_dir)
+        df.collect()
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )

@@ -58,6 +58,13 @@ REPLICATED = (
 SINGLE = ("region", "nation")
 
 
+def offset_keys(col, offset: int):
+    """Shift the non-null ids of a key column by ``offset``, NULLs kept.
+    Raises ``pyarrow.ArrowInvalid`` when a shifted id overflows the
+    column's type: a wrapped id would collide with another copy's."""
+    return pc.add_checked(col, pa.scalar(offset, type=col.type))
+
+
 def main() -> int:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     dst = sys.argv[2] if len(sys.argv) > 2 else "/root/sf1data"
@@ -97,8 +104,7 @@ def main() -> int:
             for name in tbl.column_names:
                 col = tbl[name]
                 if name in key_cols:
-                    # preserve NULLs; offset only the non-null ids
-                    col = pc.add(col, pa.scalar(i * key_cols[name], type=col.type))
+                    col = offset_keys(col, i * key_cols[name])
                 cols.append(col)
             copies.append(pa.table(dict(zip(tbl.column_names, cols))))
         out = pa.concat_tables(copies)
