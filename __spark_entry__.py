@@ -5261,29 +5261,6 @@ def docs_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _char_entropy_expr_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pure-JVM HOF twin of docs_char_entropy (split → sorted distinct →
-    per-char count → fold) — kept for twin-equality testing."""
-    _register_views(spark, sf_dir)
-    d = spark.table("documents")
-    expr = """
-        aggregate(
-            transform(
-                array_sort(array_distinct(split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ''))),
-                ch -> size(filter(split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ''), c -> c = ch))
-            ),
-            CAST(0.0 AS DOUBLE),
-            (acc, k) -> acc - (k / CAST(length(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')) AS DOUBLE))
-                        * log2(k / CAST(length(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')) AS DOUBLE))
-        )
-    """
-    return d.select(
-        "doc_id",
-        F.length(_lower_ascii("text")).alias("n_chars"),
-        (F.round((F.expr(expr)) * F.lit(1e6)) / F.lit(1e6)).alias("char_entropy_bits"),
-    )
-
-
 def docs_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level top-20 word bigrams with deterministic tie-break
     (count desc, bigram asc). The global top-k is an ``orderBy().limit()``,
@@ -8965,7 +8942,6 @@ def docs_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return naive_bayes_classify(canon, class_col="lang")
 
 
-
 # ---- Round-7 divergence-decomposition probes (VERDICT r6 "Next round" #2/#3/#5)
 
 
@@ -8992,49 +8968,6 @@ def events_order_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register_views(spark, sf_dir)
     return order_probe(spark.table("events"), "user_id", "ts", "event_id", 20)
-
-
-def events_ns_residue_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Timestamp-encoding consistency probe, µs-granular (redesigned r8).
-
-    Round-7 history: the ns-granular version proved the driver's events
-    parquet is INT64 TIMESTAMP(NANOS) with real sub-µs residue — Spark's
-    ``nanosAsLong`` read saw it while the driver's DuckDB (which, like
-    local v1.0, truncates ns→µs at the parquet reader AND at string
-    parse, per the green ``semantics_ns_canary``) structurally cannot.
-    Sub-µs facts are therefore NOT oracle-pairable; the engine policy is
-    pinned instead. r8 shipped toward-zero (`DIV`, = DuckDB 1.0's
-    parquet-reader truncation) and the driver kept this gate RED while
-    every second-level ts gate stayed green — seconds are invariant
-    between the policies, so the red isolates the sub-second policy: a
-    ns-native DuckDB's ``epoch_us()`` FLOORS. Since r9 ingestion floors
-    (``tables.load_table``), and THIS gate proves it: Spark computes
-    sub-SECOND residue facts from its raw ns read floored to µs; the
-    oracle computes the same from ``epoch_us``. A red here means the µs
-    streams still disagree (then the r9 exfil probes name the policy
-    numerically)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(raw.dtypes).get("ts") == "bigint":
-        # FLOOR ns→µs (engine policy since r9, = a ns-native DuckDB's
-        # epoch_us); r8's toward-zero `DIV` stayed driver-red.
-        us = F.expr("(ts - (((ts % 1000) + 1000) % 1000)) DIV 1000")
-    else:
-        us = F.unix_micros(F.col("ts").cast("timestamp"))
-    t = F.col("ts")
-    sub_sec = (us % F.lit(1000000) + F.lit(1000000)) % F.lit(1000000)
-    return raw.agg(
-        F.count(t).alias("n_ts"),
-        F.sum(F.when(t.isNotNull() & (sub_sec != 0), 1).otherwise(0)).alias(
-            "n_sub_sec"
-        ),
-        F.coalesce(F.max(F.when(t.isNotNull(), sub_sec)), F.lit(0))
-        .cast("long")
-        .alias("max_sub_sec_us"),
-        F.sum(
-            F.when(t.isNotNull() & (sub_sec >= 999999), 1).otherwise(0)
-        ).alias("n_near_boundary"),
-    )
 
 
 def events_compaction_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9156,343 +9089,18 @@ def semantics_ns_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def docs_byte_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-byte bisection probe for the docs family: per language —
-    row count, Σ character length, and an order-free Σ (mod 2^31−1) of
-    the first-8-hex md5 prefix folded to an integer with the identical
-    hex-ladder arithmetic in both engines. No case fold, no tokenizer: a
-    red here means the engines disagree on the raw DOCUMENT BYTES
-    (parquet string read); green pins any remaining token-probe red on
-    the processing pipeline. Completes the bisection chain
-    bytes → tokens → gate math."""
-    _register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT lang,
-               COUNT(*) AS n_docs,
-               SUM(length(text)) AS len_sum,
-               SUM(aggregate(
-                   filter(split(substring(md5(CAST(text AS BINARY)), 1, 8),
-                                ''), c -> c != ''),
-                   0L,
-                   (a, c) -> a * 16
-                             + CAST(instr('0123456789abcdef', c) - 1 AS BIGINT)
-               )) % 2147483647 AS md5_prefix_sum
-        FROM documents GROUP BY lang
-        """
-    )
-
-
-
-# ---- Round-8 one-fact-per-driver-bit probes (VERDICT r7 "Next round" #2).
-# The driver grades one hash bit per query; each gate below carries exactly
-# one diagnosable fact so a red NAMES its mechanism.
-
-
-def probe_order_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-comparator probe: emits the integers 1..20 in DESCENDING
-    order while the oracle emits the identical row SET ascending. The
-    local comparator sorts rows before hashing (order-insensitive), so
-    this gate is green locally by construction — its DRIVER color settles
-    VERDICT r7 "What's wrong" #3: red ⟺ the driver's hash is
-    row-order-sensitive (in which case every gate needs its Spark output
-    physically ordered like the oracle's ORDER BY, not just a matching
-    row set)."""
-    return spark.range(1, 21).select(F.col("id").cast("long").alias("k")).orderBy(
-        F.desc("k")
-    )
-
-
-def _etype_chk(spark, sf_dir, col_expr, name):
-    _register_views(spark, sf_dir)
-    P = 2147483647
-    return spark.table("events").agg(
-        (F.sum((col_expr % F.lit(P) + F.lit(P)) % F.lit(P)) % F.lit(P))
-        .cast("long")
-        .alias(name)
-    )
-
-
-def events_rowset_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single fact: the per-type row count — a red means the engines
-    disagree on the events ROW SET itself (scan-level divergence)."""
-    _register_views(spark, sf_dir)
-    return (
-        spark.table("events")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy(F.asc_nulls_last("event_type"))
-    )
-
-
-def events_nulltally_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single fact: global NULL/NaN/Inf tallies per events column."""
-    _register_views(spark, sf_dir)
-    v = F.col("value")
-    return spark.table("events").agg(
-        F.sum(F.when(F.col("ts").isNull(), 1).otherwise(0)).alias("null_ts"),
-        F.sum(F.when(F.col("event_id").isNull(), 1).otherwise(0)).alias(
-            "null_id"
-        ),
-        F.sum(F.when(F.col("user_id").isNull(), 1).otherwise(0)).alias(
-            "null_user"
-        ),
-        F.sum(F.when(v.isNull(), 1).otherwise(0)).alias("null_value"),
-        F.sum(F.when(v.isNotNull() & F.isnan(v), 1).otherwise(0)).alias(
-            "nan_value"
-        ),
-        F.sum(
-            F.when(
-                v.isNotNull()
-                & ((v == F.lit(float("inf"))) | (v == F.lit(float("-inf")))),
-                1,
-            ).otherwise(0)
-        ).alias("inf_value"),
-    )
-
-
-def events_idchk_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single fact: order-free modular checksum of event_id."""
-    return _etype_chk(
-        spark, sf_dir, F.col("event_id").cast("long"), "id_chk"
-    )
-
-
-def events_userchk_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single fact: order-free modular checksum of user_id."""
-    return _etype_chk(
-        spark, sf_dir, F.col("user_id").cast("long"), "user_chk"
-    )
-
-
-def events_tschk_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single fact: checksum of the trunc-epoch-second read of ts."""
-    return _etype_chk(
-        spark,
-        sf_dir,
-        F.unix_timestamp(F.col("ts").cast("timestamp")),
-        "ts_chk",
-    )
-
-
-def events_vfloor_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single fact: checksum of FLOOR(clamped value·1e6) (finite only)."""
-    v = F.col("value").cast("double")
-    finite = (
-        v.isNotNull()
-        & ~F.isnan(v)
-        & (v != F.lit(float("inf")))
-        & (v != F.lit(float("-inf")))
-    )
-    clamped = F.least(F.greatest(v, F.lit(-1e10)), F.lit(1e10)) * F.lit(1e6)
-    return _etype_chk(
-        spark, sf_dir, F.when(finite, F.floor(clamped).cast("long")), "vfloor_chk"
-    )
-
-
-def events_vround_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single fact: checksum of ROUND(clamped value·1e6) (finite only)."""
-    v = F.col("value").cast("double")
-    finite = (
-        v.isNotNull()
-        & ~F.isnan(v)
-        & (v != F.lit(float("inf")))
-        & (v != F.lit(float("-inf")))
-    )
-    clamped = F.least(F.greatest(v, F.lit(-1e10)), F.lit(1e10)) * F.lit(1e6)
-    return _etype_chk(
-        spark, sf_dir, F.when(finite, F.round(clamped).cast("long")), "vround_chk"
-    )
-
-
-def _docs_lang_chk(spark, sf_dir, expr_builder, name):
-    from sensordatapipelines_spark.operators.text import poly_hash_expr
-
-    _register_views(spark, sf_dir)
-    P = 2147483647
-    d = spark.table("documents").filter(F.col("text").isNotNull())
-    col = expr_builder(d)
-    return (
-        d.select(F.col("lang"), col.alias("__x"))
-        .groupBy("lang")
-        .agg((F.sum("__x") % F.lit(P)).cast("long").alias(name))
-        .orderBy(F.asc_nulls_last("lang"))
-    )
-
-
-def docs_charchk_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs chain step 1 (chars): Σ poly-hash over the RAW text per lang
-    — no trim, no fold, no split-by-whitespace: isolates the per-
-    codepoint arithmetic (split('') + ascii) both engines share."""
-    from sensordatapipelines_spark.operators.text import poly_hash_expr
-
-    return _docs_lang_chk(
-        spark, sf_dir, lambda d: poly_hash_expr(F.col("text")), "char_chk"
-    )
-
-
-def docs_trimlen_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs chain step 2 (trim): Σ length(trim(text, ' ')) per lang —
-    isolates the ASCII-space-only trim convention (DuckDB's 1-arg trim
-    strips Unicode spaces; the r8 fuzzer caught exactly this)."""
-    return _docs_lang_chk(
-        spark, sf_dir, lambda d: F.length(F.trim(F.col("text"))), "trimlen"
-    )
-
-
-def docs_tokcount_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs chain step 3 (split): Σ token-count per lang — isolates the
-    whitespace-class split, independent of hashing and distinctness."""
-    from sensordatapipelines_spark.operators.text import tokens_expr
-
-    return _docs_lang_chk(
-        spark,
-        sf_dir,
-        lambda d: F.size(tokens_expr(F.col("text"))).cast("long"),
-        "tok_count",
-    )
-
-
-def docs_foldchk_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs chain step 4 (case fold): Σ poly-hash of the ASCII-translate
-    lowered text per lang — isolates the fold on top of step 1."""
-    from sensordatapipelines_spark.operators.text import (
-        lower_ascii_expr,
-        poly_hash_expr,
-    )
-
-    return _docs_lang_chk(
-        spark,
-        sf_dir,
-        lambda d: poly_hash_expr(lower_ascii_expr(F.col("text"))),
-        "fold_chk",
-    )
-
-
-def _docs_bucket_tokchk(spark: SparkSession, sf_dir: str, b: int) -> DataFrame:
-    """Full tokenizer-chain checksum restricted to the doc_id % 8 == b
-    corpus slice — localizes any remaining driver divergence to 1/8 of
-    the corpus content (VERDICT r7 #2 bucket-slicing)."""
-    from sensordatapipelines_spark.operators.text import (
-        lower_ascii_expr,
-        poly_hash_expr,
-        tokens_expr,
-    )
-
-    _register_views(spark, sf_dir)
-    P = 2147483647
-    occ = (
-        spark.table("documents")
-        .filter(F.col("doc_id") % 8 == b)
-        .select(
-            F.col("doc_id"),
-            F.explode(
-                tokens_expr(lower_ascii_expr(F.col("text")))
-            ).alias("__tok"),
-        )
-        .distinct()
-    )
-    return occ.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.count_distinct(F.col("__tok")).alias("n_tokens"),
-        (F.sum(poly_hash_expr(F.col("__tok"))) % F.lit(P))
-        .cast("long")
-        .alias("hash_mod"),
-    )
-
-
-
-def docs_tokchk_b0(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-chain checksum, corpus slice doc_id %% 8 == 0."""
-    return _docs_bucket_tokchk(spark, sf_dir, 0)
-
-
-def docs_tokchk_b1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-chain checksum, corpus slice doc_id %% 8 == 1."""
-    return _docs_bucket_tokchk(spark, sf_dir, 1)
-
-
-def docs_tokchk_b2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-chain checksum, corpus slice doc_id %% 8 == 2."""
-    return _docs_bucket_tokchk(spark, sf_dir, 2)
-
-
-def docs_tokchk_b3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-chain checksum, corpus slice doc_id %% 8 == 3."""
-    return _docs_bucket_tokchk(spark, sf_dir, 3)
-
-
-def docs_tokchk_b4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-chain checksum, corpus slice doc_id %% 8 == 4."""
-    return _docs_bucket_tokchk(spark, sf_dir, 4)
-
-
-def docs_tokchk_b5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-chain checksum, corpus slice doc_id %% 8 == 5."""
-    return _docs_bucket_tokchk(spark, sf_dir, 5)
-
-
-def docs_tokchk_b6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-chain checksum, corpus slice doc_id %% 8 == 6."""
-    return _docs_bucket_tokchk(spark, sf_dir, 6)
-
-
-def docs_tokchk_b7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-chain checksum, corpus slice doc_id %% 8 == 7."""
-    return _docs_bucket_tokchk(spark, sf_dir, 7)
-
-
-
-# ---- Round-9 exfiltration probes (`xfil_*`).
-#
-# The r8 one-fact probes returned one BIT each (green/red). This family
-# widens the channel: the correctness artifact records ``spark_rows`` and
-# ``oracle_rows`` VERBATIM for every gate, so a probe that materializes a
-# driver-side integer fact AS ITS ROW COUNT reports that fact from BOTH
-# engines as plain numbers — the counts are the measurement, cross-engine
-# hash equality is NOT the contract (a count mismatch here is a successful
-# measurement of a read divergence, not a defect). Each probe returns
-# ``range(n)`` where n = one fact: a class tally (NULL/NaN/±Inf per
-# column), a dtype descriptor code, a residue of a value-stream checksum,
-# or an engine version. The Spark side reads the RAW parquet (bypassing
-# ``load_table``'s NaN≙NULL and ns→µs normalizations) so the file's
-# ground truth stays observable after the r9 ingestion policy change.
-# Excluded from the strict local ledger (tools/check_oracle.py marks
-# ``xfil_*`` as "diag"): several are EXPECTED to disagree locally (e.g.
-# version codes) — the payload is the number pair, not the color.
-
-
-_XFIL_CAP = 1_000_000
-_XFIL_M = 99991  # residue modulus for value-stream checksums
-
-
-def _xfil(spark: SparkSession, n) -> DataFrame:
-    """Emit integer fact ``n`` as a row count (see family comment)."""
-    n = 0 if n is None else int(n)
-    n = max(0, min(n, _XFIL_CAP))
-    return spark.range(n).select(F.col("id").alias("i"))
-
-
-def _xfil_oracle(count_expr: str) -> str:
-    """Oracle twin of ``_xfil``: UNNEST(range(clamped scalar))."""
-    return (
-        "SELECT UNNEST(range(LEAST(GREATEST(CAST((" + count_expr + ") AS BIGINT)"
-        ", 0), " + str(_XFIL_CAP) + "))) AS i"
-    )
-
-
 # --- Oracle registration-mode invariance ------------------------------------
 #
 # The external driver registers the parquet tables into its DuckDB by a path
 # we do not control. Two physical models exist: `read_parquet` views (raw
 # file semantics) and registered `pandas.read_parquet` frames (NaN and NULL
 # collapse into one missing class; int64/int32 columns holding NULLs drift
-# to float64). The r8 driver run effectively pinned the second model —
-# `events_nulltally_probe` was RED while every finite-value checksum was
+# to float64). The r8 driver run effectively pinned the second model — a
+# NULL/NaN tally over events was RED while every finite-value checksum was
 # GREEN, which a raw-file oracle read cannot produce (both engines would
 # have counted the same NaN rows) — but rather than bet the round on that
-# inference, every non-diagnostic oracle is rewritten here to be INVARIANT
-# to the registration mode: each referenced table is read through a CTE that
+# inference, every oracle is rewritten here to be INVARIANT to the
+# registration mode: each referenced table is read through a CTE that
 #   (a) maps NaN to NULL in every float measure column — the engine's
 #       documented ingestion policy (`tables.load_table`), a no-op when the
 #       registration already merged them, and
@@ -9501,9 +9109,7 @@ def _xfil_oracle(count_expr: str) -> str:
 #       drift (ids are integral and < 2^53, so the round-trip is lossless).
 # The Spark side applies the same two policies at ingestion (load_table),
 # so both engines compute over the same logical relation no matter which
-# physical read path either one got. Diagnostic probes (`xfil_*` and the
-# raw-read battery in _ORACLE_NORM_SKIP) are exempt: their whole purpose is
-# to measure the raw physical facts, so their oracles must NOT be shadowed.
+# physical read path either one got.
 _ORACLE_NORM_INT = INT_COLS  # canonical map lives in tables.py
 _ORACLE_NORM_FLOAT = {
     "customer": ("c_acctbal",),
@@ -9517,24 +9123,6 @@ _ORACLE_NORM_FLOAT = {
 # helper or a direct sf_dir read): their oracles measure the physical file
 # / registration facts and must stay un-normalized. Kept in sync by
 # tests/test_oracle_norm.py.
-_ORACLE_NORM_SKIP = frozenset(
-    {
-        "events_ns_residue_probe",
-        "semantics_probe",
-        "semantics_ns_canary",
-        "probe_order_sensitivity",
-        "events_idchk_probe",
-        "events_userchk_probe",
-        "events_tschk_probe",
-        "events_vfloor_probe",
-        "events_vround_probe",
-        "docs_charchk_probe",
-        "docs_trimlen_probe",
-        "docs_tokcount_probe",
-        "docs_foldchk_probe",
-    }
-    | {f"docs_tokchk_b{_i}" for _i in range(8)}
-)
 
 # --- Oracle output-dtype alignment (the 4-round hash-red root cause) --------
 #
@@ -9571,15 +9159,6 @@ _ORACLE_BIGINT_COLS = {
     "events_mad_anomaly": ("n_anomalies",),
     "events_mann_kendall": ("s_stat",),
     "events_markov_transitions": ("p_e6",),
-    "events_ns_residue_probe": ("n_sub_sec", "n_near_boundary"),
-    "events_nulltally_probe": (
-        "null_ts",
-        "null_id",
-        "null_user",
-        "null_value",
-        "nan_value",
-        "inf_value",
-    ),
     "events_pair_probe": ("s_sum", "sum_dts"),
     "events_peak_count": ("n_peaks", "n_troughs"),
     "events_runs_test": ("n_above", "n_below", "n_runs"),
@@ -9596,7 +9175,7 @@ def _cast_output_bigint(sql: str, cols) -> str:
     """Wrap ``sql`` so the named output columns come back as BIGINT.
 
     A plain subselect: the driver's comparator is row-order-insensitive
-    (probe_order_sensitivity ran green with Spark DESC vs oracle ASC), so
+    (a probe emitting rows DESC against an ASC oracle ran green), so
     losing the inner ORDER BY's presentation order changes nothing."""
     repl = ", ".join(f"CAST({c} AS BIGINT) AS {c}" for c in cols)
     return f"SELECT * REPLACE ({repl}) FROM (\n{sql}\n) __hug"
@@ -9649,412 +9228,6 @@ def _normalize_oracle_sql(sql: str) -> str:
     if m:
         return sql[: m.end()] + ctes + ", " + sql[m.end() :]
     return f"WITH {ctes} " + sql
-
-
-def _raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """RAW table read for probes: no NaN≙NULL rewrite, no ns→µs floor —
-    only the unavoidable nanosAsLong switch so TIMESTAMP(NANOS) events
-    load at all (ts then surfaces as BIGINT ns). Pins the session confs
-    the probes' expressions rely on (UTC, non-ANSI) because probe order
-    within the driver's run is not guaranteed."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _is_float(df: DataFrame, col: str) -> bool:
-    return dict(df.dtypes).get(col) in ("double", "float")
-
-
-def _count_where(df: DataFrame, cond) -> int:
-    return df.filter(cond).count()
-
-
-def _nan_count(df: DataFrame, col: str) -> int:
-    if not _is_float(df, col):
-        return 0
-    c = F.col(col)
-    return _count_where(df, c.isNotNull() & F.isnan(c))
-
-
-def _inf_count(df: DataFrame, col: str) -> int:
-    if not _is_float(df, col):
-        return 0
-    c = F.col(col)
-    return _count_where(
-        df,
-        c.isNotNull()
-        & ((c == F.lit(float("inf"))) | (c == F.lit(float("-inf")))),
-    )
-
-
-def xfil_env_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """spark_rows = the driver's PySpark version as digits (4.1.2→412);
-    oracle_rows = the driver's DuckDB version as digits (v1.3.2→132).
-    Settles VERDICT r8's reopened version-skew question numerically."""
-    import pyspark
-
-    digits = "".join(ch for ch in pyspark.__version__ if ch.isdigit())[:4]
-    return _xfil(spark, int(digits or 0))
-
-
-def _xfil_events_fact(spark, sf_dir, fact) -> DataFrame:
-    return _xfil(spark, fact(_raw(spark, sf_dir, "events")))
-
-
-def xfil_events_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row count of events, per engine."""
-    return _xfil_events_fact(spark, sf_dir, lambda d: d.count())
-
-
-def xfil_events_null_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NULL-ts tally per engine (raw read)."""
-    return _xfil_events_fact(
-        spark, sf_dir, lambda d: _count_where(d, F.col("ts").isNull())
-    )
-
-
-def xfil_events_null_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NULL-user_id tally per engine (raw read)."""
-    return _xfil_events_fact(
-        spark, sf_dir, lambda d: _count_where(d, F.col("user_id").isNull())
-    )
-
-
-def xfil_events_nan_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NaN-user_id tally per engine (raw read; 0 when user_id is not a
-    float type on the Spark side) — the direct test of the r9 theory
-    that the four user-grouped events reds come from a NaN-vs-NULL
-    missing-cohort split."""
-    return _xfil_events_fact(spark, sf_dir, lambda d: _nan_count(d, "user_id"))
-
-
-def xfil_events_null_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NULL-value tally per engine (raw read)."""
-    return _xfil_events_fact(
-        spark, sf_dir, lambda d: _count_where(d, F.col("value").isNull())
-    )
-
-
-def xfil_events_nan_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NaN-value tally per engine (raw read)."""
-    return _xfil_events_fact(spark, sf_dir, lambda d: _nan_count(d, "value"))
-
-
-def xfil_events_inf_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """±Inf-value tally per engine (raw read)."""
-    return _xfil_events_fact(spark, sf_dir, lambda d: _inf_count(d, "value"))
-
-
-def xfil_events_zero_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """value == 0 tally per engine — the Σ-checksum blind spot: a row
-    that is 0.0 in one engine and NULL/NaN in the other shifts every
-    rank/median/count while leaving the r8 vfloor/vround checksums
-    green. This tally sees it."""
-    return _xfil_events_fact(
-        spark, sf_dir, lambda d: _count_where(d, F.col("value") == F.lit(0.0))
-    )
-
-
-def xfil_events_distinct_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COUNT(DISTINCT user_id) per engine (raw read)."""
-    return _xfil_events_fact(
-        spark,
-        sf_dir,
-        lambda d: d.select("user_id").filter(F.col("user_id").isNotNull())
-        .distinct()
-        .count(),
-    )
-
-
-def xfil_events_type_user_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (event_type, user_id) pair count per engine, NULL-safe
-    via string canonicalization on BOTH sides — the direct input-size
-    fact of the red gini/markov/mann-kendall family. A Spark count one
-    higher than the oracle's is the NaN-vs-NULL cohort split measured."""
-    return _xfil_events_fact(
-        spark,
-        sf_dir,
-        lambda d: d.select(
-            F.coalesce(F.col("event_type").cast("string"), F.lit("\x00")).alias("a"),
-            F.coalesce(F.col("user_id").cast("string"), F.lit("\x00")).alias("b"),
-        )
-        .distinct()
-        .count(),
-    )
-
-
-def xfil_events_ns_residue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count of ts rows with nonzero sub-µs (ns) residue per engine.
-    oracle_rows > 0 ⟺ the driver's DuckDB sees exact nanoseconds (a
-    ns-native reader); spark_rows > 0 ⟺ the parquet itself carries
-    sub-µs residue. The king probe for the ns policy question."""
-
-    def fact(d: DataFrame) -> int:
-        if dict(d.dtypes).get("ts") != "bigint":
-            return 0
-        res = ((F.col("ts") % 1000) + 1000) % 1000
-        return _count_where(d, F.col("ts").isNotNull() & (res != 0))
-
-    return _xfil_events_fact(spark, sf_dir, fact)
-
-
-def xfil_events_pre1970(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count of pre-epoch ts rows per engine (raw read)."""
-
-    def fact(d: DataFrame) -> int:
-        if dict(d.dtypes).get("ts") == "bigint":
-            return _count_where(d, F.col("ts") < 0)
-        return _count_where(
-            d,
-            F.unix_micros(F.col("ts").cast("timestamp")) < 0,
-        )
-
-    return _xfil_events_fact(spark, sf_dir, fact)
-
-
-#: Engine-local dtype descriptor codes for the xfil dtype probes. The two
-#: sides report through the SAME semantic code space (1 = the type the
-#: schema contract expects, higher = a drifted physical type), so the
-#: (spark_rows, oracle_rows) pair reads as "what each engine actually sees".
-_XFIL_TS_CODES = {"bigint": 1, "timestamp": 2, "timestamp_ntz": 3, "date": 4}
-_XFIL_INT_CODES = {"bigint": 1, "double": 2, "int": 3, "float": 4}
-_XFIL_VAL_CODES = {"double": 1, "float": 2}
-
-
-def _dtype_code(df: DataFrame, col: str, table) -> int:
-    t = dict(df.dtypes).get(col, "")
-    if table.get(t):
-        return table[t]
-    if t.startswith("decimal"):
-        return 5
-    return 9
-
-
-def xfil_events_dtypes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packed physical-type descriptor of events per engine:
-    code = ts + 10·user_id + 100·value. ts: 1=ns 2=µs-instant 3=µs-naive
-    4=date; user_id: 1=bigint 2=double 3=int32 4=float 5=decimal;
-    value: 1=double 2=float 5=decimal; 9=other."""
-
-    def fact(d: DataFrame) -> int:
-        return (
-            _dtype_code(d, "ts", _XFIL_TS_CODES)
-            + 10 * _dtype_code(d, "user_id", _XFIL_INT_CODES)
-            + 100 * _dtype_code(d, "value", _XFIL_VAL_CODES)
-        )
-
-    return _xfil_events_fact(spark, sf_dir, fact)
-
-
-def _chk_e2_residue(df: DataFrame, col: str) -> int:
-    """Residue mod _XFIL_M of the Σ-pmod e2-quantized finite stream of
-    ``col`` — the multiset fingerprint the median/MAD gates consume."""
-    c = F.col(col).cast("double")
-    finite = c.isNotNull()
-    if _is_float(df, col):
-        finite = (
-            finite
-            & ~F.isnan(c)
-            & (c != F.lit(float("inf")))
-            & (c != F.lit(float("-inf")))
-        )
-    v2 = F.round(
-        F.least(F.greatest(c, F.lit(-1e10)), F.lit(1e10)) * F.lit(100.0)
-    ).cast("long")
-    pm = ((v2 % _XFIL_M) + _XFIL_M) % _XFIL_M
-    row = (
-        df.filter(finite)
-        .agg((F.sum(pm) % F.lit(_XFIL_M)).cast("long").alias("r"))
-        .collect()
-    )
-    return int(row[0]["r"] or 0)
-
-
-_XFIL_CHK_SQL = (
-    "SELECT (SUM(((CAST(ROUND(LEAST(GREATEST(CAST({col} AS DOUBLE), -1e10),"
-    " 1e10) * 100.0) AS BIGINT) % {m}) + {m}) % {m}) % {m})"
-    " FROM {tbl} WHERE {col} IS NOT NULL AND NOT isnan(CAST({col} AS DOUBLE))"
-    " AND NOT isinf(CAST({col} AS DOUBLE))"
-)
-
-
-def xfil_orders_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row count of orders, per engine."""
-    return _xfil(spark, _raw(spark, sf_dir, "orders").count())
-
-
-def xfil_orders_null_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NULL o_custkey tally per engine (raw read)."""
-    return _xfil(
-        spark,
-        _count_where(_raw(spark, sf_dir, "orders"), F.col("o_custkey").isNull()),
-    )
-
-
-def xfil_orders_nan_custkey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NaN o_custkey tally per engine (raw read) — the priority-markov
-    grouping-cohort test, twin of xfil_events_nan_user."""
-    return _xfil(spark, _nan_count(_raw(spark, sf_dir, "orders"), "o_custkey"))
-
-
-def xfil_orders_tp_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """o_totalprice missing tally (NULL-or-NaN, each engine's own view)
-    — exactly the rows orders_total_mad drops."""
-    d = _raw(spark, sf_dir, "orders")
-    c = F.col("o_totalprice")
-    cond = c.isNull()
-    if _is_float(d, "o_totalprice"):
-        cond = cond | F.isnan(c)
-    return _xfil(spark, _count_where(d, cond))
-
-
-def xfil_orders_tp_chk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Residue mod 99991 of the e2-quantized finite o_totalprice stream
-    per engine — if these numbers agree while orders_total_mad stays
-    red, the divergence is in rank selection, not the value read."""
-    return _xfil(
-        spark, _chk_e2_residue(_raw(spark, sf_dir, "orders"), "o_totalprice")
-    )
-
-
-def xfil_orders_med2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pmod(med2, 99991) of the UNGROUPED e2 o_totalprice stream per
-    engine (med2 = sum of the two middle order statistics, the exact
-    machinery orders_total_mad uses) — a direct bisect of the median
-    rank-select across engines."""
-    from pyspark.sql import Window
-
-    d = _raw(spark, sf_dir, "orders")
-    c = F.col("o_totalprice").cast("double")
-    finite = c.isNotNull()
-    if _is_float(d, "o_totalprice"):
-        finite = finite & ~F.isnan(c)
-    v2 = F.round(
-        F.least(F.greatest(c, F.lit(-1e10)), F.lit(1e10)) * F.lit(100.0)
-    ).cast("long")
-    base = d.filter(finite).select(v2.alias("__v2"))
-    w = Window.partitionBy(F.lit(1)).orderBy(F.col("__v2").asc_nulls_last())
-    ranked = base.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy(F.lit(1)))
-    )
-    lo = ranked.filter(F.col("__rn") == F.expr("(__n + 1) div 2")).select(
-        F.col("__v2").alias("__lo")
-    )
-    hi = ranked.filter(F.col("__rn") == F.expr("(__n + 2) div 2")).select(
-        F.col("__v2").alias("__hi")
-    )
-    rows = lo.crossJoin(hi).collect()
-    if not rows:
-        return _xfil(spark, 0)
-    med2 = int(rows[0]["__lo"]) + int(rows[0]["__hi"])
-    return _xfil(spark, ((med2 % _XFIL_M) + _XFIL_M) % _XFIL_M)
-
-
-def xfil_orders_dtypes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packed physical-type descriptor of orders per engine:
-    code = o_totalprice + 10·o_orderdate + 100·o_custkey (same code
-    spaces as xfil_events_dtypes)."""
-    d = _raw(spark, sf_dir, "orders")
-    return _xfil(
-        spark,
-        _dtype_code(d, "o_totalprice", _XFIL_VAL_CODES)
-        + 10 * _dtype_code(d, "o_orderdate", _XFIL_TS_CODES)
-        + 100 * _dtype_code(d, "o_custkey", _XFIL_INT_CODES),
-    )
-
-
-def xfil_li_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row count of lineitem, per engine."""
-    return _xfil(spark, _raw(spark, sf_dir, "lineitem").count())
-
-
-def xfil_li_q_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l_quantity missing tally (NULL-or-NaN) per engine — half the
-    filter of the red lineitem_weighted_median."""
-    d = _raw(spark, sf_dir, "lineitem")
-    c = F.col("l_quantity")
-    cond = c.isNull()
-    if _is_float(d, "l_quantity"):
-        cond = cond | F.isnan(c)
-    return _xfil(spark, _count_where(d, cond))
-
-
-def xfil_li_q_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count of FINITE l_quantity rows with a fractional part per engine
-    — weighted_median FLOORs weights; a fractional-quantity read skew
-    would shift cumulative weights silently."""
-    d = _raw(spark, sf_dir, "lineitem")
-    c = F.col("l_quantity").cast("double")
-    cond = c.isNotNull() & (F.floor(c) != c)
-    if _is_float(d, "l_quantity"):
-        cond = (
-            c.isNotNull()
-            & ~F.isnan(c)
-            & (c != F.lit(float("inf")))
-            & (c != F.lit(float("-inf")))
-            & (F.floor(c) != c)
-        )
-    return _xfil(spark, _count_where(d, cond))
-
-
-def xfil_li_ep_chk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Residue mod 99991 of the e2-quantized finite l_extendedprice
-    stream per engine — the other half of weighted_median's input."""
-    return _xfil(
-        spark, _chk_e2_residue(_raw(spark, sf_dir, "lineitem"), "l_extendedprice")
-    )
-
-
-def xfil_docs_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row count of documents, per engine."""
-    return _xfil(spark, _raw(spark, sf_dir, "documents").count())
-
-
-def xfil_docs_null_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NULL doc_id tally per engine (raw read) — the slice-complement
-    cohort VERDICT r8 pinned for the docs reds."""
-    return _xfil(
-        spark,
-        _count_where(_raw(spark, sf_dir, "documents"), F.col("doc_id").isNull()),
-    )
-
-
-def xfil_docs_nan_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NaN doc_id tally per engine (raw read; nonzero spark_rows with
-    zero oracle_rows is the NaN≙NULL collapse measured on doc_id)."""
-    return _xfil(spark, _nan_count(_raw(spark, sf_dir, "documents"), "doc_id"))
-
-
-def xfil_docs_neg_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Negative doc_id tally per engine (raw read) — the other
-    slice-complement candidate."""
-    return _xfil(
-        spark,
-        _count_where(_raw(spark, sf_dir, "documents"), F.col("doc_id") < 0),
-    )
-
-
-def xfil_docs_dup_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate non-NULL doc_id row surplus (rows − distinct ids) per
-    engine."""
-    d = _raw(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
-    return _xfil(
-        spark, d.count() - d.select("doc_id").distinct().count()
-    )
-
-
-def xfil_docs_null_lst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packed NULL tallies of (lang, source, text) per engine, each
-    capped at 30: code = min(null_lang,30) + 31·min(null_source,30)
-    + 961·min(null_text,30)."""
-    d = _raw(spark, sf_dir, "documents")
-    nl = min(_count_where(d, F.col("lang").isNull()), 30)
-    ns = min(_count_where(d, F.col("source").isNull()), 30)
-    nt = min(_count_where(d, F.col("text").isNull()), 30)
-    return _xfil(spark, nl + 31 * ns + 961 * nt)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -10332,7 +9505,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_pair_probe": events_pair_probe,
         "events_column_probe": events_column_probe,
         "events_order_probe": events_order_probe,
-        "events_ns_residue_probe": events_ns_residue_probe,
         "events_compaction_identity": events_compaction_identity,
         "semantics_probe": semantics_probe,
         "semantics_ns_canary": semantics_ns_canary,
@@ -10343,7 +9515,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_bfs_reach": events_bfs_reach,
         "docs_chi2_terms": docs_chi2_terms,
         "docs_token_stream_probe": docs_token_stream_probe,
-        "docs_byte_probe": docs_byte_probe,
         "events_gini_users": events_gini_users,
         "lineitem_weighted_median": lineitem_weighted_median,
         "events_peak_count": events_peak_count,
@@ -10399,57 +9570,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_wav_frames": media_wav_frames,
         "events_stream_interval": events_stream_interval,
         "events_stream_sliding": events_stream_sliding,
-        "probe_order_sensitivity": probe_order_sensitivity,
-        "events_rowset_probe": events_rowset_probe,
-        "events_nulltally_probe": events_nulltally_probe,
-        "events_idchk_probe": events_idchk_probe,
-        "events_userchk_probe": events_userchk_probe,
-        "events_tschk_probe": events_tschk_probe,
-        "events_vfloor_probe": events_vfloor_probe,
-        "events_vround_probe": events_vround_probe,
-        "docs_charchk_probe": docs_charchk_probe,
-        "docs_trimlen_probe": docs_trimlen_probe,
-        "docs_tokcount_probe": docs_tokcount_probe,
-        "docs_foldchk_probe": docs_foldchk_probe,
-        "docs_tokchk_b0": docs_tokchk_b0,
-        "docs_tokchk_b1": docs_tokchk_b1,
-        "docs_tokchk_b2": docs_tokchk_b2,
-        "docs_tokchk_b3": docs_tokchk_b3,
-        "docs_tokchk_b4": docs_tokchk_b4,
-        "docs_tokchk_b5": docs_tokchk_b5,
-        "docs_tokchk_b6": docs_tokchk_b6,
-        "docs_tokchk_b7": docs_tokchk_b7,
-        "xfil_env_versions": xfil_env_versions,
-        "xfil_events_rows": xfil_events_rows,
-        "xfil_events_null_ts": xfil_events_null_ts,
-        "xfil_events_null_user": xfil_events_null_user,
-        "xfil_events_nan_user": xfil_events_nan_user,
-        "xfil_events_null_value": xfil_events_null_value,
-        "xfil_events_nan_value": xfil_events_nan_value,
-        "xfil_events_inf_value": xfil_events_inf_value,
-        "xfil_events_zero_value": xfil_events_zero_value,
-        "xfil_events_distinct_user": xfil_events_distinct_user,
-        "xfil_events_type_user_pairs": xfil_events_type_user_pairs,
-        "xfil_events_ns_residue": xfil_events_ns_residue,
-        "xfil_events_pre1970": xfil_events_pre1970,
-        "xfil_events_dtypes": xfil_events_dtypes,
-        "xfil_orders_rows": xfil_orders_rows,
-        "xfil_orders_null_custkey": xfil_orders_null_custkey,
-        "xfil_orders_nan_custkey": xfil_orders_nan_custkey,
-        "xfil_orders_tp_missing": xfil_orders_tp_missing,
-        "xfil_orders_tp_chk": xfil_orders_tp_chk,
-        "xfil_orders_med2": xfil_orders_med2,
-        "xfil_orders_dtypes": xfil_orders_dtypes,
-        "xfil_li_rows": xfil_li_rows,
-        "xfil_li_q_missing": xfil_li_q_missing,
-        "xfil_li_q_frac": xfil_li_q_frac,
-        "xfil_li_ep_chk": xfil_li_ep_chk,
-        "xfil_docs_rows": xfil_docs_rows,
-        "xfil_docs_null_id": xfil_docs_null_id,
-        "xfil_docs_nan_id": xfil_docs_nan_id,
-        "xfil_docs_neg_id": xfil_docs_neg_id,
-        "xfil_docs_dup_id": xfil_docs_dup_id,
-        "xfil_docs_null_lst": xfil_docs_null_lst,
     }
     # The external correctness gate samples the FIRST 50 keys per round, so
     # the dict is reordered to rotate driver-oracle coverage across rounds:
@@ -10465,9 +9585,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {n: q[n] for n in (*head, *rest)}
 
 
-# Round-10 driver-sample rotation: the 16 persistent hash-reds FIRST — the
-# r10 dtype audit traced all 16 to one mechanism (oracle SUM(BIGINT) →
-# HUGEINT → float64 in the driver's pandas conversion → "123.0" vs "123"
+# Round-10 driver-sample rotation: the persistent hash-reds FIRST (14 of
+# r10's 16 are still gates) — the r10 dtype audit traced all 16 to one
+# mechanism (oracle SUM(BIGINT) → HUGEINT → float64 in the driver's
+# pandas conversion → "123.0" vs "123"
 # string divergence) and the fix (_ORACLE_BIGINT_COLS output casts) is this
 # round's acceptance test — then every remaining never-driver-sampled gate
 # that has a SQL oracle (33: includes the 7 latent HUGEINT gates the audit
@@ -10477,10 +9598,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # media-codec, stream and sensor gates that never had a driver row), then
 # emb_semantic_dedup (this round's heaviest optimized operator, driver
 # re-verification after the rewrite). The oracle-less kriging float gates
-# (rows-only, local ledger) and the 4 lowest-information xfil probes
-# yielded their slots. 49 of 50 slots are substantive operator gates.
+# (rows-only, local ledger) yielded their slots.
 _ROUND10_SAMPLE_FIRST = [
-    # the 16 dtype-fixed former reds (retest = acceptance of the fix)
+    # the dtype-fixed former reds (retest = acceptance of the fix)
     "docs_chi2_terms",
     "events_mann_kendall",
     "docs_token_stream_probe",
@@ -10488,7 +9608,6 @@ _ROUND10_SAMPLE_FIRST = [
     "docs_simpson_diversity",
     "events_markov_transitions",
     "events_mad_anomaly",
-    "events_ns_residue_probe",
     "events_column_probe",
     "orders_dq_report",
     "docs_stratified_sample",
@@ -10496,7 +9615,6 @@ _ROUND10_SAMPLE_FIRST = [
     "lineitem_weighted_median",
     "orders_priority_markov",
     "orders_total_mad",
-    "events_nulltally_probe",
     # never-driver-sampled gates with oracles (incl. 7 latent HUGEINT fixes)
     "customer_kanon_audit",
     "docs_hapax_profile",
@@ -17606,21 +16724,6 @@ def oracle_sql() -> dict[str, str]:
                     AS BIGINT) AS ord_sum2
         FROM base GROUP BY bucket
     """
-    oracles["events_ns_residue_probe"] = """
-        SELECT COUNT(ts) AS n_ts,
-               SUM(CASE WHEN ts IS NOT NULL
-                         AND ((epoch_us(ts) % 1000000 + 1000000) % 1000000)
-                             != 0
-                        THEN 1 ELSE 0 END) AS n_sub_sec,
-               CAST(COALESCE(MAX(CASE WHEN ts IS NOT NULL THEN
-                        ((epoch_us(ts) % 1000000 + 1000000) % 1000000) END),
-                    0) AS BIGINT) AS max_sub_sec_us,
-               SUM(CASE WHEN ts IS NOT NULL
-                         AND ((epoch_us(ts) % 1000000 + 1000000) % 1000000)
-                             >= 999999
-                        THEN 1 ELSE 0 END) AS n_near_boundary
-        FROM events
-    """
     oracles["events_compaction_identity"] = """
         SELECT COUNT(*) AS n_orig, COUNT(*) AS n_comp,
                CAST(0 AS BIGINT) AS n_missing, CAST(0 AS BIGINT) AS n_extra
@@ -17633,18 +16736,6 @@ def oracle_sql() -> dict[str, str]:
         "AS TIMESTAMP_NS)) % 1000 AS BIGINT) AS val"
     )
     oracles["media_wav_adpcm"] = _adpcm_oracle()
-    oracles["docs_byte_probe"] = """
-        SELECT lang,
-               COUNT(*) AS n_docs,
-               CAST(SUM(length(text)) AS BIGINT) AS len_sum,
-               CAST(SUM(list_reduce(list_transform(
-                        string_split(substr(md5(text), 1, 8), ''),
-                        c -> CAST(strpos('0123456789abcdef', c) - 1
-                                  AS BIGINT)),
-                        (a, c) -> a * 16 + c)) % 2147483647 AS BIGINT)
-                   AS md5_prefix_sum
-        FROM documents GROUP BY lang
-    """
     oracles["part_trigram_search"] = """
         WITH names AS (
             SELECT p_partkey,
@@ -17919,189 +17010,15 @@ def oracle_sql() -> dict[str, str]:
     oracles["emb_hamming_ann"] = _hamming_topk_sql(KNN_K)
     oracles["orders_stream_bitmap_merge"] = oracles["customer_month_coverage"]
 
-    # ---- round-8 probe battery oracles
-    oracles['probe_order_sensitivity'] = 'SELECT CAST(range AS BIGINT) AS k FROM range(1, 21) ORDER BY k'
-    oracles['events_rowset_probe'] = '\n    SELECT event_type, COUNT(*) AS n_rows FROM events\n    GROUP BY event_type ORDER BY event_type'
-    oracles['events_nulltally_probe'] = '\n    SELECT SUM(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS null_ts,\n           SUM(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS null_id,\n           SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS null_user,\n           SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS null_value,\n           SUM(CASE WHEN value IS NOT NULL AND isnan(value)\n                    THEN 1 ELSE 0 END) AS nan_value,\n           SUM(CASE WHEN value IS NOT NULL AND isinf(value)\n                    THEN 1 ELSE 0 END) AS inf_value\n    FROM events'
-    oracles['events_idchk_probe'] = 'SELECT CAST(SUM(((event_id) % 2147483647 + 2147483647) % 2147483647) % 2147483647 AS BIGINT) AS id_chk FROM events'
-    oracles['events_userchk_probe'] = 'SELECT CAST(SUM(((user_id) % 2147483647 + 2147483647) % 2147483647) % 2147483647 AS BIGINT) AS user_chk FROM events'
-    oracles['events_tschk_probe'] = 'SELECT CAST(SUM(((epoch_ns(ts) // 1000000000) % 2147483647 + 2147483647) % 2147483647) % 2147483647 AS BIGINT) AS ts_chk FROM events'
-    oracles['events_vfloor_probe'] = 'SELECT CAST(SUM(((CASE WHEN value IS NOT NULL AND isfinite(value) THEN CAST(FLOOR(LEAST(GREATEST(value, -1e10), 1e10) * 1e6) AS BIGINT) END) % 2147483647 + 2147483647) % 2147483647) % 2147483647 AS BIGINT) AS vfloor_chk FROM events'
-    oracles['events_vround_probe'] = 'SELECT CAST(SUM(((CASE WHEN value IS NOT NULL AND isfinite(value) THEN CAST(ROUND(LEAST(GREATEST(value, -1e10), 1e10) * 1e6) AS BIGINT) END) % 2147483647 + 2147483647) % 2147483647) % 2147483647 AS BIGINT) AS vround_chk FROM events'
-    oracles['docs_charchk_probe'] = "\n    SELECT lang, CAST(SUM(list_reduce(list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT)), (a, c) -> (a * 31 + c) % 2147483647)) % 2147483647 AS BIGINT) AS char_chk\n    FROM documents WHERE text IS NOT NULL GROUP BY lang ORDER BY lang"
-    oracles['docs_trimlen_probe'] = "\n    SELECT lang, CAST(SUM(length(trim(text, ' '))) % 2147483647 AS BIGINT) AS trimlen\n    FROM documents WHERE text IS NOT NULL GROUP BY lang ORDER BY lang"
-    oracles['docs_tokcount_probe'] = "\n    SELECT lang,\n           CAST(SUM(CASE WHEN trim(text, ' ') = '' THEN 0\n                         ELSE len(string_split_regex(trim(text, ' '), '[ \\t\\n\\x0b\\f\\r]+')) END) % 2147483647 AS BIGINT) AS tok_count\n    FROM documents WHERE text IS NOT NULL GROUP BY lang ORDER BY lang"
-    oracles['docs_foldchk_probe'] = "\n    SELECT lang, CAST(SUM(list_reduce(list_transform(string_split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ''), c -> CAST(ascii(c) AS BIGINT)), (a, c) -> (a * 31 + c) % 2147483647)) % 2147483647 AS BIGINT) AS fold_chk\n    FROM documents WHERE text IS NOT NULL GROUP BY lang ORDER BY lang"
-    oracles['docs_tokchk_b0'] = "\n    WITH stream AS (\n        SELECT doc_id, unnest(CASE WHEN trim(text, ' ') = '' THEN []\n                                   ELSE string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '), '[ \\t\\n\\x0b\\f\\r]+') END) AS tok\n        FROM documents\n        WHERE doc_id % 8 = 0 AND text IS NOT NULL\n    ),\n    occ AS (SELECT DISTINCT doc_id, tok FROM stream)\n    SELECT COUNT(*) AS n_pairs, COUNT(DISTINCT tok) AS n_tokens,\n           CAST(SUM(list_reduce(list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT)), (a, c) -> (a * 31 + c) % 2147483647)) % 2147483647 AS BIGINT) AS hash_mod\n    FROM occ"
-    oracles['docs_tokchk_b1'] = "\n    WITH stream AS (\n        SELECT doc_id, unnest(CASE WHEN trim(text, ' ') = '' THEN []\n                                   ELSE string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '), '[ \\t\\n\\x0b\\f\\r]+') END) AS tok\n        FROM documents\n        WHERE doc_id % 8 = 1 AND text IS NOT NULL\n    ),\n    occ AS (SELECT DISTINCT doc_id, tok FROM stream)\n    SELECT COUNT(*) AS n_pairs, COUNT(DISTINCT tok) AS n_tokens,\n           CAST(SUM(list_reduce(list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT)), (a, c) -> (a * 31 + c) % 2147483647)) % 2147483647 AS BIGINT) AS hash_mod\n    FROM occ"
-    oracles['docs_tokchk_b2'] = "\n    WITH stream AS (\n        SELECT doc_id, unnest(CASE WHEN trim(text, ' ') = '' THEN []\n                                   ELSE string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '), '[ \\t\\n\\x0b\\f\\r]+') END) AS tok\n        FROM documents\n        WHERE doc_id % 8 = 2 AND text IS NOT NULL\n    ),\n    occ AS (SELECT DISTINCT doc_id, tok FROM stream)\n    SELECT COUNT(*) AS n_pairs, COUNT(DISTINCT tok) AS n_tokens,\n           CAST(SUM(list_reduce(list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT)), (a, c) -> (a * 31 + c) % 2147483647)) % 2147483647 AS BIGINT) AS hash_mod\n    FROM occ"
-    oracles['docs_tokchk_b3'] = "\n    WITH stream AS (\n        SELECT doc_id, unnest(CASE WHEN trim(text, ' ') = '' THEN []\n                                   ELSE string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '), '[ \\t\\n\\x0b\\f\\r]+') END) AS tok\n        FROM documents\n        WHERE doc_id % 8 = 3 AND text IS NOT NULL\n    ),\n    occ AS (SELECT DISTINCT doc_id, tok FROM stream)\n    SELECT COUNT(*) AS n_pairs, COUNT(DISTINCT tok) AS n_tokens,\n           CAST(SUM(list_reduce(list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT)), (a, c) -> (a * 31 + c) % 2147483647)) % 2147483647 AS BIGINT) AS hash_mod\n    FROM occ"
-    oracles['docs_tokchk_b4'] = "\n    WITH stream AS (\n        SELECT doc_id, unnest(CASE WHEN trim(text, ' ') = '' THEN []\n                                   ELSE string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '), '[ \\t\\n\\x0b\\f\\r]+') END) AS tok\n        FROM documents\n        WHERE doc_id % 8 = 4 AND text IS NOT NULL\n    ),\n    occ AS (SELECT DISTINCT doc_id, tok FROM stream)\n    SELECT COUNT(*) AS n_pairs, COUNT(DISTINCT tok) AS n_tokens,\n           CAST(SUM(list_reduce(list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT)), (a, c) -> (a * 31 + c) % 2147483647)) % 2147483647 AS BIGINT) AS hash_mod\n    FROM occ"
-    oracles['docs_tokchk_b5'] = "\n    WITH stream AS (\n        SELECT doc_id, unnest(CASE WHEN trim(text, ' ') = '' THEN []\n                                   ELSE string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '), '[ \\t\\n\\x0b\\f\\r]+') END) AS tok\n        FROM documents\n        WHERE doc_id % 8 = 5 AND text IS NOT NULL\n    ),\n    occ AS (SELECT DISTINCT doc_id, tok FROM stream)\n    SELECT COUNT(*) AS n_pairs, COUNT(DISTINCT tok) AS n_tokens,\n           CAST(SUM(list_reduce(list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT)), (a, c) -> (a * 31 + c) % 2147483647)) % 2147483647 AS BIGINT) AS hash_mod\n    FROM occ"
-    oracles['docs_tokchk_b6'] = "\n    WITH stream AS (\n        SELECT doc_id, unnest(CASE WHEN trim(text, ' ') = '' THEN []\n                                   ELSE string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '), '[ \\t\\n\\x0b\\f\\r]+') END) AS tok\n        FROM documents\n        WHERE doc_id % 8 = 6 AND text IS NOT NULL\n    ),\n    occ AS (SELECT DISTINCT doc_id, tok FROM stream)\n    SELECT COUNT(*) AS n_pairs, COUNT(DISTINCT tok) AS n_tokens,\n           CAST(SUM(list_reduce(list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT)), (a, c) -> (a * 31 + c) % 2147483647)) % 2147483647 AS BIGINT) AS hash_mod\n    FROM occ"
-    oracles['docs_tokchk_b7'] = "\n    WITH stream AS (\n        SELECT doc_id, unnest(CASE WHEN trim(text, ' ') = '' THEN []\n                                   ELSE string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '), '[ \\t\\n\\x0b\\f\\r]+') END) AS tok\n        FROM documents\n        WHERE doc_id % 8 = 7 AND text IS NOT NULL\n    ),\n    occ AS (SELECT DISTINCT doc_id, tok FROM stream)\n    SELECT COUNT(*) AS n_pairs, COUNT(DISTINCT tok) AS n_tokens,\n           CAST(SUM(list_reduce(list_transform(string_split(tok, ''), c -> CAST(ascii(c) AS BIGINT)), (a, c) -> (a * 31 + c) % 2147483647)) % 2147483647 AS BIGINT) AS hash_mod\n    FROM occ"
-    # ---- Round-9 exfiltration probes: the oracle mirrors each Spark-side
-    # integer fact as UNNEST(range(n)) so the correctness artifact records
-    # both engines' numbers verbatim (see the `xfil_*` family comment).
-    _xm = str(_XFIL_M)
-    _chk = (
-        "SELECT (SUM(((CAST(ROUND(LEAST(GREATEST(CAST({col} AS DOUBLE), -1e10),"
-        " 1e10) * 100.0) AS BIGINT) % " + _xm + ") + " + _xm + ") % " + _xm + ")"
-        " % " + _xm + ") FROM {tbl}"
-        " WHERE {col} IS NOT NULL AND NOT isnan(CAST({col} AS DOUBLE))"
-        " AND NOT isinf(CAST({col} AS DOUBLE))"
-    )
-    _ts_code = (
-        "(CASE {t} WHEN 'TIMESTAMP_NS' THEN 1"
-        " WHEN 'TIMESTAMP WITH TIME ZONE' THEN 2 WHEN 'TIMESTAMP' THEN 3"
-        " WHEN 'DATE' THEN 4 WHEN 'BIGINT' THEN 6 ELSE 9 END)"
-    )
-    _int_code = (
-        "(CASE WHEN {t} = 'BIGINT' THEN 1 WHEN {t} = 'DOUBLE' THEN 2"
-        " WHEN {t} = 'INTEGER' THEN 3 WHEN {t} = 'FLOAT' THEN 4"
-        " WHEN {t} LIKE 'DECIMAL%' THEN 5 ELSE 9 END)"
-    )
-    _val_code = (
-        "(CASE WHEN {t} = 'DOUBLE' THEN 1 WHEN {t} = 'FLOAT' THEN 2"
-        " WHEN {t} LIKE 'DECIMAL%' THEN 5 ELSE 9 END)"
-    )
-    xfil_counts = {
-        "xfil_env_versions": (
-            "SELECT CAST(replace(substr(version(), 2, 10), '.', '') AS BIGINT)"
-        ),
-        "xfil_events_rows": "SELECT COUNT(*) FROM events",
-        "xfil_events_null_ts": "SELECT COUNT(*) FROM events WHERE ts IS NULL",
-        "xfil_events_null_user": (
-            "SELECT COUNT(*) FROM events WHERE user_id IS NULL"
-        ),
-        "xfil_events_nan_user": (
-            "SELECT COUNT(*) FROM events WHERE user_id IS NOT NULL"
-            " AND isnan(CAST(user_id AS DOUBLE))"
-        ),
-        "xfil_events_null_value": (
-            "SELECT COUNT(*) FROM events WHERE value IS NULL"
-        ),
-        "xfil_events_nan_value": (
-            "SELECT COUNT(*) FROM events WHERE value IS NOT NULL"
-            " AND isnan(CAST(value AS DOUBLE))"
-        ),
-        "xfil_events_inf_value": (
-            "SELECT COUNT(*) FROM events WHERE value IS NOT NULL"
-            " AND isinf(CAST(value AS DOUBLE))"
-        ),
-        "xfil_events_zero_value": (
-            "SELECT COUNT(*) FROM events WHERE value = 0"
-        ),
-        "xfil_events_distinct_user": (
-            "SELECT COUNT(DISTINCT user_id) FROM events"
-        ),
-        "xfil_events_type_user_pairs": (
-            "SELECT COUNT(*) FROM (SELECT DISTINCT"
-            " COALESCE(CAST(event_type AS VARCHAR), chr(1)) AS a,"
-            " COALESCE(CAST(user_id AS VARCHAR), chr(1)) AS b FROM events)"
-        ),
-        "xfil_events_ns_residue": (
-            "SELECT COUNT(*) FROM events WHERE ts IS NOT NULL"
-            " AND ((epoch_ns(ts) % 1000) + 1000) % 1000 != 0"
-        ),
-        "xfil_events_pre1970": (
-            "SELECT COUNT(*) FROM events WHERE ts IS NOT NULL"
-            " AND epoch_ns(ts) < 0"
-        ),
-        "xfil_events_dtypes": (
-            "WITH t AS (SELECT typeof(ts) AS ts, typeof(user_id) AS u,"
-            " typeof(value) AS v FROM events LIMIT 1)"
-            " SELECT " + _ts_code.format(t="ts")
-            + " + 10 * " + _int_code.format(t="u")
-            + " + 100 * " + _val_code.format(t="v") + " FROM t"
-        ),
-        "xfil_orders_rows": "SELECT COUNT(*) FROM orders",
-        "xfil_orders_null_custkey": (
-            "SELECT COUNT(*) FROM orders WHERE o_custkey IS NULL"
-        ),
-        "xfil_orders_nan_custkey": (
-            "SELECT COUNT(*) FROM orders WHERE o_custkey IS NOT NULL"
-            " AND isnan(CAST(o_custkey AS DOUBLE))"
-        ),
-        "xfil_orders_tp_missing": (
-            "SELECT COUNT(*) FROM orders WHERE o_totalprice IS NULL"
-            " OR isnan(CAST(o_totalprice AS DOUBLE))"
-        ),
-        "xfil_orders_tp_chk": (
-            "SELECT COALESCE((" + _chk.format(col="o_totalprice", tbl="orders")
-            + "), 0)"
-        ),
-        "xfil_orders_med2": (
-            "WITH base AS (SELECT CAST(ROUND(LEAST(GREATEST("
-            "CAST(o_totalprice AS DOUBLE), -1e10), 1e10) * 100.0) AS BIGINT)"
-            " AS v2 FROM orders WHERE o_totalprice IS NOT NULL"
-            " AND NOT isnan(CAST(o_totalprice AS DOUBLE))),"
-            " r AS (SELECT v2, row_number() OVER (ORDER BY v2) AS rn,"
-            " COUNT(*) OVER () AS n FROM base),"
-            " m AS (SELECT (SELECT v2 FROM r WHERE rn = (n + 1) // 2 LIMIT 1)"
-            " + (SELECT v2 FROM r WHERE rn = (n + 2) // 2 LIMIT 1) AS med2)"
-            " SELECT COALESCE(((med2 % " + _xm + ") + " + _xm + ") % " + _xm
-            + ", 0) FROM m"
-        ),
-        "xfil_orders_dtypes": (
-            "WITH t AS (SELECT typeof(o_totalprice) AS tp,"
-            " typeof(o_orderdate) AS dt, typeof(o_custkey) AS ck"
-            " FROM orders LIMIT 1)"
-            " SELECT " + _val_code.format(t="tp")
-            + " + 10 * " + _ts_code.format(t="dt")
-            + " + 100 * " + _int_code.format(t="ck") + " FROM t"
-        ),
-        "xfil_li_rows": "SELECT COUNT(*) FROM lineitem",
-        "xfil_li_q_missing": (
-            "SELECT COUNT(*) FROM lineitem WHERE l_quantity IS NULL"
-            " OR isnan(CAST(l_quantity AS DOUBLE))"
-        ),
-        "xfil_li_q_frac": (
-            "SELECT COUNT(*) FROM lineitem WHERE l_quantity IS NOT NULL"
-            " AND NOT isnan(CAST(l_quantity AS DOUBLE))"
-            " AND NOT isinf(CAST(l_quantity AS DOUBLE))"
-            " AND FLOOR(CAST(l_quantity AS DOUBLE))"
-            " != CAST(l_quantity AS DOUBLE)"
-        ),
-        "xfil_li_ep_chk": (
-            "SELECT COALESCE(("
-            + _chk.format(col="l_extendedprice", tbl="lineitem") + "), 0)"
-        ),
-        "xfil_docs_rows": "SELECT COUNT(*) FROM documents",
-        "xfil_docs_null_id": (
-            "SELECT COUNT(*) FROM documents WHERE doc_id IS NULL"
-        ),
-        "xfil_docs_nan_id": (
-            "SELECT COUNT(*) FROM documents WHERE doc_id IS NOT NULL"
-            " AND isnan(CAST(doc_id AS DOUBLE))"
-        ),
-        "xfil_docs_neg_id": (
-            "SELECT COUNT(*) FROM documents WHERE doc_id < 0"
-        ),
-        "xfil_docs_dup_id": (
-            "SELECT COUNT(*) - COUNT(DISTINCT doc_id) FROM documents"
-            " WHERE doc_id IS NOT NULL"
-        ),
-        "xfil_docs_null_lst": (
-            "SELECT LEAST((SELECT COUNT(*) FROM documents WHERE lang IS NULL),"
-            " 30) + 31 * LEAST((SELECT COUNT(*) FROM documents"
-            " WHERE source IS NULL), 30) + 961 * LEAST((SELECT COUNT(*)"
-            " FROM documents WHERE text IS NULL), 30)"
-        ),
-    }
-    for _name, _cnt in xfil_counts.items():
-        oracles[_name] = _xfil_oracle(_cnt)
     # Output-dtype alignment (see _ORACLE_BIGINT_COLS above): cast the
     # HUGEINT-producing output columns back to BIGINT so the driver's
     # pandas conversion sees the same integer dtype class on both engines.
     for _name, _cols in _ORACLE_BIGINT_COLS.items():
         oracles[_name] = _cast_output_bigint(oracles[_name], _cols)
     # Registration-mode invariance (see _ORACLE_NORM_* above): every
-    # non-diagnostic oracle reads each base table through its normalized
-    # CTE so the comparison is independent of how the driver's DuckDB
-    # physically registered the parquet (raw views vs pandas frames).
+    # oracle reads each base table through its normalized CTE so the
+    # comparison is independent of how the driver's DuckDB physically
+    # registered the parquet (raw views vs pandas frames).
     for _name in list(oracles):
-        if _name.startswith("xfil_") or _name in _ORACLE_NORM_SKIP:
-            continue
         oracles[_name] = _normalize_oracle_sql(oracles[_name])
     return oracles

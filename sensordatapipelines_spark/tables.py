@@ -15,8 +15,9 @@ engine normalizes BOTH to a session-timezone ``TIMESTAMP`` (instant) type:
   instant — value-preserving, and identical to what the DuckDB oracle sees.
 
 Oracle-facing queries compare timestamps at second granularity (invariant
-between floor and toward-zero ns→µs policies), so only the dedicated
-µs-residue probe observes the FLOOR ns→µs policy directly.
+between floor and toward-zero ns→µs policies), so no gate observes the
+FLOOR ns→µs policy directly; ``tests/test_oracle_norm.py`` pins it on
+pre- and post-1970 ns values with sub-µs residue.
 """
 
 from __future__ import annotations

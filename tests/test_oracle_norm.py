@@ -3,18 +3,20 @@
 The external driver registers the parquet tables into its DuckDB by an
 unknown path — `read_parquet` views (raw file semantics) or registered
 pandas frames (NaN/NULL collapse; int64-with-NULL → float64 drift). Every
-non-diagnostic oracle is rewritten to read each base table through a
-normalizing CTE so the Spark-vs-oracle comparison is identical under both
-models. These tests pin:
+oracle is rewritten to read each base table through a normalizing CTE so
+the Spark-vs-oracle comparison is identical under both models. These tests
+pin:
 
 - the REWRITER mechanics (reference styles, WITH / WITH RECURSIVE merge,
   alias preservation, no-table passthrough);
 - the rewrite PRECONDITION (no oracle uses table-qualified column refs);
-- the SKIP-LIST contract (a skipped gate's Spark side reads RAW parquet;
-  a normalized gate's Spark side reads through load_table/_register_views);
+- the READ contract (no gate's Spark side reads RAW parquet; the gates
+  read through load_table/_register_views, as the normalized oracles do);
 - END-TO-END invariance on a poison file: NaN measure + float-drifted id
   column produce identical oracle results under parquet views and pandas
-  registration, matching Spark's normalized read.
+  registration, matching Spark's normalized read;
+- the ns→µs FLOOR that load_table applies to a TIMESTAMP(NANOS) events
+  file, on pre- and post-1970 values with sub-µs residue.
 """
 
 from __future__ import annotations
@@ -120,8 +122,6 @@ def test_normalized_oracles_reference_norm_ctes():
     o = em.oracle_sql()
     raw_ref = re.compile(r"\b(?:FROM|JOIN)\s+(" + "|".join(em.TABLES) + r")\b", re.I)
     for name, sql in o.items():
-        if name.startswith("xfil_") or name in em._ORACLE_NORM_SKIP:
-            continue
         raw = [m.group(1).lower() for m in raw_ref.finditer(sql)]
         defs = re.findall(r"__(\w+)_n AS \(SELECT \* REPLACE", sql)
         assert sorted(raw) == sorted(defs), (
@@ -130,32 +130,16 @@ def test_normalized_oracles_reference_norm_ctes():
         )
 
 
-# ------------------------------------------------------------- skip list
+# ------------------------------------------------------------ read contract
 
-def _reads_raw(fn) -> bool:
-    src = inspect.getsource(fn)
-    if "_raw(" in src or 'read.parquet(f"{sf_dir}' in src:
-        return True
-    # one level of helper indirection (the xfil family pattern)
-    for helper in re.findall(r"\b(_xfil_\w+|_raw)\b", src):
-        h = getattr(em, helper, None)
-        if h is not None and 'read.parquet(f"{sf_dir}' in inspect.getsource(h):
-            return True
-    return False
-
-
-def test_skip_list_matches_raw_read_surface():
+def test_gates_read_through_normalized_views():
+    """Every oracle is normalized, so no gate's Spark side may bypass
+    load_table's NaN≙NULL / ns→µs / integer-restore policies."""
     qs = em.queries()
-    for name in em._ORACLE_NORM_SKIP:
-        fn = qs[name]
-        src = inspect.getsource(fn)
-        # raw read, or a pure-constant probe with no table read at all
-        assert _reads_raw(fn) or "spark.range" in src or "VALUES" in src or (
-            "_register_views" not in src and "load_table" not in src
-        ), f"{name} is skipped but reads through the normalized views"
-    # spot-check the inverse: the driver-red analytics gates are normalized
+    raw = 'read.parquet(f"{sf_dir}'
+    assert [n for n, fn in qs.items() if raw in inspect.getsource(fn)] == []
+    # spot-check: the driver-red analytics gates read the normalized views
     for name in ("events_mad_anomaly", "orders_total_mad", "docs_chi2_terms"):
-        assert name not in em._ORACLE_NORM_SKIP
         assert "_register_views" in inspect.getsource(qs[name])
 
 
@@ -190,6 +174,34 @@ def poison_dir(tmp_path_factory):
         }
     )
     pq.write_table(tbl, os.path.join(d, "events.parquet"), store_schema=False)
+    return str(d)
+
+
+# ns since epoch, each with sub-µs residue: FLOOR and toward-zero
+# division disagree on the two negative values only
+NS_TS = [-1, -1001, 1999, 1_706_745_599_123_456_789]
+
+
+@pytest.fixture(scope="module")
+def ns_dir(tmp_path_factory):
+    """A tiny `events` file whose ts is TIMESTAMP(NANOS), the physical
+    type of the driver's events table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("ns_events")
+    n = len(NS_TS)
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(n), type=pa.int64()),
+            "ts": pa.array(NS_TS, type=pa.timestamp("ns")),
+            "user_id": pa.array([1] * n, type=pa.int64()),
+            "event_type": pa.array(["a"] * n),
+            "value": pa.array([1.0] * n, type=pa.float64()),
+            "props": pa.array([None] * n, type=pa.string()),
+        }
+    )
+    pq.write_table(tbl, os.path.join(d, "events.parquet"))
     return str(d)
 
 
@@ -250,3 +262,14 @@ def test_spark_load_matches_normalized_oracle(poison_dir, spark):
         tuple(r) for r in con.sql(em._normalize_oracle_sql(ORACLE)).fetchall()
     )
     assert got == want
+
+
+def test_spark_load_floors_ns_to_us(ns_dir, spark):
+    from sensordatapipelines_spark.tables import load_table
+
+    df = load_table(spark, ns_dir, "events")
+    got = {
+        r["event_id"]: r["us"]
+        for r in df.select("event_id", em.F.unix_micros("ts").alias("us")).collect()
+    }
+    assert got == {i: ns // 1000 for i, ns in enumerate(NS_TS)}

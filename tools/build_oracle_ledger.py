@@ -1,11 +1,11 @@
-"""Build the committed local-oracle ledger (LOCAL_ORACLE_r{N}.json).
+"""Build the committed local-oracle ledger (LOCAL_ORACLE.json).
 
 Runs the strict Spark-vs-DuckDB comparison (tools/check_oracle.py's
 run_checks — rowcount + column set + exact canonical values, stricter than
 any plausible hash) over EVERY ``queries()`` entry at each requested scale
 factor, and writes one JSON ledger:
 
-    {"generated_for": "r3",
+    {"generated_for": "r11",
      "sf0.01": {query: {status, rows, value_hash, detail}, ...},
      "sf0.1":  {...}}
 
@@ -15,7 +15,7 @@ at two scale factors. tests/test_oracle_ledger.py asserts the committed
 ledger is complete and all-pass, and independently re-runs the full live
 check at sf0.001 so a code change that breaks an oracle fails CI.
 
-Usage: python tools/build_oracle_ledger.py [--pandas-views] [--out PATH] r3 [sf_dir ...]
+Usage: python tools/build_oracle_ledger.py [--pandas-views] [--out PATH] TAG [sf_dir ...]
 
 ``--pandas-views`` registers the DuckDB oracle over ``pandas.read_parquet``
 frames instead of ``read_parquet`` views (see tools/check_oracle.py) —
@@ -65,7 +65,9 @@ def main() -> int:
         results = run_checks(spark, sf_dir, verbose=True, pandas_views=pandas_views)
         ledger[key] = results
         n_fail += sum(1 for r in results.values() if r["status"] == "fail")
-    out = out or f"/root/repo/LOCAL_ORACLE_{tag}.json"
+    out = out or os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "LOCAL_ORACLE.json"
+    )
     with open(out, "w") as f:
         json.dump(ledger, f, indent=1, sort_keys=True)
     print(f"wrote {out}; {n_fail} failures total")

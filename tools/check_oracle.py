@@ -191,25 +191,11 @@ def run_checks(
             else:
                 rec["value_hash"] = value_hash(cs)
         if problems:
-            # `xfil_*` gates are the exfiltration DIAGNOSTIC channel: both
-            # engines report a fact as a row count and several facts are
-            # expected to differ (engine versions, dtype descriptors, raw
-            # vs registered reads) — a mismatch is a successful
-            # measurement, not a defect, so it never fails the ledger.
-            if name.startswith("xfil_"):
-                rec.update(status="diag", detail="; ".join(problems))
-                if verbose:
-                    print(f"DIAG {name}: " + "; ".join(problems))
-            else:
-                rec.update(status="fail", detail="; ".join(problems))
-                if verbose:
-                    print(f"FAIL {name}: " + "; ".join(problems))
-        else:
-            if name.startswith("xfil_"):
-                rec["status"] = "diag"
+            rec.update(status="fail", detail="; ".join(problems))
             if verbose:
-                tag = "DIAG" if name.startswith("xfil_") else "PASS"
-                print(f"{tag} {name} ({len(sdf)} rows)")
+                print(f"FAIL {name}: " + "; ".join(problems))
+        elif verbose:
+            print(f"PASS {name} ({len(sdf)} rows)")
         results[name] = rec
     con.close()
     return results

@@ -1,7 +1,7 @@
 """DATE/DECIMAL-typed twin derivation (the `sf_adv_dd` variant).
 
 Round 8 validated the engine on a DATE/DECIMAL-typed orders/lineitem
-variant of the adversarial twin (LOCAL_ORACLE_ADV_r8.json, key
+variant of the adversarial twin (the LOCAL_ORACLE_ADV ledgers, key
 ``sf_adv_dd``) but the derivation script was never committed; this is it,
 reconstructed so the variant is reproducible. It rewrites two tables of an
 existing twin directory:
