@@ -6818,8 +6818,9 @@ def orders_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality audit over the orders/lineitem star:
     null + domain checks folded into ONE full-scan aggregate per table,
     PK-duplicate stats as one keyed groupBy, FK orphans as LEFT ANTI
-    joins (broadcast dim for orders→customer; shuffle for the fact-fact
-    lineitem→orders)."""
+    joins whose strategy the planner picks by size (customer broadcasts;
+    orders broadcasts while it fits under ``autoBroadcastJoinThreshold``
+    and shuffles against lineitem above it)."""
     from sensordatapipelines_spark.operators.utility import dq_report
 
     _register_views(spark, sf_dir)
@@ -6844,7 +6845,6 @@ def orders_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "discount_range": (F.col("l_discount") < 0) | (F.col("l_discount") > 1),
         },
         fks=[("l_orderkey", orders, "o_orderkey")],
-        broadcast_dims=False,
     ).withColumn("tbl", F.lit("lineitem"))
     return a.unionByName(b).orderBy(
         F.asc_nulls_last("tbl"), F.asc_nulls_last("check")

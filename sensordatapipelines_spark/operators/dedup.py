@@ -177,21 +177,6 @@ def _shingle_postings(
     return exploded, sizes
 
 
-def _sizes_broadcastable(df: DataFrame, limit: int | None) -> bool:
-    """Gate the broadcast hint on the per-document sizes table. ``sizes``
-    has at most one row per input document, so the cheap upstream document
-    count (a column-pruned scan, often metadata-only on parquet) bounds it
-    without materializing the shingle pipeline a second time. At the
-    charter's 100 TB corpus that is billions of rows — a forced
-    ``F.broadcast`` there is an OOM, not a hint (the same bug class gated
-    by ``broadcast_loser_limit`` in ``neardedup_corpus``). Above the limit
-    the hint is omitted and AQE picks the strategy; results are identical
-    either way."""
-    if limit is None or limit <= 0:
-        return False
-    return df.count() <= limit
-
-
 @register("jaccard_pairs")
 def jaccard_pairs(
     df: DataFrame,
@@ -201,7 +186,6 @@ def jaccard_pairs(
     threshold: float = 0.8,
     max_shingle_df: int | None = 1000,
     metrics: dict | None = None,
-    broadcast_sizes_limit: int | None = 5_000_000,
 ) -> DataFrame:
     """N-gram Jaccard near-duplicate pairs → ``(id_a, id_b, jaccard)``.
 
@@ -240,10 +224,11 @@ def jaccard_pairs(
         .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("__inter"))
     )
+    # The size tables carry no hint: they hold one row per document, so
+    # the planner broadcasts them by size (autoBroadcastJoinThreshold) and
+    # AQE re-plans from runtime sizes; a corpus-sized table shuffles.
     na = sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
     nb = sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
-    if _sizes_broadcastable(df, broadcast_sizes_limit):
-        na, nb = F.broadcast(na), F.broadcast(nb)
     out = (
         inter.join(na, "id_a")
         .join(nb, "id_b")
@@ -269,7 +254,6 @@ def containment_pairs(
     threshold: float = 0.8,
     max_shingle_df: int | None = 1000,
     metrics: dict | None = None,
-    broadcast_sizes_limit: int | None = 5_000_000,
 ) -> DataFrame:
     """Asymmetric shingle containment → ``(id_sub, id_sup, containment)``:
     ``C(A→B) = |A∩B| / |A|`` — the fraction of document A's shingles that
@@ -296,8 +280,6 @@ def containment_pairs(
     )
     na = sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
     nb = sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
-    if _sizes_broadcastable(df, broadcast_sizes_limit):
-        na, nb = F.broadcast(na), F.broadcast(nb)
     both = inter.join(na, "id_a").join(nb, "id_b")
     fwd = F.struct(
         F.col("id_a").alias("id_sub"),
@@ -888,13 +870,19 @@ def neardedup_corpus(
     (``minhash_pairs``), components iterate over (node, label) pairs only
     — never documents — and the final step is a LEFT ANTI join of the
     loser-id set against the corpus (only ids ship). The broadcast hint on
-    the loser side is GATED on its actual size: components are already
-    materialized (``localCheckpoint`` per round), so the count is nearly
-    free, and at a realistic 20-40 % dup rate on a 100 TB corpus the loser
-    set is billions of ids — a forced broadcast there is an OOM, not a
-    hint. Above ``broadcast_loser_limit`` the hint is omitted and AQE picks
-    the join strategy (shuffled anti-join; see SCALE.md "neardedup loser
-    anti-join"). Results are identical either way.
+    the loser side is GATED on its actual size: at a realistic 20-40 % dup
+    rate on a 100 TB corpus the loser set is billions of ids, and a forced
+    broadcast there is an OOM, not a hint. Above ``broadcast_loser_limit``
+    the hint is omitted and AQE picks the join strategy (shuffled
+    anti-join; see SCALE.md "neardedup loser anti-join"). Results are
+    identical either way.
+
+    Why a count rather than the planner's own choice: the loser set reads
+    a checkpoint, whose static size estimate never clears the broadcast
+    threshold, so the planner shuffles both sides and AQE converts the
+    join to a broadcast only after the corpus has been shuffled (two more
+    hash exchanges). The count reads the same checkpointed components, so
+    it is nearly free.
     """
     pairs = minhash_pairs(
         df,

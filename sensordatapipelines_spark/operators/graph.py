@@ -258,7 +258,6 @@ def adamic_adar(
     dst_col: str = "w",
     min_common: int = 2,
     top_k: int = 5,
-    materialize: bool = True,
     max_degree: int = 10000,
     metrics: dict | None = None,
 ) -> DataFrame:
@@ -276,19 +275,13 @@ def adamic_adar(
     1/ln(deg) term is
     quantized to 1e-6 before the sum (transcendental values never park
     on rounding half-way points), so the per-node top-k window is
-    deterministic cross-engine — no float-rank flips.
-
-    ``materialize`` (default on) ``localCheckpoint``s the edge frame
-    first: it is consumed THREE times (both symmetrization branches +
-    the existing-edge anti-join), the branches are column-swapped so
-    ReuseExchange never fires, and an expensive upstream edge builder
-    (e.g. a co-occurrence explode) would otherwise run 3×. Together with
-    the join-based candidate generation, the probe respread, and the
-    neighbor-list cut below, the co-activity gate went 35.7 s → 5.3 s
-    (identical output hash). Storage cost is O(edges), the same
-    contract as the component-loop checkpoints."""
-    if materialize:
-        edges = edges.localCheckpoint()
+    deterministic cross-engine — no float-rank flips."""
+    # The edge frame is consumed THREE times (both symmetrization branches
+    # + the existing-edge anti-join) and the branches are column-swapped,
+    # so ReuseExchange never fires: without the checkpoint an expensive
+    # upstream edge builder (e.g. a co-occurrence explode) runs 3×.
+    # Storage cost is O(edges), the same as the component-loop checkpoints.
+    edges = edges.localCheckpoint()
     sym = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")).unionAll(
         edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
     )
@@ -323,12 +316,11 @@ def adamic_adar(
     else:
         _warn_unobserved_cap("adamic_adar", "max_degree", int(max_degree))
     nbrt = nbr.join(keep, "s").select("s", "d", term6.alias("__t6"))
-    if materialize:
-        # The weighted neighbor list feeds BOTH self-join sides, and its
-        # own degree join re-evaluates the distinct twice more — without a
-        # cut the (sym → distinct) shuffle runs 4×. O(2·edges) rows, the
-        # same storage contract as the edge checkpoint above.
-        nbrt = nbrt.localCheckpoint()
+    # The weighted neighbor list feeds BOTH self-join sides, and its own
+    # degree join re-evaluates the distinct twice more — without a cut the
+    # (sym → distinct) shuffle runs 4×. O(2·edges) rows, the same storage
+    # contract as the edge checkpoint above.
+    nbrt = nbrt.localCheckpoint()
     # Re-spread the probe side before the fan-out join: the neighbor list
     # is small, so AQE coalesces its shuffle to a couple of partitions —
     # and the deg²/2-amplified join OUTPUT inherits that, serializing the
@@ -530,7 +522,6 @@ def jaccard_link_pred(
     dst_col: str = "w",
     min_common: int = 2,
     top_k: int = 5,
-    materialize: bool = True,
     max_degree: int = 10000,
     metrics: dict | None = None,
 ) -> DataFrame:
@@ -551,8 +542,7 @@ def jaccard_link_pred(
     ).unionByName(
         edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
     )
-    if materialize:
-        sym = sym.localCheckpoint(eager=True)
+    sym = sym.localCheckpoint(eager=True)
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     # Hub cut (see adamic_adar): mediators with deg > max_degree are
     # excluded from candidate generation — deg(z)²/2 fan-out through one

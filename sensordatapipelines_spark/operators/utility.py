@@ -1330,7 +1330,6 @@ def dq_report(
     not_null: Sequence[str] = (),
     domain: dict[str, "F.Column"] | None = None,
     fks: Sequence[tuple[str, DataFrame, str]] = (),
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Declarative data-quality audit → long-format report
     ``(check string, value long)``: row count, per-column null counts,
@@ -1340,9 +1339,10 @@ def dq_report(
     100 TB shape: ``row_count`` + every ``null_*`` + every ``domain_*``
     fold into ONE full-scan aggregate (map-side combined, no shuffle —
     a single row of counters per task); the PK check is one groupBy on
-    the key; each FK is one LEFT ANTI join whose dim side is broadcast
-    when ``broadcast_dims`` (TPC-H-style dims; set False for fact-fact
-    integrity and let AQE pick). The unioned report is a handful of
+    the key; each FK is one LEFT ANTI join whose strategy the planner
+    picks by the dim side's size (a TPC-H-style dim broadcasts under
+    ``autoBroadcastJoinThreshold``, a fact-sized one shuffles, and AQE
+    re-plans from runtime sizes). The unioned report is a handful of
     1-row aggregates — the plan is N independent small jobs, not a
     monolith, so a scheduler can run them concurrently.
 
@@ -1383,10 +1383,9 @@ def dq_report(
         )
     for fk_col, dim, dim_key in fks:
         dim_keys = dim.select(F.col(dim_key).alias(fk_col)).distinct()
-        right = F.broadcast(dim_keys) if broadcast_dims else dim_keys
         orphans = (
             df.filter(F.col(fk_col).isNotNull())
-            .join(right, fk_col, "left_anti")
+            .join(dim_keys, fk_col, "left_anti")
             .agg(F.count(F.lit(1)).cast("long").alias("v"))
         )
         checks.append(

@@ -13,10 +13,10 @@ Scale shapes:
   exploded host-suffix set (bounded by label depth, ≤ ``max_labels``
   rows per url), never a ``LIKE '%…'`` scan — a per-pattern wildcard
   scan against a 100k-domain blocklist would be O(rows × patterns).
-  The blocklist side broadcasts only under a count gate (the
-  ``broadcast_loser_limit`` discipline): real blocklists are ~10⁵ rows
-  (broadcastable), but nothing OOMs if someone feeds a corpus-sized
-  "blocklist".
+  The blocklist side carries no hint: real blocklists are ~10⁵ rows and
+  the planner (then AQE, from runtime sizes) broadcasts them by size, so
+  nothing OOMs if someone feeds a corpus-sized "blocklist" and building
+  the plan runs no Spark job.
 - ``term_blocklist_score`` — pure map-side expressions over the token
   array (zero shuffle, scan-bandwidth bound). Term lists are small and
   bounded (C4's list is a few hundred entries), so they enter the plan
@@ -74,7 +74,6 @@ def url_host_filter(
     domain_col: str = "domain",
     mode: str = "annotate",
     max_labels: int = 5,
-    broadcast_blocklist_limit: int | None = 500_000,
 ) -> DataFrame:
     """Domain-blocklist filtering with registrable-suffix semantics: a row
     is blocked when its URL's host equals a blocklisted domain OR is a
@@ -87,9 +86,8 @@ def url_host_filter(
     set and the (normalized, distinct) blocklist — keyed, skew-bounded by
     label depth. Only ``(id, suffix)`` pairs ever shuffle: the verdict is
     computed on the slim projection and equi-joined back on ``id_col``,
-    so document payloads never ride the match shuffle. The blocklist
-    broadcasts only when its count clears ``broadcast_blocklist_limit``
-    (pass ``None`` to never force it)."""
+    so document payloads never ride the match shuffle. The planner picks
+    the blocklist join strategy by size (``autoBroadcastJoinThreshold``)."""
     if mode not in ("annotate", "drop", "quarantine"):
         raise ValueError(f"mode must be annotate|drop|quarantine, got {mode!r}")
     host = url_host_expr(F.col(url_col))
@@ -101,11 +99,6 @@ def url_host_filter(
     bl = blocklist.select(
         lower_ascii_expr(F.trim(F.col(domain_col))).alias("__sfx")
     ).distinct()
-    if (
-        broadcast_blocklist_limit is not None
-        and bl.count() <= broadcast_blocklist_limit
-    ):
-        bl = F.broadcast(bl)
     # shortest match = the registrable domain actually listed; min_by over
     # (len, sfx) struct is deterministic on length ties
     verdict = (

@@ -13,11 +13,12 @@ execution of Spark) and assert the HUGEINT class never reappears.
 """
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry
 from tools.check_oracle import _connect_duck

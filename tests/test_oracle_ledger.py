@@ -18,10 +18,9 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
-
 ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 LEDGER = ROOT / "LOCAL_ORACLE.json"
 # Adversarial-twin ledgers (tools/adversarial_testdata.py +
 # tools/typed_twin.py variants), one per oracle registration mode:

@@ -7,10 +7,12 @@ query without an audit row fails CI until tools/plan_audit.py is re-run.
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
-AUDIT = "/root/repo/PLAN_AUDIT.json"
+AUDIT = ROOT / "PLAN_AUDIT.json"
 
 # BNLJ is legitimate ONLY as a documented broadcast-dim / scalar-literal
 # pattern; every query allowed to carry one is listed here explicitly so a

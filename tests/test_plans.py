@@ -7,11 +7,12 @@ when every value is still correct (SURVEY.md §4).
 """
 
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF = "/root/testdata/sf0.001"
 
@@ -413,13 +414,12 @@ def test_incremental_neardedup_no_cross_product(spark):
     assert "LeftAnti" in plan
 
 
-def test_pairwise_sizes_broadcast_is_gated_not_forced(spark):
-    """The per-document sizes joins in jaccard_pairs/containment_pairs must
-    not carry an unconditional broadcast hint: sizes is |corpus| rows — a
-    forced broadcast is an OOM at 100 TB scale. Below the count gate the
-    hint applies (small-corpus fast path); with the gate disabled the
-    analyzed plan carries NO broadcast hints at all (max_shingle_df=None
-    also drops the hot-set hint), so AQE owns the strategy."""
+def test_pairwise_sizes_broadcast_is_planner_chosen(spark):
+    """The per-document sizes joins in jaccard_pairs/containment_pairs
+    carry no broadcast hint: sizes is |corpus| rows, and a forced
+    broadcast is an OOM at 100 TB scale. The planner picks the strategy by
+    size, so a small corpus still broadcasts its sizes without a hint
+    (max_shingle_df=None also drops the hot-set hint)."""
     from sensordatapipelines_spark.operators.dedup import (
         containment_pairs,
         jaccard_pairs,
@@ -433,15 +433,16 @@ def test_pairwise_sizes_broadcast_is_gated_not_forced(spark):
     def hints(df):
         return df._jdf.queryExecution().analyzed().toString().count("ResolvedHint")
 
-    # containment emits both directions from ONE pass (2-struct explode),
-    # so both operators carry exactly the two size-side hints when gated
-    for op in (jaccard_pairs, containment_pairs):
-        assert hints(op(docs, n=2, max_shingle_df=None, broadcast_sizes_limit=0)) == 0
-        assert hints(op(docs, n=2, max_shingle_df=None)) == 2  # gate engaged
-        # results identical either way (tiny corpus, both paths exact)
-        a = sorted(map(tuple, op(docs, n=2, threshold=0.5, broadcast_sizes_limit=0).collect()))
-        b = sorted(map(tuple, op(docs, n=2, threshold=0.5).collect()))
-        assert a == b and a
+    # word bigrams: docs 1 and 2 share 4 of their 5 each (union 6)
+    expected = {
+        jaccard_pairs: [(1, 2, 4 / 6)],
+        containment_pairs: [(1, 2, 0.8), (2, 1, 0.8)],
+    }
+    for op, want in expected.items():
+        df = op(docs, n=2, threshold=0.5, max_shingle_df=None)
+        assert hints(df) == 0
+        assert sorted(map(tuple, df.collect())) == want
+        assert "BroadcastHashJoin" in _plan(df)
 
 
 def test_url_host_filter_keyed_join_no_cartesian(spark):

@@ -104,7 +104,9 @@ def test_ann_recall_pinned(spark):
     these numbers are measured and pinned, not assumed."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as e
 
     rows = {

@@ -393,11 +393,20 @@ def test_neardedup_loser_broadcast_is_gated(spark):
     """The loser-side broadcast is a HINT gated on actual loser count, not
     a forced plan choice: above the limit the optimized logical plan has no
     broadcast hint (AQE picks the anti-join strategy), below it the hint is
-    present. Results identical either way."""
+    present. Results identical either way.
+
+    The gate earns its count: the loser set reads a checkpoint, so without
+    the hint the planner shuffles the corpus for the anti-join before AQE
+    can turn it into a broadcast. The unhinted executed plan therefore
+    carries more hash exchanges than the hinted one."""
     from sensordatapipelines_spark.operators.dedup import neardedup_corpus
 
     def logical(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def hash_exchanges(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0].count("Exchange hashpartitioning")
 
     hinted = neardedup_corpus(_docs(spark), threshold=0.5)
     unhinted = neardedup_corpus(_docs(spark), threshold=0.5, broadcast_loser_limit=0)
@@ -406,6 +415,8 @@ def test_neardedup_loser_broadcast_is_gated(spark):
     assert sorted(r["doc_id"] for r in hinted.collect()) == sorted(
         r["doc_id"] for r in unhinted.collect()
     )
+    # counted after collect(): AQE finalizes the executed plan on execution
+    assert hash_exchanges(unhinted) > hash_exchanges(hinted)
 
 
 def test_jaccard_stop_shingle_drop_is_observable(spark):

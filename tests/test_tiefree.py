@@ -15,11 +15,12 @@ DuckDB agree at repr level — the same strictness as the driver's hash.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def _repr_frame(pdf: pd.DataFrame) -> pd.DataFrame:

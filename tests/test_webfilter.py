@@ -63,7 +63,7 @@ def test_url_host_filter_modes_and_suffix_semantics(spark):
         url_host_filter(_docs(spark), _bl(spark), mode="bogus")
 
 
-def test_url_host_filter_shortest_match_and_broadcast_gate(spark):
+def test_url_host_filter_shortest_match_and_no_build_job(spark):
     # host matching two entries -> blocked_by is the SHORTEST (registrable)
     docs = spark.createDataFrame(
         [(1, "https://a.b.example.com/x")], "doc_id long, url string"
@@ -71,16 +71,23 @@ def test_url_host_filter_shortest_match_and_broadcast_gate(spark):
     bl = spark.createDataFrame(
         [("b.example.com",), ("example.com",)], "domain string"
     )
-    assert (
-        url_host_filter(docs, bl, id_col="doc_id").collect()[0].blocked_by
-        == "example.com"
-    )
-    # count-gate: a limit below the blocklist size must not force the
-    # broadcast hint (AQE may still pick broadcast for a tiny side; the
-    # check is that the un-hinted plan builds and runs)
-    assert url_host_filter(
-        docs, bl, id_col="doc_id", broadcast_blocklist_limit=1
-    ).count() == 1
+    # building the plan runs no Spark job: the join strategy is the
+    # planner's choice, not bought with a count of the blocklist
+    sc = spark.sparkContext
+    sc.setJobGroup("url_host_filter_build", "plan build only")
+    try:
+        out = url_host_filter(docs, bl, id_col="doc_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("url_host_filter_build") == []
+    assert out.collect()[0].blocked_by == "example.com"
+    # unhinted, the small blocklist still broadcasts into the suffix join
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ResolvedHint" not in out._jdf.queryExecution().analyzed().toString()
+    assert any(
+        "BroadcastHashJoin [__sfx" in ln for ln in plan.splitlines()
+    ), plan
 
 
 def test_term_blocklist_score_counts_and_gate(spark):

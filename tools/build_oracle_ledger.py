@@ -30,9 +30,11 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+TOOLS = Path(__file__).resolve().parent
+sys.path.insert(0, str(TOOLS.parent))
+sys.path.insert(0, str(TOOLS))
 
 from check_oracle import run_checks  # noqa: E402
 
@@ -65,9 +67,7 @@ def main() -> int:
         results = run_checks(spark, sf_dir, verbose=True, pandas_views=pandas_views)
         ledger[key] = results
         n_fail += sum(1 for r in results.values() if r["status"] == "fail")
-    out = out or os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "LOCAL_ORACLE.json"
-    )
+    out = out or str(TOOLS.parent / "LOCAL_ORACLE.json")
     with open(out, "w") as f:
         json.dump(ledger, f, indent=1, sort_keys=True)
     print(f"wrote {out}; {n_fail} failures total")

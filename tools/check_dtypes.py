@@ -13,6 +13,7 @@ Usage: python tools/check_dtypes.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 
 def kind(dtype) -> str:
@@ -31,7 +32,7 @@ def kind(dtype) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import duckdb
 
     import __spark_entry__ as entrymod

@@ -21,10 +21,14 @@ from __future__ import annotations
 import hashlib
 import json
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
+
+# The checkout this file lives in: its __spark_entry__ is the one checked.
+REPO = Path(__file__).resolve().parents[1]
 
 
 def canon(df: pd.DataFrame, strict_float: bool = True) -> pd.DataFrame:
@@ -122,7 +126,7 @@ def run_checks(
     spark, sf_dir: str, names=None, verbose: bool = True, pandas_views: bool = False
 ) -> dict:
     """Run the strict Spark-vs-DuckDB comparison; return per-query records."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO))
     import __spark_entry__ as entrymod
 
     con = _connect_duck(sf_dir, entrymod.TABLES, pandas_views=pandas_views)
@@ -213,7 +217,7 @@ def main() -> int:
         args = args[2:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO))
     from sensordatapipelines_spark import get_spark
 
     spark = get_spark(shuffle_partitions=16)

@@ -26,8 +26,10 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 SKIP_PREFIXES = ("events_stream_",)  # streaming: executes on build
 
@@ -78,7 +80,7 @@ def audit_plan(plan: str) -> dict:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/PLAN_AUDIT.json"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else str(REPO / "PLAN_AUDIT.json")
 
     import __spark_entry__ as entrymod
     from sensordatapipelines_spark import get_spark
