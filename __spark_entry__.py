@@ -5397,39 +5397,6 @@ def zones_wkb_holes_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def zones_wkb_polygon_agg_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The WKB polygon zonal aggregation through the VECTORIZED numpy
-    ray-cast kernel (``engine='kernel'``) — bit-equal results to the
-    expression-fold join (same oracle SQL). The kernel is the scale path
-    for realistic boundary complexity: measured 1.75x at 128-vertex rings
-    on a 1M-point stream, growing with vertex count; a tie at this bench's
-    toy 3-4-vertex zones (SCALE.md 'ray-cast kernel')."""
-    from sensordatapipelines_spark.operators.spatial import (
-        encode_wkb_polygon,
-        parse_wkb_polygons,
-        polygon_zonal_aggregate,
-    )
-
-    _register_views(spark, sf_dir)
-    wkb = spark.createDataFrame(
-        [(zid, encode_wkb_polygon(parts)) for zid, parts in WKB_ZONES],
-        "zone_id long, geometry binary",
-    )
-    zones = parse_wkb_polygons(wkb).drop("geometry")
-    out = polygon_zonal_aggregate(
-        _sensors(spark),
-        zones,
-        value_cols=["val"],
-        funcs=("mean", "max"),
-        source_name="pts",
-        engine="kernel",
-    )
-    return out.groupBy("zone_id").agg(
-        (F.round((F.first("mean_pts_val")) * F.lit(1e6)) / F.lit(1e6)).alias("mean_pts_val"),
-        (F.round((F.first("max_pts_val")) * F.lit(1e6)) / F.lit(1e6)).alias("max_pts_val"),
-    )
-
-
 def _stage_ascii_grid(spark: SparkSession, sf_dir: str) -> str:
     """Stage the synthetic raster (2 bands × 64×64, the CELLS formula
     ``(px·31 + py·17 + band·7) mod 101``, nodata = 0) as real ESRI
@@ -9391,7 +9358,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_char_entropy": docs_char_entropy,
         "docs_bigram_topk": docs_bigram_topk,
         "zones_wkb_polygon_agg": zones_wkb_polygon_agg,
-        "zones_wkb_polygon_agg_kernel": zones_wkb_polygon_agg_kernel,
         "zones_wkb_holes_agg": zones_wkb_holes_agg,
         "zones_geojson_ingest": zones_geojson_ingest,
         "zones_geojson_holes_agg": zones_geojson_holes_agg,
@@ -12458,8 +12424,6 @@ def oracle_sql() -> dict[str, str]:
         LEFT JOIN hits h ON h.zone_id = z.zone_id
         GROUP BY z.zone_id
     """
-    # kernel twin: identical results by construction -> identical oracle
-    oracles["zones_wkb_polygon_agg_kernel"] = oracles["zones_wkb_polygon_agg"]
     # GeoJSON ingestion stages the SAME zone vertices (JSON double
     # round-trip is bit-exact) and runs the same aggregation -> same oracle
     oracles["zones_geojson_ingest"] = oracles["zones_wkb_polygon_agg"]

@@ -52,34 +52,19 @@ def duplicate_groups(df: DataFrame, subset: Sequence[str], id_col: str) -> DataF
     )
 
 
-def word_ngrams_expr(text, n: int):
-    """Word n-gram shingles as an array column (space-joined), JVM-side:
-    ``transform(sequence(0, size-n), i -> concat_ws(' ', slice(tokens, i+1, n)))``.
-
-    The expression twin of ``word_ngrams_kernel`` — kept as the
-    zero-dependency reference (and the shape every SQL oracle mirrors);
-    the kernel is the default hot path because this HOF tree runs
-    INTERPRETED per gram (measured 6.7× slower at sf0.1 — SCALE.md)."""
-    toks = tokens_expr(text)
-    count = F.size(toks) - F.lit(n - 1)
-    return F.when(count <= 0, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), count - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
-
-
 def word_ngrams_kernel(n: int):
     """Arrow-batched shingle builder returning the IDENTICAL string array
-    as ``word_ngrams_expr`` (verified bit-equal): SPACE-only edge trim to
-    match Spark ``F.trim`` exactly (Python ``str.strip()`` would also eat
-    control chars and Unicode spaces the expr keeps, diverging the twins
-    on such inputs), ASCII ``\\s+`` split to match Java regex semantics,
-    space-joined n-token windows, [] for sub-n docs. Exists because the per-gram slice/concat HOF runs
-    interpreted in Catalyst and dominated every shingle-family operator
-    (jaccard/minhash/simhash/containment postings — measured 4.2 s →
-    0.6 s for the sf0.1 postings pass)."""
+    as the ``transform(sequence(0, size-n), i -> concat_ws(' ', slice(
+    tokens, i+1, n)))`` expression the SQL oracles mirror (verified
+    bit-equal in tests/test_text_dedup.py): SPACE-only edge trim to match
+    Spark ``F.trim`` exactly (Python ``str.strip()`` would also eat
+    control chars and Unicode spaces the expression keeps, diverging the
+    twins on such inputs), ASCII ``\\s+`` split to match Java regex
+    semantics, space-joined n-token windows, [] for sub-n docs. Exists
+    because the per-gram slice/concat HOF runs interpreted in Catalyst
+    and dominated every shingle-family operator (jaccard/minhash/simhash/
+    containment postings — measured 4.2 s → 0.6 s for the sf0.1 postings
+    pass)."""
     import re
 
     import pandas as pd
@@ -205,9 +190,6 @@ def jaccard_pairs(
     small aggregate over the materialized postings, negligible next to the
     candidate join. ``n_stop_shingles == 0`` certifies the guarded result
     is bit-identical to the exact (``max_shingle_df=None``) Jaccard.
-    (An ``Observation`` can't carry this: the guard's subtree is replicated
-    three times in the plan — both self-join sides and the size table — and
-    a CollectMetrics node observed from replicated subtrees fails.)
     """
     exploded, sizes = _shingle_postings(
         df, id_col, text_col, n, max_shingle_df, metrics
@@ -965,12 +947,13 @@ def decontaminate(
     ``n``-gram with a benchmark/eval document — the standard guard against
     test-set leakage into training data.
 
-    Plan shape: both sides shingle JVM-side (``word_ngrams_expr``), keyed by
-    the 8-byte ``xxhash64`` of the shingle, the benchmark side collapses to
-    DISTINCT hashes, and contaminated ids come from an equi-join. The final
-    filter is a LEFT ANTI join — no row of the corpus is ever widened, and
-    at 100 TB the benchmark shingle set (eval suites are small) broadcasts,
-    so the corpus is filtered map-side with zero shuffle of corpus rows.
+    Plan shape: both sides shingle in the Arrow kernel
+    (``word_ngrams_kernel``), keyed by the 8-byte ``xxhash64`` of the
+    shingle, the benchmark side collapses to DISTINCT hashes, and
+    contaminated ids come from an equi-join. The final filter is a LEFT
+    ANTI join — no row of the corpus is ever widened, and at 100 TB the
+    benchmark shingle set (eval suites are small) broadcasts, so the
+    corpus is filtered map-side with zero shuffle of corpus rows.
     """
     corpus_sh = spread_by(
         corpus.select(F.col(id_col).alias("__cid"), F.col(text_col)), "__cid"
@@ -1608,7 +1591,6 @@ def winnowing_fingerprints(
     text_col: str = "text",
     k: int = 8,
     window: int = 4,
-    engine: str = "kernel",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken 2003 —
     the MOSS local-fingerprint scheme) → ``(id, n_grams, n_fps,
@@ -1630,7 +1612,7 @@ def winnowing_fingerprints(
     selection bit-exactly. ``fp_checksum`` (Σ fp mod P) pins the exact
     fingerprint SET in the oracle without shipping it; ``n_grams`` is
     the map-side ``max(len − k + 1, 0)`` — no second scan."""
-    sets = _winnow_fp_sets(df, id_col, text_col, k, window, engine)
+    sets = _winnow_fp_sets(df, id_col, text_col, k, window)
     per_doc = sets.groupBy("__id").agg(
         F.count(F.lit(1)).alias("n_fps"),
         (F.sum("fp") % F.lit(POLY_MOD)).alias("fp_checksum"),
@@ -1656,16 +1638,16 @@ def winnowing_fingerprints(
 def _winnow_kernel(k: int, window: int):
     """Arrow kernel for the winnowing selection: per doc, codepoint
     array → all k-gram poly hashes via a k-step vectorized Horner fold
-    with a PER-STEP mod (bit-equal to the expression twin's
-    ``poly_hash_expr`` fold by construction, and overflow-free for ANY
-    ``k``: the intermediate is < 31·2³¹ + 0x10FFFF ≪ 2⁶³ — the earlier
-    one-matmul form silently wrapped int64 at k ≥ 10 on astral text) →
+    with a PER-STEP mod (bit-equal to the ``poly_hash_expr`` fold by
+    construction, and overflow-free for ANY ``k``: the intermediate is
+    < 31·2³¹ + 0x10FFFF ≪ 2⁶³ — the earlier one-matmul form silently
+    wrapped int64 at k ≥ 10 on astral text) →
     affine scramble → sliding-window min → unique. Document ids pass
     through UNTOUCHED at their native type (string ids must not be
-    coerced). The expression twin (``engine='expr'``) is the
-    oracle-shaped form; the kernel is the hot path (the per-gram
-    ``split``+fold expression costs ~18 s at sf0.1 where this runs in
-    ~1 s — the PQ/DSIR Arrow-kernel lesson)."""
+    coerced). The posexplode + window-min expression the DuckDB oracle
+    mirrors (the reference in tests/test_winnowing.py) selects the same
+    set but costs ~18 s at sf0.1 where this runs in ~1 s — the PQ/DSIR
+    Arrow-kernel lesson."""
     import numpy as np
     import pandas as pd
 
@@ -1724,61 +1706,23 @@ def _winnow_fp_sets(
     text_col: str,
     k: int,
     window: int,
-    engine: str = "kernel",
 ) -> DataFrame:
     """Shared fingerprint-set builder: distinct ``(__id, fp)`` rows (the
-    winnowing selection, before per-doc aggregation). ``engine='kernel'``
-    (default) is the Arrow path; ``engine='expr'`` keeps the pure-JVM
-    posexplode + window-min form the DuckDB oracle mirrors — twin-tested
-    bit-equal."""
-    from sensordatapipelines_spark.operators.sketches import CMS_A, CMS_B
-
+    winnowing selection, before per-doc aggregation), computed by the
+    Arrow kernel ``_winnow_kernel``."""
     if int(k) < 1:
         raise ValueError(f"winnowing k-gram size must be >= 1, got {k}")
+    if int(window) < 1:
+        raise ValueError(f"winnowing window must be >= 1, got {window}")
     norm = F.regexp_replace(lower_ascii_expr(F.trim(F.col(text_col))), "[ \\t\\n\\x0b\\f\\r]+", " ")
-    if engine == "kernel":
-        # id passes through at its NATIVE type (string doc ids must not
-        # collapse to NULL under a long cast)
-        id_type = df.schema[id_col].dataType.simpleString()
-        base = df.select(F.col(id_col).alias("__id"), norm.alias("__t"))
-        return base.mapInPandas(
-            _winnow_kernel(int(k), int(window)),
-            schema=f"__id {id_type}, fp long",
-        ).distinct()
-    n = F.length(norm)
-    grams = df.select(
-        F.col(id_col).alias("__id"),
-        norm.alias("__t"),
-        F.explode(
-            F.when(
-                n >= F.lit(int(k)), F.sequence(F.lit(1), n - F.lit(int(k) - 1))
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("__pos"),
-    )
-    gram = F.col("__t").substr(F.col("__pos"), F.lit(int(k)))
-    hashed = grams.select(
-        "__id",
-        "__pos",
-        (
-            (F.lit(CMS_A[0]) * poly_hash_expr(gram) + F.lit(CMS_B[0]))
-            % F.lit(POLY_MOD)
-        ).alias("__h"),
-    )
-    w = (
-        Window.partitionBy("__id")
-        .orderBy(F.asc_nulls_last("__pos"))
-        .rowsBetween(Window.currentRow, int(window) - 1)
-    )
-    return (
-        hashed.withColumn("__wmin", F.min("__h").over(w))
-        .withColumn("__n", F.max("__pos").over(Window.partitionBy("__id")))
-        .filter(
-            (F.col("__pos") <= F.col("__n") - F.lit(int(window) - 1))
-            | (F.col("__pos") == F.lit(1))
-        )
-        .select("__id", F.col("__wmin").alias("fp"))
-        .distinct()
-    )
+    # id passes through at its NATIVE type (string doc ids must not
+    # collapse to NULL under a long cast)
+    id_type = df.schema[id_col].dataType.simpleString()
+    base = df.select(F.col(id_col).alias("__id"), norm.alias("__t"))
+    return base.mapInPandas(
+        _winnow_kernel(int(k), int(window)),
+        schema=f"__id {id_type}, fp long",
+    ).distinct()
 
 
 @register("winnowing_pairs")
@@ -1790,7 +1734,6 @@ def winnowing_pairs(
     window: int = 4,
     min_shared: int = 2,
     max_df: int | None = None,
-    engine: str = "kernel",
 ) -> DataFrame:
     """Document pairs sharing winnowing fingerprints → ``(id_a, id_b,
     shared_fps, overlap)`` with ``overlap = shared / min(|A|, |B|)`` —
@@ -1809,7 +1752,7 @@ def winnowing_pairs(
     ``max_df`` documents are boilerplate, not evidence of copying, and
     are dropped BEFORE the join (the same ubiquitous-key guard as the
     boilerplate/stopword filters; also the f² bound for hot keys)."""
-    sets = _winnow_fp_sets(df, id_col, text_col, k, window, engine).localCheckpoint()
+    sets = _winnow_fp_sets(df, id_col, text_col, k, window).localCheckpoint()
     if max_df is not None:
         rare = (
             sets.groupBy("fp")

@@ -2,10 +2,11 @@
 
 Charter extension (SURVEY.md §2.7): brute-force cosine top-k as the exact
 baseline, and a seeded random-hyperplane LSH variant as the scale path
-(bucketed equi-join instead of a full cross product). All vector math is
-JVM-side (``zip_with`` + ``aggregate`` fold) in double precision — no Python
-in the hot path; at 100 TB the query side broadcasts and the corpus scan
-stays columnar.
+(bucketed equi-join instead of a full cross product). All vector math
+folds left to right in double precision, either JVM-side (``zip_with`` +
+``aggregate``) or in Arrow-batched numpy kernels that accumulate in the
+same order, so both forms are bit-identical; at 100 TB the query side
+broadcasts and the corpus scan stays columnar.
 """
 
 from __future__ import annotations
@@ -278,13 +279,6 @@ def ivf_dists_expr(vec: Column, centroids: list[list[float]]) -> Column:
     return F.array(*dists)
 
 
-def ivf_cell_expr(vec: Column, centroids: list[list[float]]) -> Column:
-    """IVF coarse quantization: index (1-based) of the nearest centroid,
-    first-minimum tiebreak."""
-    darr = ivf_dists_expr(vec, centroids)
-    return F.array_position(darr, F.array_min(darr))
-
-
 @register("ann_ivf_topk")
 def ann_ivf_topk(
     corpus: DataFrame,
@@ -310,9 +304,9 @@ def ann_ivf_topk(
     cell so probes never produce duplicate pairs).
 
     The corpus-side cell assignment runs in the Arrow argmin kernel
-    (``_cell_assign_udf``, bit-identical to ``ivf_cell_expr`` — see the
-    SCALE.md literal-centroid note); per-pair cosine precomputes norms
-    per row and evaluates one fold per pair."""
+    (``_cell_assign_udf``, bit-identical to the first-minimum argmin over
+    ``ivf_dists_expr`` — see the SCALE.md literal-centroid note); per-pair
+    cosine precomputes norms per row and evaluates one fold per pair."""
     cents = _ivf_centroids(dim, n_cells, seed)
     c = corpus.select(
         F.col(id_col).alias("__cid"),
@@ -442,7 +436,6 @@ def kmeans_assign(
     vec_col: str = "embedding",
     dim: int = 64,
     out_col: str = "cluster",
-    engine: str = "kernel",
 ) -> DataFrame:
     """Lloyd's k-means with fully deterministic init: the initial centroids
     are the vectors of the ``k`` LOWEST ids (no RNG — reproducible across
@@ -451,25 +444,19 @@ def kmeans_assign(
 
     Scale shape: each round, centroids are k × dim doubles — control-plane
     size — collected to the driver; assignment is map-side with zero
-    shuffle either way. ``engine="kernel"`` (default) assigns through the
-    Arrow-batched numpy argmin (``_cell_assign_udf``) — bit-identical to
-    the fold and free of the k×dim literal expression tree whose Catalyst
-    ANALYSIS cost dominates at small k (measured: the expression twin
-    spent its seconds planning, not executing). ``engine="expr"`` keeps
-    the pure-JVM literal-fold twin (``ivf_cell_expr``). The centroid
-    update is one ``groupBy(cluster)`` with per-dimension ``avg`` — k
-    output rows, full map-side partial aggregation; driver state is
-    O(k·dim), never O(rows) (same driver-iteration pattern as
-    ``dedup.duplicate_components``).
+    shuffle, through the Arrow-batched numpy argmin (``_cell_assign_udf``)
+    — bit-identical to the ``ivf_dists_expr`` fold and free of its k×dim
+    literal expression tree, whose Catalyst ANALYSIS cost dominates at
+    small k (measured: the expression form spent its seconds planning,
+    not executing). The centroid update is one ``groupBy(cluster)`` with
+    per-dimension ``avg`` — k output rows, full map-side partial
+    aggregation; driver state is O(k·dim), never O(rows) (same
+    driver-iteration pattern as ``dedup.duplicate_components``).
 
     An empty cluster keeps its previous centroid. Returns ``df`` plus the
     1-based final ``cluster`` column."""
-    cents = kmeans_fit(
-        df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, dim=dim, engine=engine
-    )
-    if engine == "kernel":
-        return df.withColumn(out_col, _cell_assign_udf(cents)(F.col(vec_col)))
-    return df.withColumn(out_col, ivf_cell_expr(F.col(vec_col), cents))
+    cents = kmeans_fit(df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, dim=dim)
+    return df.withColumn(out_col, _cell_assign_udf(cents)(F.col(vec_col)))
 
 
 def _cell_dist_udf(cents: list[list[float]]):
@@ -506,7 +493,8 @@ def _cell_dist_udf(cents: list[list[float]]):
 def _cell_assign_udf(cents: list[list[float]]):
     """Arrow-batched nearest-centroid kernel: vectorized over rows,
     sequential over dimensions per centroid, first-minimum tiebreak — the
-    IEEE-identical twin of ``ivf_cell_expr``'s fold, without the k×dim
+    IEEE-identical twin of the first-minimum argmin over the
+    ``ivf_dists_expr`` fold (tests/test_similarity.py), without the k×dim
     literal expression tree (whose Catalyst analysis time, not its
     execution, dominates small-k assignment — same lesson as the UTM
     expression bomb in SCALE.md)."""
@@ -539,7 +527,6 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    engine: str = "kernel",
 ) -> list[list[float]]:
     """The driver-side Lloyd loop behind ``kmeans_assign``: returns the
     final k × dim centroid matrix (control-plane size) so composing
@@ -556,13 +543,8 @@ def kmeans_fit(
     ]
     v = F.col(vec_col)
     for _ in range(iters):
-        cell = (
-            _cell_assign_udf(cents)(v)
-            if engine == "kernel"
-            else ivf_cell_expr(v, cents)
-        )
         assigned = df.select(
-            cell.alias("__c"),
+            _cell_assign_udf(cents)(v).alias("__c"),
             *[v[i].cast("double").alias(f"__d{i}") for i in range(dim)],
         )
         rows = (
@@ -609,7 +591,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    engine: str = "kernel",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): embedding-level semantic deduplication.
     Cluster with deterministic k-means, then WITHIN each cluster drop any
@@ -627,14 +608,11 @@ def semantic_dedup(
     exact ``cosine_expr`` arithmetic), so each candidate pair evaluates a
     single dot-product fold instead of dot + two norm folds — a measured
     ~3× cut of the interpreted higher-order-function work that dominates
-    this operator (Catalyst HOFs don't enter whole-stage codegen). With
-    ``engine="kernel"`` (default) the per-pair dot runs as an
-    Arrow-batched numpy kernel — vectorized over pairs, sequential over
-    dimensions, bit-identical to the fold (measured ~2× on top of the
-    norm precompute); ``engine="expr"`` keeps the pure-JVM fold twin."""
-    clustered = kmeans_assign(
-        df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, dim=dim, engine=engine
-    )
+    this operator (Catalyst HOFs don't enter whole-stage codegen). The
+    per-pair dot runs as an Arrow-batched numpy kernel (``_pair_dot_udf``)
+    — vectorized over pairs, sequential over dimensions, bit-identical to
+    the ``dot_expr`` fold (measured ~2× on top of the norm precompute)."""
+    clustered = kmeans_assign(df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, dim=dim)
     # The clustered frame feeds both self-join sides and the final
     # anti-join, so the assignment kernel runs 3× — measured at bench
     # scale, cheaper than materializing it (3.4 vs 3.7 s). A caller whose
@@ -653,10 +631,7 @@ def semantic_dedup(
         on=(F.col("a.__cl") == F.col("b.__cl"))
         & (F.col("a.__id") < F.col("b.__id")),
     )
-    if engine == "kernel":
-        dot = _pair_dot_udf()(F.col("a.__v"), F.col("b.__v"))
-    else:
-        dot = dot_expr(F.col("a.__v"), F.col("b.__v"))
+    dot = _pair_dot_udf()(F.col("a.__v"), F.col("b.__v"))
     # No distinct on the loser side: LEFT ANTI is set-semantics on its
     # right input already, and the distinct was a whole extra
     # aggregate+exchange in the executed plan (guide §2.4 — the same
@@ -961,20 +936,6 @@ def hard_negatives(
     )
 
 
-def _sq_dist_expr(sub: Column, centroid: list[float]) -> Column:
-    """Left-fold squared L2 distance between a (cast-to-double) vector
-    slice and a literal centroid — the sequential accumulation order the
-    DuckDB oracle's ``list_reduce`` replays bit-for-bit."""
-    cent = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(
-            sub, cent, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def pq_seed_codebooks(
     df: DataFrame,
     m: int = 4,
@@ -1000,10 +961,12 @@ def pq_seed_codebooks(
 def _pq_assign_udf(codebooks: list[list[list[float]]]):
     """Arrow-batched PQ code kernel: for each subspace, vectorized
     rows × sequential sub-dimensions × first-minimum argmin — the
-    IEEE-identical twin of the ``_sq_dist_expr`` fold + ``array_position``
-    expression (same contract as ``_cell_assign_udf``; the m×k_codes
-    literal expression tree's Catalyst analysis time dominated the
-    encode at bench scale: 4.4 s for 5k vectors)."""
+    IEEE-identical twin of a left-fold squared-distance +
+    ``array_position`` expression, the shape the DuckDB oracle's
+    ``list_reduce`` replays (reference in tests/test_similarity.py; same
+    contract as ``_cell_assign_udf``). That expression's m×k_codes
+    literal tree spent its time in Catalyst analysis: 4.4 s to encode 5k
+    vectors at bench scale."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -1036,23 +999,15 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     out_col: str = "pq_code",
-    engine: str = "kernel",
 ) -> DataFrame:
     """Product-quantize vectors: split into ``m`` subspaces, assign each
     slice to its nearest codebook centroid (ties → smallest index) →
-    ``array<long>`` of m 1-based codes. Pure map-side expression (no
-    shuffle, no Python): at 100 TB the corpus compresses from
-    ``dim`` floats to ``m`` bytes per vector in one codegen'd scan —
-    the memory move that makes billion-vector ANN fit a cluster."""
-    if engine == "kernel":
-        return df.withColumn(out_col, _pq_assign_udf(codebooks)(F.col(vec_col)))
-    sub = len(codebooks[0][0])
-    codes = []
-    for j, cb in enumerate(codebooks):
-        sl = F.slice(F.col(vec_col), j * sub + 1, sub)
-        dists = F.array(*[_sq_dist_expr(sl, cent) for cent in cb])
-        codes.append(F.array_position(dists, F.array_min(dists)))
-    return df.withColumn(out_col, F.array(*codes))
+    ``array<long>`` of m 1-based codes. Map-side, no shuffle: one
+    Arrow-batched ``pandas_udf`` (``_pq_assign_udf``) per scan, so at
+    100 TB the corpus compresses from ``dim`` floats to ``m`` bytes per
+    vector in a single pass — the memory move that makes billion-vector
+    ANN fit a cluster."""
+    return df.withColumn(out_col, _pq_assign_udf(codebooks)(F.col(vec_col)))
 
 
 def _pq_lut_udf(cb: list[list[float]], j: int, sub: int):

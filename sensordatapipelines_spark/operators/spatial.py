@@ -949,7 +949,6 @@ def polygon_zonal_aggregate(
     poly_xs: str = "xs",
     poly_ys: str = "ys",
     poly_rings: str | None = None,
-    engine: str = "expr",
 ) -> DataFrame:
     """Per-polygon aggregation of the points inside it (true polygon zonal
     stats — the vector-geometry generalization of the circle-model A2).
@@ -967,18 +966,10 @@ def polygon_zonal_aggregate(
     the multi-ring even-odd cast (``point_in_rings_expr``); the bbox
     derives from the outer ring (holes lie inside it by validity).
 
-    ``engine="kernel"``: same results through a vectorized numpy
-    ``mapInPandas`` kernel — polygons collect driver-side (they already
-    broadcast, so this is the same "dim-sized" assumption) and each Arrow
-    batch of points evaluates all rings with numpy boolean algebra. The
-    per-pair arithmetic is term-for-term identical to the expression fold
-    (products and comparisons only — no accumulation-order hazard), so
-    results are bit-equal. When to use which (measured, 1M points): at
-    toy vertex counts (≤12) the engines tie (~2.1 s both); at realistic
-    boundary complexity (128-vertex ring) the kernel wins 1.75× (3.5 s →
-    2.0 s) and the gap grows with vertices — the expression fold pays
-    Catalyst per (pair, edge) while the kernel amortizes each edge across
-    the whole Arrow batch (SCALE.md "ray-cast kernel")."""
+    The residual fold pays Catalyst per (pair, edge): measured on 1M
+    points, ~2.1 s at ≤12-vertex rings and 3.5 s at a 128-vertex ring
+    (SCALE.md "Ray-cast cost"); realistic boundary complexity is where a
+    vectorized ray cast would pay."""
     rings_src = poly_rings
     if rings_src is None:
         polygons_r = polygons.withColumn(
@@ -1004,15 +995,12 @@ def polygon_zonal_aggregate(
         F.col(point_lat).alias("__py"),
         *[F.col(c) for c in value_cols],
     )
-    if engine == "kernel":
-        pairs = _polygon_pairs_kernel(s, p, poly_id_col, list(value_cols))
-    else:
-        bbox = (
-            F.col("__px").between(F.col("__bxmin"), F.col("__bxmax"))
-            & F.col("__py").between(F.col("__bymin"), F.col("__bymax"))
-        )
-        exact = point_in_rings_expr(F.col("__px"), F.col("__py"), F.col("__rings"))
-        pairs = F.broadcast(p).join(s, on=bbox & exact, how="inner")
+    bbox = (
+        F.col("__px").between(F.col("__bxmin"), F.col("__bxmax"))
+        & F.col("__py").between(F.col("__bymin"), F.col("__bymax"))
+    )
+    exact = point_in_rings_expr(F.col("__px"), F.col("__py"), F.col("__rings"))
+    pairs = F.broadcast(p).join(s, on=bbox & exact, how="inner")
     stats = pairs.groupBy(F.col(poly_id_col).alias("__pid")).agg(
         *build_agg_exprs(list(value_cols), funcs, source_name)
     )
@@ -1022,84 +1010,6 @@ def polygon_zonal_aggregate(
         )
         .drop("__pid")
     )
-
-
-def _polygon_pairs_kernel(
-    points: DataFrame, polygons: DataFrame, poly_id_col: str, value_cols: list[str]
-) -> DataFrame:
-    """Vectorized (point, polygon) pair generation: polygons (a dim —
-    bounded, already destined for a broadcast) collect to the driver as
-    plain ring arrays; each Arrow batch of points evaluates bbox + the
-    multi-ring even-odd cast with numpy. Emits one output row per
-    containing (point, polygon) pair — the same stream the expression
-    join produces, feeding the same aggregation. Comparisons mirror the
-    fold term-for-term: ``(yi > py) != (yj > py)`` and
-    ``px < (xj-xi)*(py-yi)/(yj-yi)+xi`` — products only, so IEEE-equal."""
-    import numpy as np
-
-    polys = [
-        (
-            r[poly_id_col],
-            [
-                (np.asarray(ring["xs"], dtype="float64"), np.asarray(ring["ys"], dtype="float64"))
-                for ring in r["__rings"]
-            ],
-            float(r["__bxmin"]),
-            float(r["__bxmax"]),
-            float(r["__bymin"]),
-            float(r["__bymax"]),
-        )
-        for r in polygons.select(
-            poly_id_col, "__rings", "__bxmin", "__bxmax", "__bymin", "__bymax"
-        ).collect()
-    ]
-    id_field = polygons.schema[poly_id_col]
-    out_schema = (
-        f"__px double, __py double, "
-        + ", ".join(f"{c} {points.schema[c].dataType.simpleString()}" for c in value_cols)
-        + f", {poly_id_col} {id_field.dataType.simpleString()}"
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px = pdf["__px"].to_numpy(dtype="float64")
-            py = pdf["__py"].to_numpy(dtype="float64")
-            for pid, rings, bxmin, bxmax, bymin, bymax in polys:
-                mask = (px >= bxmin) & (px <= bxmax) & (py >= bymin) & (py <= bymax)
-                if not mask.any():
-                    continue
-                spx, spy = px[mask], py[mask]
-                crossings = np.zeros(len(spx), dtype="int64")
-                for xs, ys in rings:
-                    n = len(xs)
-                    for i in range(n):
-                        xi, yi = xs[i], ys[i]
-                        xj, yj = xs[(i + 1) % n], ys[(i + 1) % n]
-                        if yj == yi:
-                            continue
-                        straddles = (yi > spy) != (yj > spy)
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            crosses = spx < (xj - xi) * (spy - yi) / (yj - yi) + xi
-                        crossings += (straddles & crosses).astype("int64")
-                inside = crossings % 2 == 1
-                if not inside.any():
-                    continue
-                sel = pdf.loc[mask].loc[inside]
-                out = pd.DataFrame(
-                    {
-                        "__px": spx[inside],
-                        "__py": spy[inside],
-                        **{c: sel[c].to_numpy() for c in value_cols},
-                    }
-                )
-                out[poly_id_col] = pid
-                yield out
-
-    return points.mapInPandas(gen, schema=out_schema)
 
 
 @register("parse_wkb_points")

@@ -138,14 +138,16 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _quality_kernel():
-    """Arrow quality-score kernel: ONE pass per document instead of the
-    expression form's 4-5 independent tokenizations through interpreted
-    HOFs. Bit-equal to the expr twin by construction: SPACE-only edge
-    trim + ASCII ``\\s+`` split (the proven ``word_ngrams_kernel``
-    tokenization contract), integer counts, and the identical left-
-    associated float arithmetic; rounding stays JVM-side so HALF_UP
-    semantics never enter Python. ASCII-lowering caveat shared with the
-    expr twin's oracle (both engines lower ASCII identically)."""
+    """Arrow quality-score kernel: ONE pass per document instead of 4-5
+    independent tokenizations through interpreted HOFs (measured ~3× on
+    the fused pipelines). Bit-equal by construction to the score composed
+    from ``text_stats``' feature expressions (the reference in
+    tests/test_text_dedup.py): SPACE-only edge trim + ASCII ``\\s+``
+    split (the ``word_ngrams_kernel`` tokenization contract), integer
+    counts, and the identical left-associated float arithmetic; rounding
+    stays JVM-side so HALF_UP semantics never enter Python. ASCII-lowering
+    caveat shared with the SQL oracles (both engines lower ASCII
+    identically)."""
     import re
 
     import pandas as pd
@@ -188,46 +190,26 @@ def quality_score(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "quality",
-    engine: str = "kernel",
 ) -> DataFrame:
     """Heuristic quality score in [0,1]: rewards mid-length docs, healthy
     token lengths and stopword presence; penalizes punctuation soup. A
-    deterministic, portable stand-in for a learned quality model.
-
-    ``engine='kernel'`` (default) runs the Arrow one-pass kernel —
-    bit-equal to the expression form (twin-tested), which re-tokenizes
-    the text once per feature through interpreted HOFs (measured ~3× on
-    the fused pipelines); ``engine='expr'`` keeps the pure-JVM twin, the
-    shape every SQL oracle mirrors."""
+    deterministic, portable stand-in for a learned quality model, scored
+    in one Arrow pass per document (``_quality_kernel``) and rounded to
+    6 places JVM-side."""
     t = F.col(text_col)
-    if engine == "kernel":
-        return df.withColumn(
-            out_col, (F.round((_quality_kernel()(t.cast("string"))) * F.lit(1e6)) / F.lit(1e6))
-        )
-    n_tok = token_count_expr(t).cast("double")
-    len_score = F.least(n_tok / F.lit(64.0), F.lit(1.0))
-    mtl = mean_token_len_expr(t)
-    tok_score = F.when((mtl >= 3.0) & (mtl <= 10.0), F.lit(1.0)).otherwise(F.lit(0.5))
-    stop_score = F.least(stopword_ratio_expr(t) * F.lit(4.0), F.lit(1.0))
-    punct_pen = F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio_expr(t) * F.lit(4.0))
-    score = (len_score + tok_score + stop_score + punct_pen) / F.lit(4.0)
-    return df.withColumn(out_col, (F.round((score) * F.lit(1e6)) / F.lit(1e6)))
-
-
-def lang_score_expr(text: Column, lang: str) -> Column:
-    toks = tokens_expr(lower_ascii_expr(text))
-    markers = LANG_MARKERS[lang]
-    hits = F.size(F.filter(toks, lambda t: t.isin(*markers))).cast("double")
-    n = F.size(toks)
-    return F.when(n > 0, hits / n.cast("double")).otherwise(F.lit(0.0))
+    return df.withColumn(
+        out_col, (F.round((_quality_kernel()(t.cast("string"))) * F.lit(1e6)) / F.lit(1e6))
+    )
 
 
 def _lang_id_kernel():
     """Arrow language-ID kernel: per-language marker ratios from ONE
     tokenization instead of |langs| independent HOF scans. The output is
-    the argmax STRING, so kernel/expr agreement needs only identical
-    ratio ORDERING — and the ratios themselves (int hits / int count in
-    float64) are bit-identical anyway."""
+    the argmax STRING, so agreement with the per-language marker-ratio
+    expression the SQL oracles mirror (the reference in
+    tests/test_text_dedup.py) needs only identical ratio ORDERING — and
+    the ratios themselves (int hits / int count in float64) are
+    bit-identical anyway."""
     import re
 
     import pandas as pd
@@ -263,28 +245,11 @@ def lang_id(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "lang_pred",
-    engine: str = "kernel",
 ) -> DataFrame:
     """Marker-word language ID: argmax over per-language marker-hit ratios,
     alphabetical tiebreak, 'und' (undetermined) when no marker hits.
-    ``engine='kernel'`` (default) tokenizes once in an Arrow kernel;
-    ``engine='expr'`` keeps the per-language HOF-scan twin the SQL
-    oracles mirror (twin-tested identical)."""
-    t = F.col(text_col)
-    if engine == "kernel":
-        return df.withColumn(out_col, _lang_id_kernel()(t.cast("string")))
-    scored = df
-    for lang in sorted(LANG_MARKERS):
-        scored = scored.withColumn(f"__sc_{lang}", lang_score_expr(t, lang))
-    best = F.greatest(*[F.col(f"__sc_{lang}") for lang in sorted(LANG_MARKERS)])
-    pred = F.lit("und")
-    # Reverse alphabetical fold so the *alphabetically first* max wins.
-    for lang in sorted(LANG_MARKERS, reverse=True):
-        pred = F.when(
-            (best > 0) & (F.col(f"__sc_{lang}") == best), F.lit(lang)
-        ).otherwise(pred)
-    out = scored.withColumn(out_col, pred)
-    return out.drop(*[f"__sc_{lang}" for lang in LANG_MARKERS])
+    Tokenizes once per document in an Arrow kernel (``_lang_id_kernel``)."""
+    return df.withColumn(out_col, _lang_id_kernel()(F.col(text_col).cast("string")))
 
 
 POLY_MOD = 2147483647  # 2^31 - 1
@@ -876,42 +841,13 @@ def filter_length_outliers(
     )
 
 
-def max_repeat_count_expr(arr: Column) -> Column:
-    """Count of the most frequent element of a string array, computed as
-    the longest run in the SORTED array — a per-row ``array_sort`` +
-    ``aggregate`` fold. Zero shuffle: the alternative (explode → groupBy
-    (doc, gram) → max per doc → join back) costs two shuffles of the
-    exploded table; this stays inside whole-stage codegen and scales with
-    scan bandwidth. Empty array → 0."""
-    s = F.array_sort(arr)
-    return F.aggregate(
-        s,
-        F.struct(
-            F.lit("").alias("prev"),
-            F.lit(0).alias("run"),
-            F.lit(0).alias("best"),
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc["prev"], acc["run"] + 1)
-            .otherwise(F.lit(1))
-            .alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda acc: acc["best"],
-    )
-
-
 def _max_count_udf():
     """Arrow-batched most-frequent-element counter for a string-array
     column: ``np.unique`` with counts per row. Integer output — any
     method that counts the same elements is bit-identical, so this kernel
-    and the ``max_repeat_count_expr`` fold are exact twins; the kernel
-    exists because the per-row struct fold runs INTERPRETED in Catalyst
-    (measured: it dominated gopher_quality's runtime)."""
+    and the sorted-run struct fold in tests/test_text_dedup.py are exact
+    twins; the kernel exists because that fold runs INTERPRETED in
+    Catalyst (measured: it dominated gopher_quality's runtime)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -939,7 +875,6 @@ def gopher_quality(
     max_top_bigram_frac: float = 0.15,
     max_dup_unigram_frac: float = 0.6,
     min_stop_hits: int = 1,
-    engine: str = "kernel",
 ) -> DataFrame:
     """Gopher-style repetition/quality signals (Rae et al. 2021 §A1.1's
     heuristics re-expressed for word-soup corpora), one row per document:
@@ -953,14 +888,12 @@ def gopher_quality(
       filter": real prose contains at least a couple),
     - ``keep`` = AND of all gates.
 
-    Everything is map-side and ZERO-shuffle either way, scaling with scan
-    bandwidth at 100 TB. The most-frequent-bigram count is integer-exact
-    under both engines: ``engine="kernel"`` (default) uses the
-    Arrow-batched ``np.unique`` counter (the per-row struct fold runs
-    interpreted in Catalyst and measured as the operator's hot spot);
-    ``engine="expr"`` keeps the pure-JVM sorted-run fold
-    (``max_repeat_count_expr``). Reference has no equivalent; charter
-    extension per the training-data-pipeline brief (SURVEY.md §2.7)."""
+    Everything is map-side and ZERO-shuffle, scaling with scan bandwidth
+    at 100 TB. The most-frequent-bigram count is integer-exact through
+    the Arrow-batched ``np.unique`` counter (``_max_count_udf``; a per-row
+    struct fold runs interpreted in Catalyst and measured as the
+    operator's hot spot). Reference has no equivalent; charter extension
+    per the training-data-pipeline brief (SURVEY.md §2.7)."""
     t = F.col(text_col)
     toks = tokens_expr(t)
     toks_l = tokens_expr(lower_ascii_expr(t))
@@ -968,11 +901,7 @@ def gopher_quality(
     nd = F.size(F.array_distinct(toks))
     from sensordatapipelines_spark.operators.dedup import word_ngrams_kernel
 
-    bigrams = word_ngrams_kernel(2)(t)
-    if engine == "kernel":
-        top_bg = _max_count_udf()(bigrams)
-    else:
-        top_bg = max_repeat_count_expr(bigrams)
+    top_bg = _max_count_udf()(word_ngrams_kernel(2)(t))
     dup_uni = F.when(
         n > 0, F.lit(1.0) - nd.cast("double") / n.cast("double")
     ).otherwise(F.lit(0.0))
@@ -1251,7 +1180,6 @@ def dsir_importance_weights(
     target_text_col: str | None = None,
     n_buckets: int = 10_000,
     alpha: float = 1.0,
-    engine: str = "kernel",
 ) -> DataFrame:
     """DSIR (Xie et al. 2023, "Data Selection for Language Models via
     Importance Resampling"): score every raw document by how much it looks
@@ -1278,28 +1206,16 @@ def dsir_importance_weights(
     scaled BIGINTs (the ``unigram_logprob`` contract) — the per-document
     weight is independent of float summation order, bit-identical across
     engines. Zero-feature documents carry weight 0.0 (empty product).
-
-    ``engine="kernel"`` builds bigrams with the Arrow shingle kernel
-    (bit-equal twin of the HOF expression); ``engine="expr"`` stays pure
-    JVM."""
-    from sensordatapipelines_spark.operators.dedup import word_ngrams_expr
-
+    Features hash in one Arrow pass per document (``hashed_bucket_kernel``)."""
     tcol = target_text_col or text_col
 
     def feature_stream(frame: DataFrame, col: str, idc: str | None) -> DataFrame:
-        t = lower_ascii_expr(F.col(col))
         cols = [F.col(idc).alias("__id")] if idc else []
-        if engine == "kernel":
-            # one Arrow pass: tokenize + bigram + memoized poly-hash bucket
-            # (the per-char aggregate HOF below runs interpreted per
-            # feature occurrence and dominated this operator's runtime)
-            return frame.select(
-                *cols,
-                F.explode(hashed_bucket_kernel(n_buckets)(t)).alias("__b"),
-            )
-        feats = F.concat(tokens_expr(t), word_ngrams_expr(t, 2))
-        return frame.select(*cols, F.explode(feats).alias("__f")).withColumn(
-            "__b", poly_hash_expr(F.col("__f")) % F.lit(n_buckets)
+        return frame.select(
+            *cols,
+            F.explode(
+                hashed_bucket_kernel(n_buckets)(lower_ascii_expr(F.col(col)))
+            ).alias("__b"),
         )
 
     raw_stream = feature_stream(df, text_col, id_col)
@@ -1371,7 +1287,8 @@ def hashed_bucket_kernel(n_buckets: int):
     ``dsir_importance_weights`` (measured: the hash fold is the hot spot,
     same pathology ``word_ngrams_kernel`` fixed for the shingle family).
 
-    Bit-equal contract with the expression path: SPACE-only edge trim
+    Bit-equal contract with the ``poly_hash_expr`` feature expression
+    (the reference in tests/test_text_dedup.py): SPACE-only edge trim
     (Spark ``F.trim``), ASCII ``\\s+`` split (Java regex semantics),
     space-joined bigrams, and the identical ``fold(31h + codepoint) mod
     2^31−1`` arithmetic (``ord`` ≡ Spark/DuckDB ``ascii`` code points —
@@ -1423,13 +1340,12 @@ def paragraph_lang_profile(
     id_col: str = "doc_id",
     text_col: str = "text",
     sep: str = "\n",
-    engine: str = "kernel",
 ) -> DataFrame:
     """Per-paragraph language profile — the mixed-language-document signal
     (FineWeb-style pipelines run language ID per LINE because a dominant-
     language score hides embedded foreign boilerplate): split on ``sep``,
-    language-ID every non-blank paragraph (the ``lang_id`` marker argmax,
-    same kernel/expr twins), and reduce per document to ``n_paras``,
+    language-ID every non-blank paragraph (the ``lang_id`` marker argmax),
+    and reduce per document to ``n_paras``,
     ``top_lang`` (majority language, count-desc then alphabetical
     tiebreak), ``top_frac`` and ``n_langs`` (distinct predictions, 'und'
     included). Documents whose ``top_frac`` is well under 1.0 are the
@@ -1443,7 +1359,7 @@ def paragraph_lang_profile(
         F.col(id_col).alias("__did"),
         F.explode(F.split(F.col(text_col), sep)).alias("__para"),
     ).filter(F.trim("__para") != "")
-    scored = lang_id(paras, text_col="__para", out_col="__lang", engine=engine)
+    scored = lang_id(paras, text_col="__para", out_col="__lang")
     counts = scored.groupBy("__did", "__lang").agg(F.count(F.lit(1)).alias("__c"))
     prof = counts.groupBy("__did").agg(
         F.sum("__c").alias("n_paras"),

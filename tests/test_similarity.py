@@ -10,6 +10,47 @@ from sensordatapipelines_spark.operators.similarity import (
 )
 
 
+# -- pure-JVM expression twins of the similarity kernels ---------------------
+# Each operator runs its Arrow kernel only; these literal-fold expressions
+# are the shape the DuckDB oracles mirror, kept here as the references the
+# twin tests compare the kernels against.
+
+
+def ivf_cell_expr(vec, centroids):
+    """Twin of ``_cell_assign_udf``: 1-based index of the nearest
+    centroid over the ``ivf_dists_expr`` folds, first-minimum tiebreak."""
+    from sensordatapipelines_spark.operators.similarity import ivf_dists_expr
+
+    darr = ivf_dists_expr(vec, centroids)
+    return F.array_position(darr, F.array_min(darr))
+
+
+def _sq_dist_expr(sub, centroid):
+    """Left-fold squared L2 distance between a (cast-to-double) vector
+    slice and a literal centroid — the accumulation order the DuckDB
+    oracle's ``list_reduce`` replays."""
+    cent = F.array(*[F.lit(float(x)) for x in centroid])
+    return F.aggregate(
+        F.zip_with(
+            sub, cent, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def pq_codes_expr(vec, codebooks):
+    """Twin of ``_pq_assign_udf``: per subspace, the 1-based index of the
+    nearest codebook centroid (first-minimum tiebreak)."""
+    sub = len(codebooks[0][0])
+    codes = []
+    for j, cb in enumerate(codebooks):
+        sl = F.slice(vec, j * sub + 1, sub)
+        dists = F.array(*[_sq_dist_expr(sl, cent) for cent in cb])
+        codes.append(F.array_position(dists, F.array_min(dists)))
+    return F.array(*codes)
+
+
 def _emb(spark):
     return spark.createDataFrame(
         [
@@ -240,21 +281,40 @@ def test_cluster_coverage_sample_selects_prototypes(spark):
 
 def test_kmeans_kernel_expr_twins_identical(spark):
     """The Arrow argmin kernel and the literal-fold expression are exact
-    twins: identical assignments on the same frame."""
-    from sensordatapipelines_spark.operators.similarity import kmeans_assign
+    twins: identical assignments on the same frame, at the initial
+    (k lowest ids) centroids and at every Lloyd iterate."""
+    from sensordatapipelines_spark.operators.similarity import (
+        _cell_assign_udf,
+        kmeans_assign,
+        kmeans_fit,
+    )
 
     import numpy as np
 
     rng = np.random.default_rng(3)
     vecs = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(60)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    a = sorted(map(tuple, kmeans_assign(df, k=4, iters=2, dim=8, engine="kernel").select("vec_id", "cluster").collect()))
-    b = sorted(map(tuple, kmeans_assign(df, k=4, iters=2, dim=8, engine="expr").select("vec_id", "cluster").collect()))
-    assert a == b
+    v = F.col("embedding")
+    for iters in (0, 1, 2):
+        cents = kmeans_fit(df, k=4, iters=iters, dim=8)
+        a = sorted(map(tuple, df.select("vec_id", _cell_assign_udf(cents)(v)).collect()))
+        b = sorted(map(tuple, df.select("vec_id", ivf_cell_expr(v, cents)).collect()))
+        assert a == b, iters
+    assigned = kmeans_assign(df, k=4, iters=2, dim=8).select("vec_id", "cluster")
+    assert sorted(map(tuple, assigned.collect())) == b
 
 
 def test_semantic_dedup_kernel_expr_twins_identical(spark):
-    from sensordatapipelines_spark.operators.similarity import semantic_dedup
+    """The steps where SemDeDup's kernel and expression forms differ —
+    cluster assignment and the per-pair dot — agree bit-for-bit on every
+    candidate pair of a near-duplicate corpus."""
+    from sensordatapipelines_spark.operators.similarity import (
+        _cell_assign_udf,
+        _pair_dot_udf,
+        dot_expr,
+        kmeans_fit,
+        semantic_dedup,
+    )
 
     import numpy as np
 
@@ -265,10 +325,27 @@ def test_semantic_dedup_kernel_expr_twins_identical(spark):
         rows.append((2 * i, [float(x) for x in base[i]]))
         rows.append((2 * i + 1, [float(x) for x in base[i] * 1.0001]))  # near-dup
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = sorted(r["vec_id"] for r in semantic_dedup(df, k=2, iters=1, dim=8, engine="kernel").collect())
-    b = sorted(r["vec_id"] for r in semantic_dedup(df, k=2, iters=1, dim=8, engine="expr").collect())
+    v = F.col("embedding")
+    cents = kmeans_fit(df, k=2, iters=1, dim=8)
+    a = sorted(map(tuple, df.select("vec_id", _cell_assign_udf(cents)(v)).collect()))
+    b = sorted(map(tuple, df.select("vec_id", ivf_cell_expr(v, cents)).collect()))
     assert a == b
-    assert len(a) < 20  # some near-dups dropped
+    pairs = df.alias("a").join(df.alias("b"), F.col("a.vec_id") < F.col("b.vec_id"))
+    dots = {
+        name: {
+            (r.ia, r.ib): r.d
+            for r in pairs.select(
+                F.col("a.vec_id").alias("ia"), F.col("b.vec_id").alias("ib"), dot.alias("d")
+            ).collect()
+        }
+        for name, dot in (
+            ("kernel", _pair_dot_udf()(F.col("a.embedding"), F.col("b.embedding"))),
+            ("expr", dot_expr(F.col("a.embedding"), F.col("b.embedding"))),
+        )
+    }
+    assert dots["kernel"] == dots["expr"]
+    kept = sorted(r["vec_id"] for r in semantic_dedup(df, k=2, iters=1, dim=8).collect())
+    assert len(kept) < 20  # some near-dups dropped
 
 
 def test_semantic_dedup_resolves_and_runs_via_registry(spark):
@@ -425,8 +502,11 @@ def test_pq_encode_kernel_expr_twins_bit_identical(spark):
         "vec_id long, embedding array<float>",
     )
     cbs = pq_seed_codebooks(df, m=4, k_codes=8, dim=16)
-    kern = {r.vec_id: list(r.pq_code) for r in pq_encode(df, cbs, engine="kernel").collect()}
-    expr = {r.vec_id: list(r.pq_code) for r in pq_encode(df, cbs, engine="expr").collect()}
+    kern = {r.vec_id: list(r.pq_code) for r in pq_encode(df, cbs).collect()}
+    expr = {
+        r.vec_id: list(r.c)
+        for r in df.select("vec_id", pq_codes_expr(F.col("embedding"), cbs).alias("c")).collect()
+    }
     assert kern == expr
 
 

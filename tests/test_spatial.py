@@ -642,42 +642,6 @@ def test_polygon_with_hole_even_odd(spark):
     assert out["sum_p_v"] == 40.0
 
 
-def test_polygon_zonal_kernel_engine_matches_expr(spark):
-    """engine='kernel' (vectorized numpy ray cast over Arrow batches) is
-    bit-equal to the expression-fold join — same pairs, same stats — on
-    multi-part AND holed polygons."""
-    from sensordatapipelines_spark.operators.spatial import (
-        encode_wkb_polygon,
-        parse_wkb_polygons,
-        polygon_zonal_aggregate,
-    )
-
-    sq1 = [(0.0, 0.0), (0.3, 0.0), (0.3, 0.3), (0.0, 0.3)]
-    sq2 = [(0.5, 0.5), (0.9, 0.5), (0.7, 0.9)]
-    zones = parse_wkb_polygons(
-        spark.createDataFrame(
-            [(1, encode_wkb_polygon([sq1, sq2])), (2, encode_wkb_polygon([[(2.0, 2.0), (2.5, 2.0), (2.2, 2.6)]]))],
-            "zone_id long, geometry binary",
-        ),
-        keep_holes=True,
-    )
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    pts = spark.createDataFrame(
-        [(float(x), float(y), float(v)) for x, y, v in rng.uniform(0, 1, (300, 3))],
-        "lon double, lat double, v double",
-    )
-    kwargs = dict(value_cols=["v"], funcs=("mean", "max"), source_name="p",
-                  poly_rings="rings")
-    a = {(r["zone_id"], r["part"]): (r["mean_p_v"], r["max_p_v"])
-         for r in polygon_zonal_aggregate(pts, zones, engine="expr", **kwargs).collect()}
-    b = {(r["zone_id"], r["part"]): (r["mean_p_v"], r["max_p_v"])
-         for r in polygon_zonal_aggregate(pts, zones, engine="kernel", **kwargs).collect()}
-    assert a == b and len(a) == 3
-    assert a[(2, 0)] == (None, None)  # far zone: NULL stats in both engines
-
-
 def test_ring_area_and_centroid_known_shapes(spark):
     """Unit square: area 1, centroid (0.5, 0.5) either winding; translated
     diamond of 'radius' r: area 2r^2, centroid at the center."""

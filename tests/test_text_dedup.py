@@ -33,6 +33,99 @@ def _docs(spark):
     )
 
 
+# -- pure-JVM expression twins of the text kernels ---------------------------
+# Each operator runs its Arrow kernel only; these expressions are the shape
+# the DuckDB oracles mirror, kept here as the references the twin tests
+# compare the kernels against.
+
+
+def word_ngrams_expr(text, n: int):
+    """Twin of ``word_ngrams_kernel``: ``transform(sequence(0, size-n),
+    i -> concat_ws(' ', slice(tokens, i+1, n)))``."""
+    from sensordatapipelines_spark.operators.text import tokens_expr
+
+    toks = tokens_expr(text)
+    count = F.size(toks) - F.lit(n - 1)
+    return F.when(count <= 0, F.array().cast("array<string>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(0), count - 1),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        )
+    )
+
+
+def max_repeat_count_expr(arr):
+    """Twin of ``_max_count_udf``: the count of the most frequent element
+    as the longest run in the SORTED array (``array_sort`` + struct fold).
+    Empty array → 0."""
+    s = F.array_sort(arr)
+    return F.aggregate(
+        s,
+        F.struct(
+            F.lit("").alias("prev"),
+            F.lit(0).alias("run"),
+            F.lit(0).alias("best"),
+        ),
+        lambda acc, x: F.struct(
+            x.alias("prev"),
+            F.when(x == acc["prev"], acc["run"] + 1)
+            .otherwise(F.lit(1))
+            .alias("run"),
+            F.greatest(
+                acc["best"],
+                F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
+            ).alias("best"),
+        ),
+        lambda acc: acc["best"],
+    )
+
+
+def quality_expr(t):
+    """Twin of ``_quality_kernel`` (unrounded), composed from the
+    ``text_stats`` feature expressions."""
+    from sensordatapipelines_spark.operators.text import (
+        mean_token_len_expr,
+        punct_ratio_expr,
+        stopword_ratio_expr,
+        token_count_expr,
+    )
+
+    n_tok = token_count_expr(t).cast("double")
+    len_score = F.least(n_tok / F.lit(64.0), F.lit(1.0))
+    mtl = mean_token_len_expr(t)
+    tok_score = F.when((mtl >= 3.0) & (mtl <= 10.0), F.lit(1.0)).otherwise(F.lit(0.5))
+    stop_score = F.least(stopword_ratio_expr(t) * F.lit(4.0), F.lit(1.0))
+    punct_pen = F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio_expr(t) * F.lit(4.0))
+    return (len_score + tok_score + stop_score + punct_pen) / F.lit(4.0)
+
+
+def lang_id_expr(t):
+    """Twin of ``_lang_id_kernel``: per-language marker-hit ratio scans,
+    argmax with alphabetical tiebreak, 'und' when no marker hits."""
+    from sensordatapipelines_spark.operators.text import (
+        LANG_MARKERS,
+        lower_ascii_expr,
+        tokens_expr,
+    )
+
+    toks = tokens_expr(lower_ascii_expr(t))
+    n = F.size(toks)
+    score = {
+        lang: F.when(
+            n > 0,
+            F.size(F.filter(toks, lambda x: x.isin(*LANG_MARKERS[lang]))).cast("double")
+            / n.cast("double"),
+        ).otherwise(F.lit(0.0))
+        for lang in sorted(LANG_MARKERS)
+    }
+    best = F.greatest(*score.values())
+    pred = F.lit("und")
+    # Reverse alphabetical fold so the *alphabetically first* max wins.
+    for lang in sorted(LANG_MARKERS, reverse=True):
+        pred = F.when((best > 0) & (score[lang] == best), F.lit(lang)).otherwise(pred)
+    return pred
+
+
 def test_text_stats_token_edges(spark):
     rows = {r["doc_id"]: r for r in text_stats(_docs(spark), "text").collect()}
     assert rows[1]["n_tokens"] == 9
@@ -555,8 +648,6 @@ def test_minhash_hot_bucket_cap_bounds_candidates(spark):
 
 
 def test_max_repeat_count_fold(spark):
-    from sensordatapipelines_spark.operators.text import max_repeat_count_expr
-
     df = spark.createDataFrame(
         [
             (1, ["a", "b", "a", "c", "a"]),   # 'a' ×3
@@ -756,7 +847,11 @@ def test_quality_weighted_sample_rates(spark):
 
 
 def test_gopher_kernel_expr_twins_identical(spark):
-    from sensordatapipelines_spark.operators.text import gopher_quality
+    """The ``np.unique`` max-count kernel and the sorted-run fold count
+    the most frequent bigram identically (the one step where
+    ``gopher_quality``'s kernel and expression forms differ)."""
+    from sensordatapipelines_spark.operators.dedup import word_ngrams_kernel
+    from sensordatapipelines_spark.operators.text import _max_count_udf
 
     docs = spark.createDataFrame(
         [
@@ -768,8 +863,9 @@ def test_gopher_kernel_expr_twins_identical(spark):
         ],
         "doc_id long, text string",
     )
-    a = sorted(map(tuple, gopher_quality(docs, engine="kernel").collect()))
-    b = sorted(map(tuple, gopher_quality(docs, engine="expr").collect()))
+    bigrams = docs.select("doc_id", word_ngrams_kernel(2)(F.col("text")).alias("g"))
+    a = sorted(map(tuple, bigrams.select("doc_id", _max_count_udf()(F.col("g"))).collect()))
+    b = sorted(map(tuple, bigrams.select("doc_id", max_repeat_count_expr(F.col("g"))).collect()))
     assert a == b
 
 
@@ -796,10 +892,7 @@ def test_incremental_dedup_first_batch_wins(spark):
 def test_word_ngrams_kernel_expr_twins_identical(spark):
     """The Arrow shingle kernel and the HOF expression produce the exact
     same string arrays on every edge (empty, blank, sub-n, multi-space)."""
-    from sensordatapipelines_spark.operators.dedup import (
-        word_ngrams_expr,
-        word_ngrams_kernel,
-    )
+    from sensordatapipelines_spark.operators.dedup import word_ngrams_kernel
 
     docs = spark.createDataFrame(
         [
@@ -943,7 +1036,10 @@ def test_quality_and_lang_kernel_expr_twins_identical(spark):
     """The Arrow one-pass kernels must be BIT-equal to the expression
     twins on every edge: empty/blank, control chars, punctuation soup,
     marker-mixed languages, sub/super length docs."""
-    from sensordatapipelines_spark.operators.text import lang_id, quality_score
+    from sensordatapipelines_spark.operators.text import (
+        _lang_id_kernel,
+        _quality_kernel,
+    )
 
     docs = spark.createDataFrame(
         [
@@ -959,9 +1055,13 @@ def test_quality_and_lang_kernel_expr_twins_identical(spark):
         ],
         "doc_id long, text string",
     )
-    for op, col in ((quality_score, "quality"), (lang_id, "lang_pred")):
-        a = {r["doc_id"]: r[col] for r in op(docs, engine="kernel").collect()}
-        b = {r["doc_id"]: r[col] for r in op(docs, engine="expr").collect()}
+    t = F.col("text")
+    for col, kern, expr in (
+        ("quality", _quality_kernel()(t), quality_expr(t)),
+        ("lang_pred", _lang_id_kernel()(t), lang_id_expr(t)),
+    ):
+        a = {r["doc_id"]: r[col] for r in docs.select("doc_id", kern.alias(col)).collect()}
+        b = {r["doc_id"]: r[col] for r in docs.select("doc_id", expr.alias(col)).collect()}
         assert a == b, (col, a, b)
 
 
@@ -985,7 +1085,13 @@ def test_paragraph_and_substring_dedup_null_text(spark):
 
 
 def test_dsir_importance_weights_twins_and_semantics(spark):
-    from sensordatapipelines_spark.operators.text import dsir_importance_weights
+    from sensordatapipelines_spark.operators.text import (
+        dsir_importance_weights,
+        hashed_bucket_kernel,
+        lower_ascii_expr,
+        poly_hash_expr,
+        tokens_expr,
+    )
 
     docs = spark.createDataFrame(
         [
@@ -1002,14 +1108,18 @@ def test_dsir_importance_weights_twins_and_semantics(spark):
         r.doc_id: r
         for r in dsir_importance_weights(docs, target, n_buckets=256).collect()
     }
-    expr = {
-        r.doc_id: r
-        for r in dsir_importance_weights(
-            docs, target, n_buckets=256, engine="expr"
-        ).collect()
+    # the hashed unigram+bigram buckets of every document: the Arrow
+    # kernel and the tokenize/shingle/poly-hash expression are bit-identical
+    t = lower_ascii_expr(F.col("text"))
+    feats = F.concat(tokens_expr(t), word_ngrams_expr(t, 2))
+    buckets = {
+        name: {r.doc_id: r.b for r in docs.select("doc_id", col.alias("b")).collect()}
+        for name, col in (
+            ("kernel", hashed_bucket_kernel(256)(t)),
+            ("expr", F.transform(feats, lambda f: poly_hash_expr(f) % F.lit(256))),
+        )
     }
-    # kernel and expression engines are bit-identical
-    assert kern == expr
+    assert buckets["kernel"] == buckets["expr"]
     # identical docs score identically; target-like docs outscore off-target
     assert kern[1].log_weight == kern[2].log_weight
     assert kern[1].log_weight > kern[3].log_weight
@@ -1061,7 +1171,10 @@ def test_hamming_pairs_banding_is_exact_under_pigeonhole(spark):
 
 
 def test_paragraph_lang_profile_mixed_docs(spark):
-    from sensordatapipelines_spark.operators.text import paragraph_lang_profile
+    from sensordatapipelines_spark.operators.text import (
+        _lang_id_kernel,
+        paragraph_lang_profile,
+    )
 
     docs = spark.createDataFrame(
         [
@@ -1071,9 +1184,19 @@ def test_paragraph_lang_profile_mixed_docs(spark):
         ],
         "doc_id long, text string",
     )
+    # kernel/expr lang twins agree on every paragraph the profile scores
+    paras = docs.select(
+        "doc_id", F.posexplode(F.split("text", "\n")).alias("pos", "p")
+    )
+    lang = {
+        name: {(r.doc_id, r.pos): r.l for r in paras.select("doc_id", "pos", col.alias("l")).collect()}
+        for name, col in (
+            ("kernel", _lang_id_kernel()(F.col("p"))),
+            ("expr", lang_id_expr(F.col("p"))),
+        )
+    }
+    assert lang["kernel"] == lang["expr"]
     kern = {r.doc_id: r for r in paragraph_lang_profile(docs).collect()}
-    expr = {r.doc_id: r for r in paragraph_lang_profile(docs, engine="expr").collect()}
-    assert kern == expr  # kernel/expr lang twins agree through the profile
     assert (kern[1].n_paras, kern[1].top_lang, kern[1].n_langs) == (3, "en", 2)
     assert kern[1].top_frac == 2 / 3  # unrounded tie-free division
     assert (kern[2].n_paras, kern[2].top_lang, kern[2].n_langs) == (2, "es", 1)

@@ -2,6 +2,58 @@
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+
+def _winnow_fp_sets_expr(df, id_col, text_col, k, window):
+    """Pure-JVM twin of ``_winnow_fp_sets``, the shape the DuckDB oracle
+    mirrors: posexplode the k-gram positions, scrambled poly hash per
+    gram, window-min over ``window`` FOLLOWING rows, distinct."""
+    from sensordatapipelines_spark.operators.sketches import CMS_A, CMS_B
+    from sensordatapipelines_spark.operators.text import (
+        POLY_MOD,
+        lower_ascii_expr,
+        poly_hash_expr,
+    )
+
+    norm = F.regexp_replace(lower_ascii_expr(F.trim(F.col(text_col))), "[ \\t\\n\\x0b\\f\\r]+", " ")
+    n = F.length(norm)
+    grams = df.select(
+        F.col(id_col).alias("__id"),
+        norm.alias("__t"),
+        F.explode(
+            F.when(
+                n >= F.lit(int(k)), F.sequence(F.lit(1), n - F.lit(int(k) - 1))
+            ).otherwise(F.array().cast("array<int>"))
+        ).alias("__pos"),
+    )
+    gram = F.col("__t").substr(F.col("__pos"), F.lit(int(k)))
+    hashed = grams.select(
+        "__id",
+        "__pos",
+        (
+            (F.lit(CMS_A[0]) * poly_hash_expr(gram) + F.lit(CMS_B[0]))
+            % F.lit(POLY_MOD)
+        ).alias("__h"),
+    )
+    w = (
+        Window.partitionBy("__id")
+        .orderBy(F.asc_nulls_last("__pos"))
+        .rowsBetween(Window.currentRow, int(window) - 1)
+    )
+    return (
+        hashed.withColumn("__wmin", F.min("__h").over(w))
+        .withColumn("__n", F.max("__pos").over(Window.partitionBy("__id")))
+        .filter(
+            (F.col("__pos") <= F.col("__n") - F.lit(int(window) - 1))
+            | (F.col("__pos") == F.lit(1))
+        )
+        .select("__id", F.col("__wmin").alias("fp"))
+        .distinct()
+    )
+
 
 def test_winnowing_guarantee_shared_substring(spark):
     """Any shared substring of length >= k + window - 1 must contribute at
@@ -65,9 +117,7 @@ def test_winnowing_kernel_expr_twins_bit_equal(spark):
     }
     expr = {
         (r["__id"], r["fp"])
-        for r in _winnow_fp_sets(
-            docs, "doc_id", "text", 8, 4, engine="expr"
-        ).collect()
+        for r in _winnow_fp_sets_expr(docs, "doc_id", "text", 8, 4).collect()
     }
     assert kern == expr and kern
 
@@ -144,9 +194,7 @@ def test_winnowing_string_ids_and_large_k(spark):
         }
         expr = {
             (r["__id"], r["fp"])
-            for r in _winnow_fp_sets(
-                docs, "doc_id", "text", k, 4, engine="expr"
-            ).collect()
+            for r in _winnow_fp_sets_expr(docs, "doc_id", "text", k, 4).collect()
         }
         assert kern == expr and kern, f"k={k}"
         ids = {i for i, _ in kern}
@@ -155,3 +203,32 @@ def test_winnowing_string_ids_and_large_k(spark):
     a = {fp for i, fp in kern if i == "doc-alpha"}
     g = {fp for i, fp in kern if i == "doc-gamma"}
     assert a == g
+
+
+@pytest.mark.parametrize(
+    "bad", [{"k": 0}, {"window": 0}, {"window": -1}], ids=["k0", "window0", "window-1"]
+)
+def test_winnowing_rejects_nonpositive_k_and_window(spark, bad):
+    """A k-gram size or window below 1 raises ``ValueError`` at call time,
+    before any job starts — not later inside a Python worker at the
+    action (numpy's empty-window reduction error)."""
+    from sensordatapipelines_spark.operators.dedup import (
+        winnowing_fingerprints,
+        winnowing_pairs,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    group = "winnowing_bad_args_" + "_".join(f"{k}{v}" for k, v in bad.items())
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "argument check only")
+    try:
+        for op in (winnowing_fingerprints, winnowing_pairs):
+            with pytest.raises(ValueError, match="winnowing"):
+                op(docs, **bad)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
