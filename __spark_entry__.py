@@ -8070,16 +8070,7 @@ def _user_cooccur_edges(spark: SparkSession) -> DataFrame:
         .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
         .select("user_id", "event_type", F.date_trunc("hour", "ts").alias("h"))
     )
-    # cap advisory suppressed: the gate-scale graph was verified far
-    # under the default caps (max degree ~184 at sf0.1); counting drops
-    # would add a full extra pass over the bucket table per run
-    import warnings
-
-    from sensordatapipelines_spark.operators.graph import GraphCapAdvisory
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", GraphCapAdvisory)
-        return cooccurrence_edges(occ, "user_id", ["event_type", "h"], min_cooccur=3)
+    return cooccurrence_edges(occ, "user_id", ["event_type", "h"], min_cooccur=3)
 
 
 def events_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8091,15 +8082,9 @@ def events_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensordatapipelines_spark.operators.graph import adamic_adar
 
     _register_views(spark, sf_dir)
-    import warnings
-
-    from sensordatapipelines_spark.operators.graph import GraphCapAdvisory
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", GraphCapAdvisory)
-        return adamic_adar(
-            _user_cooccur_edges(spark), "u", "w", min_common=2, top_k=5
-        )
+    return adamic_adar(
+        _user_cooccur_edges(spark), "u", "w", min_common=2, top_k=5
+    )
 
 
 def events_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8112,15 +8097,9 @@ def events_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensordatapipelines_spark.operators.graph import jaccard_link_pred
 
     _register_views(spark, sf_dir)
-    import warnings
-
-    from sensordatapipelines_spark.operators.graph import GraphCapAdvisory
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", GraphCapAdvisory)
-        return jaccard_link_pred(
-            _user_cooccur_edges(spark), "u", "w", min_common=2, top_k=5
-        )
+    return jaccard_link_pred(
+        _user_cooccur_edges(spark), "u", "w", min_common=2, top_k=5
+    )
 
 
 def events_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:

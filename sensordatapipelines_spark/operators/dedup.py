@@ -21,7 +21,11 @@ from sensordatapipelines_spark.operators.text import (
     poly_hash_expr,
     tokens_expr,
 )
-from sensordatapipelines_spark.operators.utility import spread_by, unpersist_checkpoint
+from sensordatapipelines_spark.operators.utility import (
+    observe_cap,
+    spread_by,
+    unpersist_checkpoint,
+)
 from sensordatapipelines_spark.registry import register
 
 
@@ -97,7 +101,7 @@ def _shingle_postings(
     text_col: str,
     n: int,
     max_shingle_df: int | None,
-    metrics: dict | None = None,
+    observation: Observation | None = None,
 ):
     """Shared candidate-generation core of the shingle-set similarity ops
     (``jaccard_pairs``, ``containment_pairs``): distinct word-n-gram
@@ -106,6 +110,8 @@ def _shingle_postings(
     Returns ``(exploded, sizes)``: the posting table ``(__id, __s)`` and the
     per-doc informative-shingle counts ``(__id, __n)``.
     """
+    if observation is not None and max_shingle_df is None:
+        raise ValueError("an observation needs max_shingle_df: no cap, nothing to count")
     # spread_by first: shingling must not run on a single input split.
     shingled = spread_by(
         df.select(F.col(id_col).alias("__id"), F.col(text_col)), "__id"
@@ -132,20 +138,17 @@ def _shingle_postings(
     # double into the posting lists, inflating sizes and intersections.
     if max_shingle_df is not None:
         freq = exploded.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-        if metrics is not None:
-            n_stop, n_all = freq.agg(
-                F.sum(
-                    F.when(F.col("__df") > max_shingle_df, 1).otherwise(0)
-                ),
-                F.count(F.lit(1)),
-            ).first()
-            metrics["n_stop_shingles"] = int(n_stop or 0)
-            metrics["n_distinct_shingles"] = int(n_all or 0)
+        freq = observe_cap(
+            freq, observation, F.col("__df") > max_shingle_df,
+            "n_distinct_shingles", "n_stop_shingles",
+        )
         # Anti-join against the HOT set: broadcasting the heavy-hitter
         # shingles (tiny by construction — at most |corpus|/cap of them)
         # keeps the guard map-side; broadcasting the kept majority would
         # itself be a scale bug.
         hot = freq.filter(F.col("__df") > max_shingle_df).select("__s")
+        if observation is not None:
+            hot = hot.localCheckpoint()  # see observe_cap; tiny
         # Materialize the FILTERED postings: they feed three consumers
         # (both self-join sides + the sizes aggregate), and without it the
         # hot-set anti-join re-executes per consumer — measured as the
@@ -156,6 +159,8 @@ def _shingle_postings(
         unfiltered = exploded
         exploded = exploded.join(F.broadcast(hot), "__s", "left_anti").localCheckpoint()
         unpersist_checkpoint(unfiltered)
+        if observation is not None:
+            unpersist_checkpoint(hot)
     # sizes from the DISTINCT postings (per-row array sizes would
     # double-count duplicate-id rows' shared shingles)
     sizes = exploded.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
@@ -170,7 +175,7 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int | None = 1000,
-    metrics: dict | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """N-gram Jaccard near-duplicate pairs → ``(id_a, id_b, jaccard)``.
 
@@ -185,14 +190,14 @@ def jaccard_pairs(
     pass ``None`` for exact full-set Jaccard on corpora known to be small.
 
     Observability (the semantic shift is measurable, not silent): pass a
-    dict as ``metrics`` and the guard fills ``n_stop_shingles`` (distinct
-    shingles actually dropped) and ``n_distinct_shingles`` eagerly — ONE
-    small aggregate over the materialized postings, negligible next to the
-    candidate join. ``n_stop_shingles == 0`` certifies the guarded result
-    is bit-identical to the exact (``max_shingle_df=None``) Jaccard.
+    ``pyspark.sql.Observation`` (cap on) and it holds ``n_stop_shingles``
+    (distinct shingles actually dropped) and ``n_distinct_shingles`` when
+    the call returns, from the job that checkpoints the hot-shingle set.
+    ``n_stop_shingles == 0`` certifies the guarded result is bit-identical
+    to the exact (``max_shingle_df=None``) Jaccard.
     """
     exploded, sizes = _shingle_postings(
-        df, id_col, text_col, n, max_shingle_df, metrics
+        df, id_col, text_col, n, max_shingle_df, observation
     )
     # Self-join on the hashed shingle for candidate pairs. (A posting-list
     # formulation — groupBy shingle, explode ordered id combinations — saves
@@ -235,7 +240,7 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int | None = 1000,
-    metrics: dict | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Asymmetric shingle containment → ``(id_sub, id_sup, containment)``:
     ``C(A→B) = |A∩B| / |A|`` — the fraction of document A's shingles that
@@ -249,9 +254,10 @@ def containment_pairs(
     equi-join on 8-byte hashes, stop-shingle skew cap): the intersection is
     counted ONCE per unordered pair, then both directions' containments are
     derived arithmetically — no second join, no doubled shuffle. Emits each
-    direction independently when it clears ``threshold``."""
+    direction independently when it clears ``threshold``. ``observation``:
+    as in ``jaccard_pairs``."""
     exploded, sizes = _shingle_postings(
-        df, id_col, text_col, n, max_shingle_df, metrics
+        df, id_col, text_col, n, max_shingle_df, observation
     )
     a = exploded.alias("a")
     b = exploded.alias("b")
@@ -413,7 +419,7 @@ def minhash_pairs(
     threshold: float = 0.5,
     seed: int = 42,
     max_band_df: int | None = None,
-    metrics: dict | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Native MinHash + LSH-banding near-dup pairs →
     ``(id_a, id_b, minhash_jaccard)``.
@@ -436,11 +442,12 @@ def minhash_pairs(
     bucket set. Pairs INSIDE a dropped mega-cluster are not listed — the
     structural answer for those is exact/canonical dedup first, or
     ``neardedup_corpus``'s components over the surviving pairs, never an
-    O(d²) pair listing. Pass a ``metrics`` dict to observe
-    ``n_hot_buckets`` / ``n_buckets`` (one small aggregate over the
-    materialized signatures)."""
+    O(d²) pair listing. An ``observation`` (cap on) holds ``n_hot_buckets``
+    / ``n_buckets`` when the call returns (README "Observability")."""
     if num_hashes % band_rows != 0:
         raise ValueError("num_hashes must be divisible by band_rows")
+    if observation is not None and max_band_df is None:
+        raise ValueError("an observation needs max_band_df: no cap, nothing to count")
     n_bands = num_hashes // band_rows
     # Materialized once: the band table and both verify-join sides read it.
     sig = minhash_signature(
@@ -466,14 +473,12 @@ def minhash_pairs(
     if max_band_df is not None:
         bucket_cols = ["band", *[f"v{r}" for r in range(band_rows)]]
         freq = bands.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("__df"))
-        if metrics is not None:
-            n_hot, n_all = freq.agg(
-                F.sum(F.when(F.col("__df") > max_band_df, 1).otherwise(0)),
-                F.count(F.lit(1)),
-            ).first()
-            metrics["n_hot_buckets"] = int(n_hot or 0)
-            metrics["n_buckets"] = int(n_all or 0)
+        freq = observe_cap(
+            freq, observation, F.col("__df") > max_band_df, "n_buckets", "n_hot_buckets"
+        )
         hot = freq.filter(F.col("__df") > max_band_df).select(*bucket_cols)
+        if observation is not None:
+            hot = hot.localCheckpoint()  # see observe_cap; tiny
         bands = bands.join(F.broadcast(hot), bucket_cols, "left_anti")
     a, b = bands.alias("a"), bands.alias("b")
     cond = (F.col("a.band") == F.col("b.band")) & (

@@ -11,34 +11,16 @@ a 1000-executor cluster.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from sensordatapipelines_spark.operators.utility import unpersist_checkpoint
+from sensordatapipelines_spark.operators.utility import observe_cap, unpersist_checkpoint
 from sensordatapipelines_spark.registry import register
 
 
 class GraphCapAdvisory(UserWarning):
-    """Advisory that a skew cap (``max_degree``/``max_bucket_width``) is
-    active while no ``metrics`` dict was supplied (ADVICE r8): candidates
-    beyond the cap are dropped by design, and without ``metrics`` the
-    drop counts are unobserved. Filterable:
-    ``warnings.filterwarnings('ignore', category=GraphCapAdvisory)``."""
-
-
-def _warn_unobserved_cap(op: str, cap_name: str, cap: int) -> None:
-    """One advisory per call site when a cap runs unobserved. Counting
-    the actual drops would cost an extra pass over the reduced frame on
-    the default path, so the advisory is static: pass ``metrics={}`` to
-    pay that pass and observe ``n_hub_nodes``/``n_hot_buckets``."""
-    warnings.warn(
-        f"{op}: {cap_name}={cap} is active and drops candidates beyond the "
-        "cap; pass metrics={} to observe drop counts (or raise the cap)",
-        GraphCapAdvisory,
-        stacklevel=3,
-    )
+    """No longer emitted (the cap counters come back through
+    ``observation=``); kept importable for callers that filter it."""
 
 
 @register("pagerank")
@@ -192,7 +174,7 @@ def cooccurrence_edges(
     bucket_cols: list[str] | tuple[str, ...],
     min_cooccur: int = 3,
     max_bucket_width: int = 10000,
-    metrics: dict | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Co-occurrence graph builder: actors sharing at least
     ``min_cooccur`` distinct context buckets become an undirected edge →
@@ -207,7 +189,9 @@ def cooccurrence_edges(
     aggregates once. Mega-buckets are the skew risk: bound them upstream
     (a bucket that half the corpus touches carries no signal) — the
     explode fan-out is the square of the WIDEST bucket, which AQE splits
-    but cannot shrink."""
+    but cannot shrink. An ``observation`` holds ``n_buckets`` /
+    ``n_hot_buckets`` when the call returns; it checkpoints the kept
+    lists (O(occurrences)) that the default call streams."""
     # No pre-``distinct()``: ``collect_set`` already dedups actors within
     # each bucket, so the (actor, bucket) distinct was a second full
     # exchange buying nothing (guide §2.4 — the set semantics are
@@ -220,20 +204,13 @@ def cooccurrence_edges(
     # enforced): a bucket touched by half the corpus emits width²/2
     # pairs and carries no signal; buckets wider than
     # ``max_bucket_width`` are dropped whole (the ``max_band_df``
-    # contract — pairs inside a dropped bucket are not listed). Pass
-    # ``metrics`` to observe ``n_hot_buckets`` / ``n_buckets``.
-    if metrics is not None:
-        row = lists.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                (F.size("__xs") > int(max_bucket_width)).cast("long")
-            ).alias("h"),
-        ).collect()[0]
-        metrics["n_buckets"] = row["n"]
-        metrics["n_hot_buckets"] = row["h"] or 0
-    else:
-        _warn_unobserved_cap("cooccurrence_edges", "max_bucket_width", int(max_bucket_width))
-    lists = lists.filter(F.size("__xs") <= int(max_bucket_width))
+    # contract — pairs inside a dropped bucket are not listed).
+    lists = observe_cap(
+        lists, observation, F.size("__xs") > int(max_bucket_width),
+        "n_buckets", "n_hot_buckets",
+    ).filter(F.size("__xs") <= int(max_bucket_width))
+    if observation is not None:
+        lists = lists.localCheckpoint()  # see observe_cap
     combos = lists.select(
         F.explode(
             F.expr(
@@ -259,7 +236,7 @@ def adamic_adar(
     min_common: int = 2,
     top_k: int = 5,
     max_degree: int = 10000,
-    metrics: dict | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Adamic–Adar link prediction over an undirected graph → the
     ``top_k`` strongest NON-edges per node: ``(u, w, n_common, aa_score,
@@ -275,7 +252,8 @@ def adamic_adar(
     1/ln(deg) term is
     quantized to 1e-6 before the sum (transcendental values never park
     on rounding half-way points), so the per-node top-k window is
-    deterministic cross-engine — no float-rank flips."""
+    deterministic cross-engine — no float-rank flips. An ``observation``
+    holds ``n_nodes`` / ``n_hub_nodes`` when the call returns."""
     # The edge frame is consumed THREE times (both symmetrization branches
     # + the existing-edge anti-join) and the branches are column-swapped,
     # so ReuseExchange never fires: without the checkpoint an expensive
@@ -301,26 +279,22 @@ def adamic_adar(
     # fans out deg(z)²/2 candidates, so ONE celebrity node on a power-law
     # graph is quadratic death no AQE split can shrink. Nodes with
     # deg > max_degree are excluded from MEDIATING candidates (they carry
-    # ~no Adamic-Adar weight anyway: 1/ln(deg) → 0); pass ``metrics`` to
-    # observe ``n_hub_nodes`` / ``n_nodes``.
+    # ~no Adamic-Adar weight anyway: 1/ln(deg) → 0).
+    if observation is not None:
+        deg = observe_cap(
+            deg, observation, F.col("__deg") > int(max_degree), "n_nodes", "n_hub_nodes"
+        ).localCheckpoint()  # see observe_cap; one row per node
     keep = deg.filter(
         (F.col("__deg") >= 2) & (F.col("__deg") <= int(max_degree))
     )
-    if metrics is not None:
-        row = deg.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("__deg") > int(max_degree)).cast("long")).alias("h"),
-        ).collect()[0]
-        metrics["n_nodes"] = row["n"]
-        metrics["n_hub_nodes"] = row["h"] or 0
-    else:
-        _warn_unobserved_cap("adamic_adar", "max_degree", int(max_degree))
     nbrt = nbr.join(keep, "s").select("s", "d", term6.alias("__t6"))
     # The weighted neighbor list feeds BOTH self-join sides, and its own
     # degree join re-evaluates the distinct twice more — without a cut the
     # (sym → distinct) shuffle runs 4×. O(2·edges) rows, the same storage
     # contract as the edge checkpoint above.
     nbrt = nbrt.localCheckpoint()
+    if observation is not None:
+        unpersist_checkpoint(deg)
     # Re-spread the probe side before the fan-out join: the neighbor list
     # is small, so AQE coalesces its shuffle to a couple of partitions —
     # and the deg²/2-amplified join OUTPUT inherits that, serializing the
@@ -523,7 +497,7 @@ def jaccard_link_pred(
     min_common: int = 2,
     top_k: int = 5,
     max_degree: int = 10000,
-    metrics: dict | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Neighborhood-Jaccard link prediction over an undirected graph →
     the ``top_k`` strongest NON-edges per node: ``(u, w, n_common,
@@ -536,7 +510,8 @@ def jaccard_link_pred(
     list on the shared neighbor (never all-pairs); |∪| derives from the
     degree table (|u|+|w|−|∩|), so no second set-scan; existing edges
     drop via LEFT ANTI on the canonical pair; one per-node top-k window
-    on (jaccard_e6 desc, w) — deterministic ties."""
+    on (jaccard_e6 desc, w) — deterministic ties. An ``observation``
+    holds ``n_nodes`` / ``n_hub_nodes`` when the call returns."""
     sym = edges.select(
         F.col(src_col).alias("s"), F.col(dst_col).alias("d")
     ).unionByName(
@@ -544,19 +519,14 @@ def jaccard_link_pred(
     )
     sym = sym.localCheckpoint(eager=True)
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
+    if observation is not None:
+        deg = observe_cap(
+            deg, observation, F.col("deg") > int(max_degree), "n_nodes", "n_hub_nodes"
+        ).localCheckpoint()  # see observe_cap; one row per node
     # Hub cut (see adamic_adar): mediators with deg > max_degree are
     # excluded from candidate generation — deg(z)²/2 fan-out through one
     # celebrity node is the only quadratic term left in this plan.
     ok = deg.filter(F.col("deg") <= int(max_degree)).select("s")
-    if metrics is not None:
-        row = deg.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("deg") > int(max_degree)).cast("long")).alias("h"),
-        ).collect()[0]
-        metrics["n_nodes"] = row["n"]
-        metrics["n_hub_nodes"] = row["h"] or 0
-    else:
-        _warn_unobserved_cap("jaccard_link_pred", "max_degree", int(max_degree))
     med = sym.join(ok, "s")
     a = med.select(F.col("s").alias("z"), F.col("d").alias("x"))
     b = med.select(F.col("s").alias("z"), F.col("d").alias("y"))

@@ -35,7 +35,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from sensordatapipelines_spark.errors import ColumnException, CRSUnitMismatch, MissingCRS
@@ -194,7 +194,7 @@ def drop_invalid_points(
     df: DataFrame,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    observation=None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """S1 validity filter for the point-geometry model: drop rows with
     null/NaN coordinates (reference warns per dropped invalid geometry,

@@ -16,7 +16,7 @@ from __future__ import annotations
 import warnings
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from sensordatapipelines_spark.registry import register
@@ -60,6 +60,25 @@ def unpersist_checkpoint(df: DataFrame) -> None:
                 RuntimeWarning,
                 stacklevel=2,
             )
+
+
+def observe_cap(
+    df: DataFrame, observation: Observation | None, over: Column, total: str, dropped: str
+) -> DataFrame:
+    """``df`` with a skew cap's counters on ``observation``: ``total`` rows
+    and the ``dropped`` ones where ``over`` holds (0 on an empty frame).
+
+    The caller eagerly checkpoints what it filters from the result:
+    adaptive execution drops an observed node with the plan above it when
+    a stage there comes out empty (no pairs, no hot key, empty input), and
+    ``Observation.get`` then fails; at the root of a job it always reports."""
+    if observation is None:
+        return df
+    return df.observe(
+        observation,
+        F.count(F.lit(1)).alias(total),
+        F.coalesce(F.sum(over.cast("long")), F.lit(0)).alias(dropped),
+    )
 
 
 def canon_key_str(df: DataFrame, key_col: str):

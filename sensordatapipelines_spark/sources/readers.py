@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sensordatapipelines_spark.errors import DataIOError
@@ -183,7 +183,7 @@ def open_spatial_data(
     lat_col: str = "lat",
     validate: bool = True,
     crs: int | str | None = None,
-    observation=None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """S1 (reference ``open_spatial_data``, ``:462-492``) for the point-model:
     read a spatial table and drop rows with invalid coordinates (reference

@@ -1,6 +1,9 @@
 """Graph analytics tests (pagerank — SURVEY §2.7 iterative surface)."""
 
+import warnings
+
 import pytest
+from pyspark.sql import Observation
 
 
 def test_pagerank_star_graph(spark):
@@ -105,39 +108,123 @@ def test_bfs_depths_chain_and_saturation(spark):
     assert got2 == {1: 0, 5: 0, 2: 1, 4: 1, 6: 1, 3: 2}
 
 
-def test_hub_cap_excludes_celebrity_mediators(spark):
+def _star_clique(spark):
+    """Star around node 0 (deg 29) plus a small clique: one hub node
+    over a cap of 10, 30 nodes in all."""
+    return spark.createDataFrame(
+        [(0, i) for i in range(1, 30)] + [(1, 2), (3, 4), (2, 3)],
+        "u long, w long",
+    )
+
+
+def test_hub_cap_excludes_celebrity_mediators(spark, filled_without_action):
     """max_degree (VERDICT r7 #8): a hub whose degree exceeds the cap
-    stops MEDIATING candidate pairs; drop metrics report it; a generous
-    cap reproduces the uncapped result exactly."""
+    stops MEDIATING candidate pairs; the observed counters report it; a
+    generous cap reproduces the uncapped result exactly."""
     from sensordatapipelines_spark.operators.graph import (
         adamic_adar,
         cooccurrence_edges,
         jaccard_link_pred,
     )
 
-    # star around node 0 (deg 29) + a small clique
-    edges = spark.createDataFrame(
-        [(0, i) for i in range(1, 30)] + [(1, 2), (3, 4), (2, 3)],
-        "u long, w long",
-    )
-    m: dict = {}
-    capped = adamic_adar(edges, max_degree=10, metrics=m).count()
-    assert m == {"n_nodes": 30, "n_hub_nodes": 1}
+    edges = _star_clique(spark)
+    # each observed call fills its observation before it returns
+    obs = Observation()
+    capped_df = adamic_adar(edges, max_degree=10, observation=obs)
+    assert filled_without_action(obs)
+    assert obs.get == {"n_nodes": 30, "n_hub_nodes": 1}
+    capped = capped_df.count()
     wide = adamic_adar(edges, max_degree=10**6).count()
     assert capped < wide  # hub-mediated pairs gone, cap really bites
 
-    m2: dict = {}
-    jaccard_link_pred(edges, max_degree=10, metrics=m2).count()
-    assert m2["n_hub_nodes"] == 1
+    obs2 = Observation()
+    jaccard_link_pred(edges, max_degree=10, observation=obs2)
+    assert filled_without_action(obs2)
+    assert obs2.get["n_hub_nodes"] == 1
 
     df = spark.createDataFrame(
         [(i, 1) for i in range(50)] + [(1, 2), (2, 2), (3, 2)],
         "a long, b long",
     )
-    m3: dict = {}
+    obs3 = Observation()
     out = cooccurrence_edges(
-        df, "a", ["b"], min_cooccur=1, max_bucket_width=10, metrics=m3
+        df, "a", ["b"], min_cooccur=1, max_bucket_width=10, observation=obs3
     )
-    assert m3 == {"n_buckets": 2, "n_hot_buckets": 1}
+    assert filled_without_action(obs3)
+    assert obs3.get == {"n_buckets": 2, "n_hot_buckets": 1}
     # only the narrow bucket's 3 pairs survive
     assert out.count() == 3
+
+
+def test_graph_cap_counters_read_zero_on_empty_input(spark):
+    """An empty input reads 0 on every counter, never None and never a
+    missing row (an observed node inside a plan that AQE finds empty
+    would be dropped with it)."""
+    from sensordatapipelines_spark.operators.graph import (
+        adamic_adar,
+        cooccurrence_edges,
+        jaccard_link_pred,
+    )
+
+    edges = spark.createDataFrame([], "u long, w long")
+    for op in (adamic_adar, jaccard_link_pred):
+        obs = Observation()
+        assert op(edges, max_degree=10, observation=obs).count() == 0
+        assert obs.get == {"n_nodes": 0, "n_hub_nodes": 0}
+    obs = Observation()
+    occ = spark.createDataFrame([], "a long, b long")
+    assert cooccurrence_edges(occ, "a", ["b"], observation=obs).count() == 0
+    assert obs.get == {"n_buckets": 0, "n_hot_buckets": 0}
+
+
+def test_graph_caps_warn_nothing_by_default(spark):
+    """The default calls emit no warning: the cap counters come back
+    through ``observation=`` on request, not as an advisory per call."""
+    from sensordatapipelines_spark.operators.graph import (
+        adamic_adar,
+        cooccurrence_edges,
+        jaccard_link_pred,
+    )
+
+    edges = _star_clique(spark)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        cooccurrence_edges(edges, "u", ["w"], min_cooccur=1)
+        adamic_adar(edges)
+        jaccard_link_pred(edges)
+
+
+def test_adamic_adar_observation_costs_fewer_jobs_than_a_side_aggregate(spark):
+    """Spark jobs for an ``adamic_adar`` call plus ``count()`` on the
+    star+clique graph, on the test session (local[4], 4 shuffle
+    partitions).
+
+    Without an observation: 14. With one: 17. The former ``metrics``
+    dict cost 18: its degree aggregate was a separate ``collect()`` that
+    re-ran the neighbor-list shuffles and then a final aggregate.
+
+    The observed call checkpoints the degree table (one row per node)
+    with the observation at the root of that job; the neighbor-list
+    checkpoint then reads it, but runs the (s, d) distinct a second time:
+    3 more jobs than the default. Observing ``deg`` in place, under the
+    neighbor-list join, costs 1 job (15), but AQE then drops the observed
+    node on an empty graph (the empty distinct stage collapses the join
+    above it) and ``Observation.get`` finds no row."""
+    from sensordatapipelines_spark.operators.graph import adamic_adar
+
+    edges = _star_clique(spark)
+    sc = spark.sparkContext
+
+    def jobs(group, **kw):
+        sc.setJobGroup(group, "adamic_adar job count")
+        try:
+            adamic_adar(edges, max_degree=10, **kw).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    obs = Observation()
+    assert jobs("aa_jobs_plain") == 14
+    assert jobs("aa_jobs_observed", observation=obs) == 17
+    assert obs.get == {"n_nodes": 30, "n_hub_nodes": 1}

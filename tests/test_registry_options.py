@@ -47,3 +47,11 @@ def test_no_operator_has_an_engine_switch():
     an ``engine`` parameter that picks between implementations."""
     offenders = sorted(name for name, sig in _signatures().items() if "engine" in sig.parameters)
     assert offenders == []
+
+
+def test_no_operator_takes_a_metrics_dict():
+    """Operator counters come back through one channel, an
+    ``observation`` (``pyspark.sql.Observation``), never a ``metrics``
+    dict filled by an extra Spark job."""
+    offenders = sorted(name for name, sig in _signatures().items() if "metrics" in sig.parameters)
+    assert offenders == []

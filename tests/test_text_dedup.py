@@ -1,6 +1,7 @@
 """Text analysis + dedup family tests (charter extensions, SURVEY §2.7)."""
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from sensordatapipelines_spark.operators.dedup import (
@@ -512,24 +513,28 @@ def test_neardedup_loser_broadcast_is_gated(spark):
     assert hash_exchanges(unhinted) > hash_exchanges(hinted)
 
 
-def test_jaccard_stop_shingle_drop_is_observable(spark):
-    """max_shingle_df's semantic shift is measurable: the metrics dict
-    reports how many shingles were dropped; 0 drops certifies
-    guarded == exact."""
+def test_jaccard_stop_shingle_drop_is_observable(spark, filled_without_action):
+    """max_shingle_df's semantic shift is measurable: the observation
+    reports how many shingles were dropped, before any action on the
+    result; 0 drops certifies guarded == exact."""
     from sensordatapipelines_spark.operators.dedup import jaccard_pairs
 
     docs = _docs(spark)
-    got: dict = {}
-    jaccard_pairs(docs, threshold=0.1, max_shingle_df=2, metrics=got).collect()
-    assert got["n_distinct_shingles"] > 0
-    assert got["n_stop_shingles"] >= 1  # the shared boilerplate shingles
+    got = Observation()
+    jaccard_pairs(docs, threshold=0.1, max_shingle_df=2, observation=got)
+    assert filled_without_action(got)
+    assert got.get["n_distinct_shingles"] > 0
+    assert got.get["n_stop_shingles"] >= 1  # the shared boilerplate shingles
 
-    loose_metrics: dict = {}
+    loose_obs = Observation()
     loose = jaccard_pairs(
-        docs, threshold=0.1, max_shingle_df=10**6, metrics=loose_metrics
+        docs, threshold=0.1, max_shingle_df=10**6, observation=loose_obs
     )
+    # no hot shingle: the broadcast hot set is empty, and the counters
+    # still arrive (they end their own checkpoint job)
+    assert filled_without_action(loose_obs)
+    assert loose_obs.get["n_stop_shingles"] == 0
     loose_rows = {(r["id_a"], r["id_b"]): r["jaccard"] for r in loose.collect()}
-    assert loose_metrics["n_stop_shingles"] == 0
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in jaccard_pairs(docs, threshold=0.1, max_shingle_df=None).collect()
@@ -618,10 +623,10 @@ def test_jaccard_skew_cap_bounds_candidates(spark):
     unguarded = jaccard_pairs(docs, threshold=0.01, max_shingle_df=None).count()
     assert unguarded == 60 * 59 // 2  # every boilerplate pair surfaces
 
-    got: dict = {}
-    guarded = jaccard_pairs(docs, threshold=0.01, max_shingle_df=20, metrics=got)
+    got = Observation()
+    guarded = jaccard_pairs(docs, threshold=0.01, max_shingle_df=20, observation=got)
     assert guarded.count() == 0  # no informative shingle is ever shared
-    assert got["n_stop_shingles"] >= 5  # the boilerplate shingles were cut
+    assert got.get["n_stop_shingles"] >= 5  # the boilerplate shingles were cut
 
 
 def test_minhash_hot_bucket_cap_bounds_candidates(spark):
@@ -640,11 +645,56 @@ def test_minhash_hot_bucket_cap_bounds_candidates(spark):
     unguarded = minhash_pairs(docs, threshold=0.5).count()
     assert unguarded == 40 * 39 // 2  # the cluster's full pair listing
 
-    got: dict = {}
-    guarded = minhash_pairs(docs, threshold=0.5, max_band_df=10, metrics=got)
+    got = Observation()
+    guarded = minhash_pairs(docs, threshold=0.5, max_band_df=10, observation=got)
+    # an empty result (every candidate was in a hot bucket) still reports
     assert guarded.count() == 0
-    assert got["n_hot_buckets"] >= 1
-    assert got["n_buckets"] > got["n_hot_buckets"]  # only the hot set was cut
+    assert got.get["n_hot_buckets"] >= 1
+    assert got.get["n_buckets"] > got.get["n_hot_buckets"]  # only the hot set was cut
+
+
+def test_dedup_cap_counters_read_zero_on_empty_input(spark):
+    """An empty corpus reads 0 on every counter, never None and never a
+    missing row."""
+    from sensordatapipelines_spark.operators.dedup import (
+        containment_pairs,
+        jaccard_pairs,
+        minhash_pairs,
+    )
+
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    for op in (jaccard_pairs, containment_pairs):
+        obs = Observation()
+        assert op(empty, max_shingle_df=2, observation=obs).count() == 0
+        assert obs.get == {"n_stop_shingles": 0, "n_distinct_shingles": 0}
+    obs = Observation()
+    assert minhash_pairs(empty, max_band_df=2, observation=obs).count() == 0
+    assert obs.get == {"n_hot_buckets": 0, "n_buckets": 0}
+
+
+def test_observation_without_a_cap_is_rejected_before_any_job(spark):
+    """With the cap off there is nothing to observe, and ``Observation.get``
+    would block forever: the call raises instead, before any Spark job."""
+    from sensordatapipelines_spark.operators.dedup import (
+        containment_pairs,
+        jaccard_pairs,
+        minhash_pairs,
+    )
+
+    docs = _docs(spark)
+    group = "observation_without_cap"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "argument check only")
+    try:
+        for op in (jaccard_pairs, containment_pairs):
+            with pytest.raises(ValueError, match="max_shingle_df"):
+                op(docs, max_shingle_df=None, observation=Observation())
+        with pytest.raises(ValueError, match="max_band_df"):
+            minhash_pairs(docs, observation=Observation())  # cap off by default
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_max_repeat_count_fold(spark):
