@@ -3631,14 +3631,6 @@ def docs_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# docs_minhash_ml (the Spark-ML MinHashLSH twin gate) was RETIRED from the
-# gate surface in round 4: it was the one rows-only entry with no
-# determinism excuse beyond the library call, and the native seeded
-# minhash_pairs is the proven, fully-oracled path. The operator itself
-# (minhash_dedup_pairs) remains in the package, covered by a seed-pinned
-# pair-set pytest (tests/test_text_dedup.py::test_minhash_ml_twin_pair_set).
-
-
 def _stage_ppm(spark: SparkSession, sf_dir: str) -> str:
     """Stage REAL binary PPM (P6) image files, 4×2 RGB, pixel bytes =
     the doc text's 16-byte MD5 digest tiled to 24 samples — a pure

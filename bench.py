@@ -117,44 +117,17 @@ def main() -> int:
     }
     here = os.path.dirname(os.path.abspath(__file__))
     if only:
-        # Solo A/B runs must never clobber the canonical per-query file or
-        # the per-round archive (r9 footgun: every ad-hoc run overwrote
-        # both, so sweeps got compared against themselves).
+        # Solo A/B runs must never clobber the canonical per-query file.
         with open(os.path.join(here, "bench_out_solo.json"), "w") as f:
             f.write(json.dumps(payload, separators=(",", ":")) + "\n")
     else:
         with open(os.path.join(here, "bench_out.json"), "w") as f:
             f.write(json.dumps(payload, separators=(",", ":")) + "\n")
-        # Per-round archive (VERDICT r7 #10, write-once per round+core-count
-        # since r10 per VERDICT r9 #3): the first full sweep of a round at a
-        # given core count wins; later re-runs (e.g. the driver's 8-core
-        # scaling pass, ad-hoc re-sweeps) get their own file or are skipped,
-        # so the 32-core per-query archive survives the round. A sweep with
-        # an errored query writes no archive. SPARK_GRAFT_ARCHIVE_FORCE=1
-        # overrides both rules.
-        try:
-            rnd = None
-            with open(os.path.join(here, "PROGRESS.jsonl")) as pf:
-                for line in pf:
-                    rec = json.loads(line)
-                    rnd = rec.get("round", rnd)
-            if rnd is not None:
-                cpus = spark.sparkContext.defaultParallelism
-                arch = os.path.join(
-                    here, f"bench_out_r{int(rnd):02d}_c{cpus}.json"
-                )
-                force = os.environ.get("SPARK_GRAFT_ARCHIVE_FORCE") == "1"
-                clean = all(t >= 0 for t in timings.values())
-                if force or (clean and not os.path.exists(arch)):
-                    with open(arch, "w") as f:
-                        f.write(json.dumps(payload, separators=(",", ":")) + "\n")
-        except Exception:
-            pass  # archive is best-effort; the canonical output above stands
     # The one-line stdout contract. The consumer tail-captures the LAST
     # 2000 bytes of stdout (observed: rounds 1-3 printed the full per-query
     # dict, ~12 KB, and the consumer's parse failed on the head-truncated
     # line; rounds 4+ printed a compact line and parsed fine). A full
-    # 390-query map cannot fit, so the line carries per-query medians for
+    # 336-query map cannot fit, so the line carries per-query medians for
     # as many queries as fit a ~1800-byte budget, most expensive first —
     # those dominate the total and are the round-over-round perf signal —
     # plus how many were elided; the complete map is in bench_out.json.

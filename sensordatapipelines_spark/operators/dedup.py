@@ -15,6 +15,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from sensordatapipelines_spark.operators.graph import symmetric_edges
 from sensordatapipelines_spark.operators.text import (
     POLY_MOD,
     lower_ascii_expr,
@@ -294,65 +295,6 @@ def containment_pairs(
     )
 
 
-@register("minhash_dedup_pairs")
-def minhash_dedup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-    jaccard_threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash + LSH near-dup pairs → ``(id_a, id_b, minhash_jaccard)``.
-
-    Spark-ML pipeline: shingles → ``HashingTF`` (binary) → ``MinHashLSH``
-    (seeded, deterministic) → ``approxSimilarityJoin`` at Jaccard distance
-    ``1 − threshold``. LSH banding keeps candidate generation equi-join-shaped
-    at scale (same property as ``jaccard_pairs``)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    # Repartition by id before the heavy per-doc expressions: a small corpus
-    # arrives as one parquet split, which would serialize shingling + TF +
-    # MinHash onto a single core; at real scale the input is already split
-    # and this is a cheap id-hash shuffle of the projected two columns.
-    shingled = (
-        spread_by(df.select(F.col(id_col).alias("id"), F.col(text_col)), "id")
-        .select(
-            "id",
-            F.array_distinct(word_ngrams_kernel(n)(F.col(text_col))).alias("shingles"),
-        )
-        .filter(F.size("shingles") > 0)
-    )
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
-    )
-    # Materialize the MODEL-TRANSFORMED frame (features + MinHash
-    # signatures), not just the featurized one: approxSimilarityJoin reuses
-    # an existing ``hashes`` column, so the per-doc MinHash UDF runs ONCE
-    # instead of once per join side (~3× wall-clock on the self-join).
-    # The checkpoint also pins the empty-shingle filter upstream of the hash
-    # UDF — Catalyst's project-collapse otherwise evaluates it on unfiltered
-    # rows and MinHash rejects all-zero vectors.
-    feats = tf.transform(shingled)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hashes, seed=seed
-    )
-    model = lsh.fit(feats)
-    hashed = model.transform(feats).localCheckpoint()
-    joined = model.approxSimilarityJoin(
-        hashed, hashed, 1.0 - jaccard_threshold, distCol="jdist"
-    )
-    return (
-        joined.filter(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            (F.round((F.lit(1.0) - F.col("jdist")) * F.lit(1e6)) / F.lit(1e6)).alias("minhash_jaccard"),
-        )
-    )
-
-
 def minhash_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     """Deterministic universal-hash coefficients ``h_i(x) = (a_i·x + b_i) mod
     2^31-1``, drawn from a seeded PRNG. Computed driver-side and embedded as
@@ -376,8 +318,7 @@ def minhash_signature(
 ) -> DataFrame:
     """Native MinHash signature → ``(id, sig0..sig{H-1})``.
 
-    Spark-first alternative to the ML pipeline (``minhash_dedup_pairs``): the
-    base hash of each shingle is the portable polynomial hash, and each
+    The base hash of each shingle is the portable polynomial hash, and each
     signature component is ``min over shingles of (a_i·h + b_i) mod p``.
     Docs with zero shingles (< n tokens) are dropped, matching MinHash's
     undefined-on-empty-set semantics.
@@ -448,12 +389,29 @@ def minhash_pairs(
         raise ValueError("num_hashes must be divisible by band_rows")
     if observation is not None and max_band_df is None:
         raise ValueError("an observation needs max_band_df: no cap, nothing to count")
-    n_bands = num_hashes // band_rows
     # Materialized once: the band table and both verify-join sides read it.
     sig = minhash_signature(
         df, id_col=id_col, text_col=text_col, n=n, num_hashes=num_hashes, seed=seed
     ).localCheckpoint()
-    bands = sig.select(
+    bands = _sig_bands(sig, id_col, num_hashes, band_rows)
+    if max_band_df is not None:
+        bucket_cols = ["band", *[f"v{r}" for r in range(band_rows)]]
+        freq = bands.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("__df"))
+        freq = observe_cap(
+            freq, observation, F.col("__df") > max_band_df, "n_buckets", "n_hot_buckets"
+        )
+        hot = freq.filter(F.col("__df") > max_band_df).select(*bucket_cols)
+        if observation is not None:
+            hot = hot.localCheckpoint()  # see observe_cap; tiny
+        bands = bands.join(F.broadcast(hot), bucket_cols, "left_anti")
+    return _banded_pairs(bands, sig, id_col, num_hashes, band_rows, threshold)
+
+
+def _sig_bands(sig: DataFrame, id_col: str, num_hashes: int, band_rows: int) -> DataFrame:
+    """Explode a MinHash signature frame into its LSH band rows
+    ``(id, band, v0..v{band_rows-1})``."""
+    n_bands = num_hashes // band_rows
+    return sig.select(
         F.col(id_col),
         F.explode(
             F.array(
@@ -470,33 +428,40 @@ def minhash_pairs(
             )
         ).alias("bv"),
     ).select(id_col, "bv.*")
-    if max_band_df is not None:
-        bucket_cols = ["band", *[f"v{r}" for r in range(band_rows)]]
-        freq = bands.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("__df"))
-        freq = observe_cap(
-            freq, observation, F.col("__df") > max_band_df, "n_buckets", "n_hot_buckets"
-        )
-        hot = freq.filter(F.col("__df") > max_band_df).select(*bucket_cols)
-        if observation is not None:
-            hot = hot.localCheckpoint()  # see observe_cap; tiny
-        bands = bands.join(F.broadcast(hot), bucket_cols, "left_anti")
-    a, b = bands.alias("a"), bands.alias("b")
-    cond = (F.col("a.band") == F.col("b.band")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    )
+
+
+def _banded_pairs(
+    bands_a: DataFrame,
+    sig_a: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    band_rows: int,
+    threshold: float,
+    bands_b: DataFrame | None = None,
+    sig_b: DataFrame | None = None,
+) -> DataFrame:
+    """The banded LSH join: ``(id_a, id_b, minhash_jaccard)`` for every
+    pair that shares a band bucket and whose signatures agree on at
+    least ``threshold`` of their components. Without a ``b`` side the
+    ``a`` side joins itself and keeps ``id_a < id_b``."""
+    cond = F.col("a.band") == F.col("b.band")
+    if bands_b is None:
+        bands_b, sig_b = bands_a, sig_a
+        cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     for r in range(band_rows):
         cond = cond & (F.col(f"a.v{r}") == F.col(f"b.v{r}"))
     cand = (
-        a.join(b, on=cond)
+        bands_a.alias("a")
+        .join(bands_b.alias("b"), on=cond)
         .select(
             F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         )
         .distinct()
     )
-    sa = sig.select(
+    sa = sig_a.select(
         F.col(id_col).alias("id_a"), *[F.col(f"sig{i}").alias(f"__a{i}") for i in range(num_hashes)]
     )
-    sb = sig.select(
+    sb = sig_b.select(
         F.col(id_col).alias("id_b"), *[F.col(f"sig{i}").alias(f"__b{i}") for i in range(num_hashes)]
     )
     agree = sum(
@@ -755,25 +720,7 @@ def connected_components(
     1000 executors the same loop runs unchanged — state is only ever
     (node, label) pairs partitioned by node.
     """
-    # Materialize the edge list BEFORE symmetrizing: the union's two
-    # column-swapped branches are not recognized as a shared subtree, so
-    # an expensive upstream edge builder (the minhash banded-join
-    # cascade for the dup gates) would execute twice inside the one sym
-    # checkpoint job (guide §2.4 — measured as two back-to-back
-    # identical signature stages in the dup_components profile).
-    e0 = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint()
-    sym = (
-        e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # e0 fed only the sym build; release its blocks now instead of waiting
-    # for a driver GC to notice (deferred unpersist-on-supersede, VERDICT
-    # r9 #6 — at sweep scale the dead rounds' MEMORY_AND_DISK blocks
-    # contended with live queries for minutes under the GC cadence).
-    unpersist_checkpoint(e0)
+    sym = symmetric_edges(edges, src_col, dst_col, "src", "dst", distinct=True)
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -835,6 +782,33 @@ def connected_components(
     return labels.select(F.col("node"), F.col("label").alias("component"))
 
 
+def _minhash_components(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    band_rows: int,
+    threshold: float,
+    seed: int,
+    max_iter: int,
+) -> DataFrame:
+    """Duplicate clusters ``(node, component)`` of the ``minhash_pairs``
+    graph. The components are a checkpoint of their own, so the
+    signature checkpoint the pairs read is released before returning."""
+    if num_hashes % band_rows != 0:
+        raise ValueError("num_hashes must be divisible by band_rows")
+    sig = minhash_signature(
+        df, id_col=id_col, text_col=text_col, num_hashes=num_hashes, seed=seed
+    ).localCheckpoint()
+    pairs = _banded_pairs(
+        _sig_bands(sig, id_col, num_hashes, band_rows),
+        sig, id_col, num_hashes, band_rows, threshold,
+    )
+    comps = connected_components(pairs, "id_a", "id_b", max_iter=max_iter)
+    unpersist_checkpoint(sig)
+    return comps
+
+
 @register("neardedup_corpus")
 def neardedup_corpus(
     df: DataFrame,
@@ -871,16 +845,9 @@ def neardedup_corpus(
     hash exchanges). The count reads the same checkpointed components, so
     it is nearly free.
     """
-    pairs = minhash_pairs(
-        df,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        band_rows=band_rows,
-        threshold=threshold,
-        seed=seed,
+    comps = _minhash_components(
+        df, id_col, text_col, num_hashes, band_rows, threshold, seed, max_iter
     )
-    comps = connected_components(pairs, "id_a", "id_b", max_iter=max_iter)
     losers = comps.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("__loser")
     )
@@ -914,16 +881,9 @@ def neardedup_keep_longest(
     argmax, and only loser IDS flow into the final LEFT ANTI join."""
     from sensordatapipelines_spark.operators.text import token_count_expr
 
-    pairs = minhash_pairs(
-        df,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        band_rows=band_rows,
-        threshold=threshold,
-        seed=seed,
+    comps = _minhash_components(
+        df, id_col, text_col, num_hashes, band_rows, threshold, seed, max_iter
     )
-    comps = connected_components(pairs, "id_a", "id_b", max_iter=max_iter)
     ntok = df.select(
         F.col(id_col).alias("__nid"),
         token_count_expr(F.col(text_col)).cast("long").alias("__nt"),
@@ -938,6 +898,16 @@ def neardedup_keep_longest(
         .select(F.col("node").alias("__loser"))
     )
     return df.join(losers, on=df[id_col] == F.col("__loser"), how="left_anti")
+
+
+def _shingle_hashes(text_col: str, n: int):
+    """One row per distinct word-``n``-gram of ``text_col``, as its 8-byte
+    ``xxhash64`` (a generator column for ``select``)."""
+    return F.explode(
+        F.array_distinct(
+            F.transform(word_ngrams_kernel(n)(F.col(text_col)), lambda s: F.xxhash64(s))
+        )
+    )
 
 
 @register("decontaminate")
@@ -962,25 +932,8 @@ def decontaminate(
     """
     corpus_sh = spread_by(
         corpus.select(F.col(id_col).alias("__cid"), F.col(text_col)), "__cid"
-    ).select(
-        "__cid",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    word_ngrams_kernel(n)(F.col(text_col)), lambda s: F.xxhash64(s)
-                )
-            )
-        ).alias("__s"),
-    )
-    bench_sh = benchmark.select(
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    word_ngrams_kernel(n)(F.col(text_col)), lambda s: F.xxhash64(s)
-                )
-            )
-        ).alias("__s")
-    ).distinct()
+    ).select("__cid", _shingle_hashes(text_col, n).alias("__s"))
+    bench_sh = benchmark.select(_shingle_hashes(text_col, n).alias("__s")).distinct()
     contaminated = (
         corpus_sh.join(F.broadcast(bench_sh), "__s")
         .select(F.col("__cid").alias(id_col))
@@ -1056,30 +1009,6 @@ def incremental_dedup(
     return survivors, updated
 
 
-def _sig_bands(sig: DataFrame, id_col: str, num_hashes: int, band_rows: int) -> DataFrame:
-    """Explode a MinHash signature frame into its LSH band rows
-    ``(id, band, v0..v{band_rows-1})`` — the shared banding of
-    ``minhash_pairs`` and ``incremental_neardedup``."""
-    n_bands = num_hashes // band_rows
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        *[
-                            F.col(f"sig{j * band_rows + r}").alias(f"v{r}")
-                            for r in range(band_rows)
-                        ],
-                    )
-                    for j in range(n_bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select(id_col, "bv.*")
-
-
 @register("incremental_neardedup")
 def incremental_neardedup(
     batch: DataFrame,
@@ -1118,74 +1047,16 @@ def incremental_neardedup(
         num_hashes=num_hashes, seed=seed,
     ).localCheckpoint()
     bands_b = _sig_bands(sig_b, id_col, num_hashes, band_rows)
-
-    agree = sum(
-        (
-            F.when(F.col(f"__a{i}") == F.col(f"__b{i}"), 1).otherwise(0)
-            for i in range(num_hashes)
-        ),
-        start=F.lit(0),
-    )
-    sim_ok = (agree.cast("double") / num_hashes) >= F.lit(float(threshold))
-
-    losers = None
-    if state is not None:
-        bands_s = _sig_bands(state, id_col, num_hashes, band_rows)
-        cond = F.col("a.band") == F.col("b.band")
-        for r in range(band_rows):
-            cond = cond & (F.col(f"a.v{r}") == F.col(f"b.v{r}"))
-        cand_bs = (
-            bands_s.alias("a")
-            .join(bands_b.alias("b"), on=cond)
-            .select(
-                F.col(f"a.{id_col}").alias("__sid"),
-                F.col(f"b.{id_col}").alias("__bid"),
-            )
-            .distinct()
-        )
-        sa = state.select(
-            F.col(id_col).alias("__sid"),
-            *[F.col(f"sig{i}").alias(f"__a{i}") for i in range(num_hashes)],
-        )
-        sb = sig_b.select(
-            F.col(id_col).alias("__bid"),
-            *[F.col(f"sig{i}").alias(f"__b{i}") for i in range(num_hashes)],
-        )
-        losers = (
-            cand_bs.join(sa, "__sid").join(sb, "__bid")
-            .filter(sim_ok)
-            .select(F.col("__bid").alias("__loser"))
-            .distinct()
-        )
     # within-batch: lower id wins, non-recursively
-    cond_bb = (F.col("a.band") == F.col("b.band")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    )
-    for r in range(band_rows):
-        cond_bb = cond_bb & (F.col(f"a.v{r}") == F.col(f"b.v{r}"))
-    cand_bb = (
-        bands_b.alias("a")
-        .join(bands_b.alias("b"), on=cond_bb)
-        .select(
-            F.col(f"a.{id_col}").alias("__aid"),
-            F.col(f"b.{id_col}").alias("__bid"),
+    pairs = _banded_pairs(bands_b, sig_b, id_col, num_hashes, band_rows, threshold)
+    if state is not None:
+        pairs = pairs.unionByName(
+            _banded_pairs(
+                _sig_bands(state, id_col, num_hashes, band_rows),
+                state, id_col, num_hashes, band_rows, threshold,
+                bands_b=bands_b, sig_b=sig_b,
+            )
         )
-        .distinct()
-    )
-    sa_b = sig_b.select(
-        F.col(id_col).alias("__aid"),
-        *[F.col(f"sig{i}").alias(f"__a{i}") for i in range(num_hashes)],
-    )
-    sb_b = sig_b.select(
-        F.col(id_col).alias("__bid"),
-        *[F.col(f"sig{i}").alias(f"__b{i}") for i in range(num_hashes)],
-    )
-    losers_bb = (
-        cand_bb.join(sa_b, "__aid").join(sb_b, "__bid")
-        .filter(sim_ok)
-        .select(F.col("__bid").alias("__loser"))
-        .distinct()
-    )
     # The loser id-set is consumed by BOTH outputs (survivors anti-join
     # and the state's surviving-signature anti-join), and callers run
     # those as separate actions (the foreachBatch handler writes
@@ -1193,9 +1064,7 @@ def incremental_neardedup(
     # day 2). Unmaterialized, the entire banded-join cascade re-executes
     # per consumer; the set itself is only ids (guide §2.4 — remove
     # recomputed subtrees).
-    all_losers = (
-        losers_bb if losers is None else losers.unionByName(losers_bb).distinct()
-    ).localCheckpoint()
+    all_losers = pairs.select(F.col("id_b").alias("__loser")).distinct().localCheckpoint()
     survivors = batch.join(
         all_losers, on=F.col(id_col) == F.col("__loser"), how="left_anti"
     )
@@ -1493,25 +1362,8 @@ def contamination_report(
     with ``hit_frac`` NULL."""
     corpus_sh = spread_by(
         corpus.select(F.col(id_col).alias("__cid"), F.col(text_col)), "__cid"
-    ).select(
-        "__cid",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    word_ngrams_kernel(n)(F.col(text_col)), lambda s: F.xxhash64(s)
-                )
-            )
-        ).alias("__s"),
-    )
-    bench_sh = benchmark.select(
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    word_ngrams_kernel(n)(F.col(text_col)), lambda s: F.xxhash64(s)
-                )
-            )
-        ).alias("__s")
-    ).distinct()
+    ).select("__cid", _shingle_hashes(text_col, n).alias("__s"))
+    bench_sh = benchmark.select(_shingle_hashes(text_col, n).alias("__s")).distinct()
     per_doc = corpus_sh.groupBy("__cid").agg(F.count(F.lit(1)).alias("n_shingles"))
     hits = (
         corpus_sh.join(F.broadcast(bench_sh), "__s")

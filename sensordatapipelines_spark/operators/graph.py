@@ -23,6 +23,36 @@ class GraphCapAdvisory(UserWarning):
     ``observation=``); kept importable for callers that filter it."""
 
 
+def symmetric_edges(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    s: str = "s",
+    d: str = "d",
+    distinct: bool = False,
+) -> DataFrame:
+    """Both orientations of every edge as an eager checkpoint of ``(s,
+    d)`` rows: the undirected adjacency list the graph operators iterate
+    over. ``distinct`` keeps one row per ordered pair.
+
+    Each edge row yields its two orientations through one ``inline`` of
+    a two-struct array, so ``edges`` is read once: a union of two
+    column-swapped projections is not recognised as one subtree and runs
+    an expensive upstream edge builder (a banded MinHash join, a
+    co-occurrence explode) twice."""
+    sym = edges.select(
+        F.inline(
+            F.array(
+                F.struct(F.col(src_col).alias(s), F.col(dst_col).alias(d)),
+                F.struct(F.col(dst_col).alias(s), F.col(src_col).alias(d)),
+            )
+        )
+    )
+    if distinct:
+        sym = sym.distinct()
+    return sym.localCheckpoint()
+
+
 @register("pagerank")
 def pagerank(
     edges: DataFrame,
@@ -53,22 +83,16 @@ def pagerank(
     before multi-action use; the library does not pay that extra blocking
     job for the common single-action path (every declared query consumes
     it exactly once, and quantizes ranks before comparison)."""
-    # Materialize the directed edge list before symmetrizing — the
-    # union's column-swapped branches would otherwise run the upstream
-    # edge builder (jaccard_pairs' banded cascade) twice inside the one
-    # checkpoint job (guide §2.4; same fix as connected_components).
-    e0 = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint()
-    e = e0
     if undirected:
-        e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.distinct().localCheckpoint()
-    # e0 fed only the symmetrized build; its blocks are superseded now
-    # (deferred unpersist-on-supersede, VERDICT r9 #6). The second
-    # checkpoint (e) and nodes stay live — the returned lazy frame reads
-    # them on every action.
-    unpersist_checkpoint(e0)
+        e = symmetric_edges(edges, src_col, dst_col, "src", "dst", distinct=True)
+    else:
+        e = (
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .distinct()
+            .localCheckpoint()
+        )
+    # e and nodes stay live: the returned lazy frame reads them on every
+    # action.
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     # The node count rides the checkpoint job as an observed metric —
     # the separate count() action was one whole extra job for a scalar.
@@ -254,15 +278,10 @@ def adamic_adar(
     on rounding half-way points), so the per-node top-k window is
     deterministic cross-engine — no float-rank flips. An ``observation``
     holds ``n_nodes`` / ``n_hub_nodes`` when the call returns."""
-    # The edge frame is consumed THREE times (both symmetrization branches
-    # + the existing-edge anti-join) and the branches are column-swapped,
-    # so ReuseExchange never fires: without the checkpoint an expensive
-    # upstream edge builder (e.g. a co-occurrence explode) runs 3×.
-    # Storage cost is O(edges), the same as the component-loop checkpoints.
-    edges = edges.localCheckpoint()
-    sym = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")).unionAll(
-        edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-    )
+    # The symmetric list feeds the neighbor list and the existing-edge
+    # anti-join. It stays non-distinct: its ``distinct`` below is part of
+    # the neighbor-list plan (a distinct checkpoint costs one more job).
+    sym = symmetric_edges(edges, src_col, dst_col)
     # Candidate generation = self-join of the neighbor list on the shared
     # neighbor z, NOT a per-row combination-array explode: co-activity
     # graphs are DENSE (the sf0.1 gate averages degree ~184), and
@@ -291,7 +310,7 @@ def adamic_adar(
     # The weighted neighbor list feeds BOTH self-join sides, and its own
     # degree join re-evaluates the distinct twice more — without a cut the
     # (sym → distinct) shuffle runs 4×. O(2·edges) rows, the same storage
-    # contract as the edge checkpoint above.
+    # contract as the symmetric-list checkpoint above.
     nbrt = nbrt.localCheckpoint()
     if observation is not None:
         unpersist_checkpoint(deg)
@@ -303,7 +322,7 @@ def adamic_adar(
     # buys parallelism for a deg²/2-row stage. The partition count is
     # pinned explicitly — an unnumbered repartition is itself fair game
     # for AQE coalescing, which would undo the spread.
-    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    n_part = int(sym.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     probe = nbrt.repartition(n_part, F.col("s"))
     scored = (
         probe.alias("a")
@@ -319,9 +338,11 @@ def adamic_adar(
         )
         .filter(F.col("n_common") >= F.lit(int(min_common)))
     )
-    canon = edges.select(
-        F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-        F.greatest(F.col(src_col), F.col(dst_col)).alias("w"),
+    # least/greatest collapses both orientations of an edge to one
+    # canonical pair, so reading the symmetric list gives the same set.
+    canon = sym.select(
+        F.least(F.col("s"), F.col("d")).alias("u"),
+        F.greatest(F.col("s"), F.col("d")).alias("w"),
     )
     new_pairs = scored.join(canon, ["u", "w"], "left_anti")
     wrank = Window.partitionBy("u").orderBy(
@@ -356,20 +377,11 @@ def kcore(
     and oracle-replayable — each round is one keyed degree aggregate +
     one semi-join filter, ``localCheckpoint`` truncates the loop
     lineage so the plan never grows superlinearly."""
-    # Materialize edges before symmetrizing (guide §2.4): the unionAll's
-    # column-swapped branches re-run the upstream builder (the
-    # co-occurrence explode for the events gate) twice otherwise.
-    e0 = edges.select(
-        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
-    ).localCheckpoint()
-    sym = e0.unionAll(
-        e0.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).localCheckpoint()
+    sym = symmetric_edges(edges, src_col, dst_col)
     # Deferred unpersist-on-supersede (VERDICT r9 #6): each round's new
     # sym checkpoint makes the previous round's blocks dead — release
     # them now instead of waiting for the driver GC. The final sym stays
     # live (the returned aggregate reads it).
-    unpersist_checkpoint(e0)
     for _ in range(int(rounds)):
         alive = (
             sym.groupBy("s")
@@ -415,17 +427,7 @@ def bfs_depths(
     ``localCheckpoint`` truncates lineage per round. Frontier size is
     the skew knob: a dense graph saturates (frontier → whole component)
     within a few hops, after which anti-joins shrink the work to zero."""
-    # Materialize edges before symmetrizing (guide §2.4): the union's
-    # column-swapped branches re-run the upstream builder twice otherwise.
-    e0 = edges.select(
-        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
-    ).localCheckpoint()
-    sym = (
-        e0.union(e0.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .localCheckpoint()
-    )
-    unpersist_checkpoint(e0)  # fed only the sym build (VERDICT r9 #6)
+    sym = symmetric_edges(edges, src_col, dst_col, distinct=True)
     visited = (
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
@@ -512,12 +514,7 @@ def jaccard_link_pred(
     drop via LEFT ANTI on the canonical pair; one per-node top-k window
     on (jaccard_e6 desc, w) — deterministic ties. An ``observation``
     holds ``n_nodes`` / ``n_hub_nodes`` when the call returns."""
-    sym = edges.select(
-        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-    )
-    sym = sym.localCheckpoint(eager=True)
+    sym = symmetric_edges(edges, src_col, dst_col)
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     if observation is not None:
         deg = observe_cap(

@@ -217,14 +217,6 @@ def fit_variogram(
     return nugget, sill, rng
 
 
-def fit_linear_variogram(
-    coords: np.ndarray, values: np.ndarray, n_lags: int = 6
-) -> tuple[float, float]:
-    """Back-compat alias: ``fit_variogram(model='linear')`` (what pykrige's
-    ``variogram_model='linear'`` does; reference ``:413-414``)."""
-    return fit_variogram(coords, values, "linear", n_lags)
-
-
 @register("ordinary_kriging")
 def ordinary_kriging(
     sensors: DataFrame,

@@ -1,9 +1,11 @@
 """Graph analytics tests (pagerank — SURVEY §2.7 iterative surface)."""
 
 import warnings
+from collections import Counter
 
 import pytest
 from pyspark.sql import Observation
+from pyspark.sql import functions as F
 
 
 def test_pagerank_star_graph(spark):
@@ -194,6 +196,57 @@ def test_graph_caps_warn_nothing_by_default(spark):
         jaccard_link_pred(edges)
 
 
+def test_symmetric_edges_is_the_two_orientation_union(spark):
+    """Both orientations of every edge: the same multiset as the union of
+    the edge list with its column swap (self-loops and NULL keys
+    included), and one row per ordered pair with ``distinct``."""
+    from sensordatapipelines_spark.operators.graph import symmetric_edges
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (3, 3), (None, 4), (5, None)], "u long, w long"
+    )
+    union = edges.select(F.col("u").alias("s"), F.col("w").alias("d")).unionAll(
+        edges.select(F.col("w").alias("s"), F.col("u").alias("d"))
+    )
+    sym = symmetric_edges(edges, "u", "w")
+    assert sym.columns == ["s", "d"]
+    assert Counter(map(tuple, sym.collect())) == Counter(map(tuple, union.collect()))
+    dist = symmetric_edges(edges, "u", "w", "src", "dst", distinct=True)
+    assert dist.columns == ["src", "dst"]
+    rows = [tuple(r) for r in dist.collect()]
+    assert sorted(rows, key=repr) == sorted(set(map(tuple, union.collect())), key=repr)
+
+
+def _jobs(spark, group, run):
+    """Spark jobs that ``run()`` and a ``count()`` of its result start."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count")
+    try:
+        run().count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "op, expected", [("connected_components", 22), ("pagerank", 6), ("kcore", 24)]
+)
+def test_symmetrizing_operator_job_count(spark, op, expected):
+    """Spark jobs for a call plus ``count()`` on the star+clique graph on
+    the test session (local[4], 4 shuffle partitions). Each reads its
+    edges once into one symmetric-list checkpoint."""
+    from sensordatapipelines_spark.operators import dedup, graph
+
+    edges = _star_clique(spark)
+    run = {
+        "connected_components": lambda: dedup.connected_components(edges, "u", "w"),
+        "pagerank": lambda: graph.pagerank(edges, "u", "w"),
+        "kcore": lambda: graph.kcore(edges),
+    }[op]
+    assert _jobs(spark, f"{op}_jobs", run) == expected
+
+
 def test_adamic_adar_observation_costs_fewer_jobs_than_a_side_aggregate(spark):
     """Spark jobs for an ``adamic_adar`` call plus ``count()`` on the
     star+clique graph, on the test session (local[4], 4 shuffle
@@ -213,18 +266,9 @@ def test_adamic_adar_observation_costs_fewer_jobs_than_a_side_aggregate(spark):
     from sensordatapipelines_spark.operators.graph import adamic_adar
 
     edges = _star_clique(spark)
-    sc = spark.sparkContext
-
-    def jobs(group, **kw):
-        sc.setJobGroup(group, "adamic_adar job count")
-        try:
-            adamic_adar(edges, max_degree=10, **kw).count()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     obs = Observation()
-    assert jobs("aa_jobs_plain") == 14
-    assert jobs("aa_jobs_observed", observation=obs) == 17
+    assert _jobs(spark, "aa_jobs_plain", lambda: adamic_adar(edges, max_degree=10)) == 14
+    assert _jobs(
+        spark, "aa_jobs_observed", lambda: adamic_adar(edges, max_degree=10, observation=obs)
+    ) == 17
     assert obs.get == {"n_nodes": 30, "n_hub_nodes": 1}

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sensordatapipelines_spark.operators.interpolate import (
-    fit_linear_variogram,
+    fit_variogram,
     idw,
     make_grid,
     ordinary_kriging,
@@ -72,7 +72,7 @@ def test_fit_linear_variogram_recovers_slope():
     coords = rng.uniform(0, 1, size=(40, 2))
     # construct values whose semivariance grows ~linearly with distance
     values = 3.0 * coords[:, 0] + 3.0 * coords[:, 1]
-    nugget, slope = fit_linear_variogram(coords, values)
+    nugget, slope = fit_variogram(coords, values, "linear")
     assert slope > 0
     assert nugget >= 0
 

@@ -8,12 +8,20 @@ import warnings
 import pytest
 
 from sensordatapipelines_spark.operators.dedup import (
+    connected_components,
     containment_pairs,
     incremental_neardedup,
     jaccard_pairs,
-    minhash_dedup_pairs,
     neardedup_corpus,
+    neardedup_keep_longest,
     substring_dedup,
+)
+from sensordatapipelines_spark.operators.graph import (
+    adamic_adar,
+    bfs_depths,
+    jaccard_link_pred,
+    kcore,
+    pagerank,
 )
 from sensordatapipelines_spark.operators.text import naive_bayes_classify
 
@@ -49,7 +57,6 @@ def checkpoint_rdd_ids(df) -> set[int]:
 OPS = {
     "jaccard_pairs": lambda d: jaccard_pairs(d, threshold=0.5),
     "containment_pairs": lambda d: containment_pairs(d, threshold=0.5),
-    "minhash_dedup_pairs": lambda d: minhash_dedup_pairs(d, jaccard_threshold=0.5),
     "neardedup_corpus": lambda d: neardedup_corpus(d, threshold=0.5),
     "incremental_neardedup": lambda d: incremental_neardedup(d, None)[0],
     "substring_dedup": lambda d: substring_dedup(d, span_tokens=4),
@@ -91,13 +98,40 @@ def test_unpersist_checkpoint_failure_warns_once(spark, monkeypatch):
     assert [w.category for w in caught] == [RuntimeWarning]
 
 
+def _edges(spark):
+    """A triangle with a tail: degrees 3, 2, 2, 1."""
+    return spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4)], "u long, w long")
+
+
+RELEASING_OPS = {
+    "neardedup_corpus": (_docs, lambda d: neardedup_corpus(d, threshold=0.5)),
+    "neardedup_keep_longest": (_docs, lambda d: neardedup_keep_longest(d, threshold=0.5)),
+    "connected_components": (_edges, lambda e: connected_components(e, "u", "w")),
+    "pagerank": (_edges, lambda e: pagerank(e, "u", "w")),
+    "kcore": (_edges, kcore),
+    "adamic_adar": (_edges, lambda e: adamic_adar(e, min_common=1)),
+    "jaccard_link_pred": (_edges, lambda e: jaccard_link_pred(e, min_common=1)),
+}
+
+
+@pytest.mark.parametrize("op", sorted(RELEASING_OPS))
+def test_operator_keeps_only_the_checkpoints_its_result_reads(spark, op):
+    """The checkpoints an operator leaves persisted are exactly the ones
+    its returned frame reads: the near-dup signature, the symmetric edge
+    list of components and the degree tables are released."""
+    make_input, run = RELEASING_OPS[op]
+    data = make_input(spark)
+    before = persistent_rdd_ids(spark)
+    out = run(data)
+    assert persistent_rdd_ids(spark) - before == checkpoint_rdd_ids(out) - checkpoint_rdd_ids(data)
+    assert out.count() > 0
+
+
 def test_bfs_depths_long_chain_releases_dead_checkpoints(spark):
     """A 20-node chain at max_depth=18 runs both visited compactions
     (d=8, d=16) and the release of their folded-in rounds. Exact depths,
     and the checkpoints left persisted are exactly the ones the returned
     frame reads: sym, superseded rounds and stale frontiers are gone."""
-    from sensordatapipelines_spark.operators.graph import bfs_depths
-
     edges = spark.createDataFrame([(i, i + 1) for i in range(19)], "u long, w long")
     seeds = spark.createDataFrame([(0,)], "node long")
     before = persistent_rdd_ids(spark)

@@ -12,7 +12,7 @@ import inspect
 from sensordatapipelines_spark import get_operation, list_operations
 
 #: Parameters with a default over the package's registered operators.
-REGISTERED_OPTIONS = 704
+REGISTERED_OPTIONS = 698
 
 
 def _signatures() -> dict[str, inspect.Signature]:

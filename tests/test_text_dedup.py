@@ -8,7 +8,6 @@ from sensordatapipelines_spark.operators.dedup import (
     duplicate_groups,
     exact_dedup,
     jaccard_pairs,
-    minhash_dedup_pairs,
     simhash,
     simhash_buckets,
 )
@@ -262,12 +261,6 @@ def test_jaccard_cap_consistent_sizes(spark):
     by = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out}
     assert by[(1, 2)] == pytest.approx(0.5)
     assert (1, 3) not in by and (2, 3) not in by
-
-
-def test_minhash_finds_exact_dup(spark):
-    pairs = minhash_dedup_pairs(_docs(spark), n=3, jaccard_threshold=0.5)
-    found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert (1, 4) in found
 
 
 def test_minhash_native_exact_dup_scores_one(spark):
@@ -997,38 +990,6 @@ def test_incremental_neardedup_state_and_rules(spark):
     assert surv2 == [3, 4]
     # state grew by exactly the signed survivors (3 has no signature)
     assert sorted(r["doc_id"] for r in state2.collect()) == [4, 10, 11]
-
-
-def test_minhash_ml_twin_pair_set(spark):
-    """Seed-pinned assertion for the Spark-ML MinHashLSH twin (replaces the
-    retired rows-only gate): on a planted corpus the twin finds EXACTLY the
-    planted near-dup pairs, its reported jaccard matches the true shingle
-    Jaccard (HashingTF collisions are negligible at 2^18 features on tiny
-    docs), and the seeded run is reproducible."""
-    from sensordatapipelines_spark.operators.dedup import minhash_dedup_pairs
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog today"),
-            (2, "the quick brown fox jumps over the lazy dog tonight"),
-            (3, "completely unrelated text about sensor calibration data"),
-            (4, "the quick brown fox jumps over the lazy dog today"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        (r["id_a"], r["id_b"]): r["minhash_jaccard"]
-        for r in minhash_dedup_pairs(docs, n=3, jaccard_threshold=0.5, seed=42).collect()
-    }
-    assert set(out) == {(1, 2), (1, 4), (2, 4)}
-    assert out[(1, 4)] == 1.0                      # exact dup
-    # docs 1,2: 8 trigrams each, 7 shared -> J = 7/9
-    assert out[(1, 2)] == pytest.approx(7 / 9, abs=1e-6)
-    out2 = {
-        (r["id_a"], r["id_b"]): r["minhash_jaccard"]
-        for r in minhash_dedup_pairs(docs, n=3, jaccard_threshold=0.5, seed=42).collect()
-    }
-    assert out == out2                             # seeded determinism
 
 
 def test_paragraph_dedup_keep_first_and_reassembly(spark):
