@@ -5780,11 +5780,12 @@ def _stage_gpkg(spark: SparkSession, sf_dir: str) -> str:
 
 def zones_gpkg_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GeoPackage ingestion end-to-end: the WKB zones staged as a real
-    .gpkg (SQLite + GPB-wrapped WKB blobs), read via the stdlib-sqlite
-    escape hatch (``open_geopackage``) into the existing WKB decode, and
-    the same ray-cast zonal aggregation — identical bytes, identical
-    oracle as the WKB/GeoJSON/Shapefile twins. Closes the reference's
-    last vector format (gpd.read_file accepts .gpkg)."""
+    .gpkg (SQLite + GPB-wrapped WKB blobs), read via ``open_geopackage``
+    (pure-SQLite parse, decoded on the driver under the shared size rule)
+    into the existing WKB decode, and the same ray-cast zonal aggregation
+    — identical bytes, identical oracle as the WKB/GeoJSON/Shapefile
+    twins. Closes the reference's last vector format (gpd.read_file
+    accepts .gpkg)."""
     from sensordatapipelines_spark.operators.spatial import polygon_zonal_aggregate
     from sensordatapipelines_spark.sources.geopackage import open_geopackage
 
@@ -5857,57 +5858,21 @@ def _stage_gpkg_points(spark: SparkSession, sf_dir: str) -> str:
 
 
 def sensors_gpkg_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPKG POINT-layer round-trip through the EXECUTOR-side pure-SQLite
-    path: the sensor layer staged as a .gpkg point feature table, read
-    back via binaryFile + the b-tree parser + WKB point decode, must
-    reproduce the source table bit-exactly — the oracle is the sensors
-    SQL itself (same identity contract as the shapefile export gate)."""
-    from sensordatapipelines_spark.sources.geopackage import (
-        open_geopackage_distributed,
-    )
+    """GPKG POINT-layer round-trip: the sensor layer staged as a .gpkg
+    point feature table, read back via binaryFile + the b-tree parser +
+    WKB point decode, must reproduce the source table bit-exactly — the
+    oracle is the sensors SQL itself (same identity contract as the
+    shapefile export gate)."""
+    from sensordatapipelines_spark.sources.geopackage import open_geopackage
 
     _register_views(spark, sf_dir)
     stage = _stage_gpkg_points(spark, sf_dir)
-    pts = open_geopackage_distributed(spark, stage, geometry_kind="point")
+    pts = open_geopackage(spark, stage, geometry_kind="point")
     return pts.select(
         F.col("properties")["sensor_id"].cast("long").alias("sensor_id"),
         F.col("lon"),
         F.col("lat"),
         F.col("properties")["val"].cast("double").alias("val"),
-    )
-
-
-def zones_gpkg_ingest_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GeoPackage ingestion through the EXECUTOR-side pure-SQLite path:
-    the same staged .gpkg, but parsed from ``binaryFile`` payload bytes
-    by the b-tree/overflow/serial-type reader (``sources/
-    sqlite_reader``) inside an Arrow kernel — the scale path for
-    directories of .gpkg tiles (file-per-task, no driver collect).
-    Identical decoded bytes by the equality contract with the driver
-    reader, so the WKB zonal oracle transfers verbatim."""
-    from sensordatapipelines_spark.operators.spatial import polygon_zonal_aggregate
-    from sensordatapipelines_spark.sources.geopackage import (
-        open_geopackage_distributed,
-    )
-
-    _register_views(spark, sf_dir)
-    stage = _stage_gpkg(spark, sf_dir)
-    zones = open_geopackage_distributed(spark, stage).select(
-        F.col("properties")["zone_id"].cast("long").alias("zone_id"),
-        "part",
-        "xs",
-        "ys",
-    )
-    out = polygon_zonal_aggregate(
-        _sensors(spark),
-        zones,
-        value_cols=["val"],
-        funcs=("mean", "max"),
-        source_name="pts",
-    )
-    return out.groupBy("zone_id").agg(
-        (F.round((F.first("mean_pts_val")) * F.lit(1e6)) / F.lit(1e6)).alias("mean_pts_val"),
-        (F.round((F.first("max_pts_val")) * F.lit(1e6)) / F.lit(1e6)).alias("max_pts_val"),
     )
 
 
@@ -9334,7 +9299,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zones_geojson_holes_agg": zones_geojson_holes_agg,
         "zones_shapefile_ingest": zones_shapefile_ingest,
         "zones_gpkg_ingest": zones_gpkg_ingest,
-        "zones_gpkg_ingest_dist": zones_gpkg_ingest_dist,
         "sensors_gpkg_points": sensors_gpkg_points,
         "docs_paragraph_dedup": docs_paragraph_dedup,
         "docs_substring_dedup": docs_substring_dedup,
@@ -12403,7 +12367,6 @@ def oracle_sql() -> dict[str, str]:
     oracles["zones_shapefile_ingest"] = oracles["zones_wkb_polygon_agg"]
     # GeoPackage twin: GPB-wrapped WKB decodes to identical bytes
     oracles["zones_gpkg_ingest"] = oracles["zones_wkb_polygon_agg"]
-    oracles["zones_gpkg_ingest_dist"] = oracles["zones_wkb_polygon_agg"]
     # Paragraph dedup: keep-first = min (id, pos) per paragraph; QUALIFY
     # row_number encodes the same rule; reassembly order by position.
     oracles["docs_paragraph_dedup"] = """

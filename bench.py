@@ -127,7 +127,7 @@ def main() -> int:
     # 2000 bytes of stdout (observed: rounds 1-3 printed the full per-query
     # dict, ~12 KB, and the consumer's parse failed on the head-truncated
     # line; rounds 4+ printed a compact line and parsed fine). A full
-    # 336-query map cannot fit, so the line carries per-query medians for
+    # 335-query map cannot fit, so the line carries per-query medians for
     # as many queries as fit a ~1800-byte budget, most expensive first —
     # those dominate the total and are the round-over-round perf signal —
     # plus how many were elided; the complete map is in bench_out.json.

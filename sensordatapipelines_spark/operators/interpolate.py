@@ -30,7 +30,11 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sensordatapipelines_spark.operators.spatial import _total_bounds, distance
+from sensordatapipelines_spark.operators.spatial import (
+    _total_bounds,
+    cell_neighbours,
+    distance,
+)
 from sensordatapipelines_spark.registry import register
 
 
@@ -217,6 +221,45 @@ def fit_variogram(
     return nugget, sill, rng
 
 
+def kriging_inverse(coords: np.ndarray, model: str, params: tuple) -> np.ndarray:
+    """``pinv`` of the ordinary-kriging system ``[[Γ, 1], [1ᵀ, 0]]`` over
+    the sensor ``coords`` (Γ the model semivariances, zero diagonal) — the
+    factorization both kriging operators solve against. ``pinv`` keeps
+    the system solvable when sensors coincide."""
+    n = len(coords)
+    dx = coords[:, 0][:, None] - coords[:, 0][None, :]
+    dy = coords[:, 1][:, None] - coords[:, 1][None, :]
+    gamma_ss = variogram_gamma(model, params, np.sqrt(dx * dx + dy * dy))
+    np.fill_diagonal(gamma_ss, 0.0)
+    K = np.zeros((n + 1, n + 1))
+    K[:n, :n] = gamma_ss
+    K[n, :n] = 1.0
+    K[:n, n] = 1.0
+    return np.linalg.pinv(K)
+
+
+def kriging_predict(
+    K_inv: np.ndarray,
+    coords: np.ndarray,
+    values: np.ndarray,
+    model: str,
+    params: tuple,
+    gxs: np.ndarray,
+    gys: np.ndarray,
+) -> np.ndarray:
+    """Estimates at grid points ``(gxs, gys)``: per point the RHS
+    ``[γ(p), 1]``, the weights ``w = K⁻¹·rhs`` and ``Σ wᵢ·vᵢ``."""
+    n = len(values)
+    ddx = gxs[:, None] - coords[None, :, 0]
+    ddy = gys[:, None] - coords[None, :, 1]
+    h = np.sqrt(ddx * ddx + ddy * ddy)
+    rhs = np.empty((len(gxs), n + 1))
+    rhs[:, :n] = variogram_gamma(model, params, h)
+    rhs[:, n] = 1.0
+    w = rhs @ K_inv.T  # (m, n+1)
+    return w[:, :n] @ values
+
+
 @register("ordinary_kriging")
 def ordinary_kriging(
     sensors: DataFrame,
@@ -253,30 +296,21 @@ def ordinary_kriging(
         F.col(lat_col).alias("y"),
         F.coalesce(F.col(val_column), F.lit(0.0)).alias("v"),
     )
-    n_total = sel.count()
-    if n_total > max_points:
-        sel = sel.orderBy(F.asc_nulls_last("x"), F.asc_nulls_last("y"), F.asc_nulls_last("v")).limit(max_points)
-    pts = sel.toPandas().to_numpy(dtype="float64")
+    # One collect at or under the cap; only a larger input pays a second,
+    # ordered one.
+    pdf = sel.limit(max_points + 1).toPandas()
+    if len(pdf) > max_points:
+        order = [F.asc_nulls_last(c) for c in ("x", "y", "v")]
+        pdf = sel.orderBy(*order).limit(max_points).toPandas()
+    pts = pdf.to_numpy(dtype="float64")
     coords, values = pts[:, :2], pts[:, 2]
     if variogram is None:
         variogram = fit_variogram(coords, values, variogram_model)
-    n = len(values)
-    # Ordinary kriging system: [[Γ, 1], [1ᵀ, 0]] · w = [γ(p), 1]
-    dx = coords[:, 0][:, None] - coords[:, 0][None, :]
-    dy = coords[:, 1][:, None] - coords[:, 1][None, :]
-    gamma_ss = variogram_gamma(variogram_model, variogram, np.sqrt(dx * dx + dy * dy))
-    np.fill_diagonal(gamma_ss, 0.0)
-    K = np.zeros((n + 1, n + 1))
-    K[:n, :n] = gamma_ss
-    K[n, :n] = 1.0
-    K[:n, n] = 1.0
-    # Tiny jitter keeps the system solvable when sensors coincide.
-    K_inv = np.linalg.pinv(K)
     bc = spark.sparkContext.broadcast(
         {
             "coords": coords,
             "values": values,
-            "K_inv": K_inv,
+            "K_inv": kriging_inverse(coords, variogram_model, variogram),
             "model": variogram_model,
             "params": tuple(variogram),
         }
@@ -288,23 +322,15 @@ def ordinary_kriging(
     def predict(batches):
         import pandas as pd
 
-        model = bc.value
-        c, v, ki = model["coords"], model["values"], model["K_inv"]
-        vg_model, vg_params = model["model"], model["params"]
-        nn = len(v)
+        m = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             gxs = pdf["gx"].to_numpy(dtype="float64")
             gys = pdf["gy"].to_numpy(dtype="float64")
-            ddx = gxs[:, None] - c[None, :, 0]
-            ddy = gys[:, None] - c[None, :, 1]
-            h = np.sqrt(ddx * ddx + ddy * ddy)
-            rhs = np.empty((len(pdf), nn + 1))
-            rhs[:, :nn] = variogram_gamma(vg_model, vg_params, h)
-            rhs[:, nn] = 1.0
-            w = rhs @ ki.T  # (m, n+1)
-            pred = w[:, :nn] @ v
+            pred = kriging_predict(
+                m["K_inv"], m["coords"], m["values"], m["model"], m["params"], gxs, gys
+            )
             yield pd.DataFrame({"gx": gxs, "gy": gys, out_col: pred})
 
     return grid.mapInPandas(predict, schema=schema)
@@ -361,20 +387,23 @@ def kriging_tiled(
     )
     home_tx = F.floor((F.col(lon_col) - F.lit(xmin)) / F.lit(tile_size))
     home_ty = F.floor((F.col(lat_col) - F.lit(ymin)) / F.lit(tile_size))
-    offs = F.sequence(F.lit(-reach), F.lit(reach))
     s = (
-        sensors.select(
-            F.col(lon_col).alias("x"),
-            F.col(lat_col).alias("y"),
-            F.coalesce(F.col(val_column), F.lit(0.0)).alias("v"),
-            home_tx.alias("__htx"),
-            home_ty.alias("__hty"),
+        cell_neighbours(
+            sensors.select(
+                F.col(lon_col).alias("x"),
+                F.col(lat_col).alias("y"),
+                F.coalesce(F.col(val_column), F.lit(0.0)).alias("v"),
+                home_tx.alias("__htx"),
+                home_ty.alias("__hty"),
+            ),
+            F.col("__htx"),
+            F.col("__hty"),
+            ("__tx", "__ty"),
+            reach,
         )
-        .select("*", F.explode(offs).alias("__dx"))
-        .select("*", F.explode(offs).alias("__dy"))
         .select(
-            (F.col("__htx") + F.col("__dx")).alias("__tx"),
-            (F.col("__hty") + F.col("__dy")).alias("__ty"),
+            "__tx",
+            "__ty",
             "x",
             "y",
             "v",
@@ -414,25 +443,10 @@ def kriging_tiled(
         params = (
             vg if vg is not None else fit_variogram(coords, values, variogram_model)
         )
-        n = len(values)
-        dx = coords[:, 0][:, None] - coords[:, 0][None, :]
-        dy = coords[:, 1][:, None] - coords[:, 1][None, :]
-        gamma_ss = variogram_gamma(
-            variogram_model, params, np.sqrt(dx * dx + dy * dy)
+        K_inv = kriging_inverse(coords, variogram_model, params)
+        pred = kriging_predict(
+            K_inv, coords, values, variogram_model, params, gxs, gys
         )
-        np.fill_diagonal(gamma_ss, 0.0)
-        K = np.zeros((n + 1, n + 1))
-        K[:n, :n] = gamma_ss
-        K[n, :n] = 1.0
-        K[:n, n] = 1.0
-        K_inv = np.linalg.pinv(K)
-        ddx = gxs[:, None] - coords[None, :, 0]
-        ddy = gys[:, None] - coords[None, :, 1]
-        h = np.sqrt(ddx * ddx + ddy * ddy)
-        rhs = np.empty((len(gxs), n + 1))
-        rhs[:, :n] = variogram_gamma(variogram_model, params, h)
-        rhs[:, n] = 1.0
-        pred = (rhs @ K_inv.T)[:, :n] @ values
         return pd.DataFrame({"gx": gxs, "gy": gys, out_col: pred})
 
     return (
@@ -520,18 +534,8 @@ def kriging_exact3(
         + (F.col("qy") - F.col("ty")) * (F.col("qy") - F.col("ty"))
     )
     cell = _K3_CELL
-    tcells = t.select(
-        "tid", "tx", "ty",
-        F.explode(
-            F.array(*[F.lit(i) for i in (-1, 0, 1)])
-        ).alias("__dx"),
-    ).select(
-        "tid", "tx", "ty", "__dx",
-        F.explode(F.array(*[F.lit(i) for i in (-1, 0, 1)])).alias("__dy"),
-    ).select(
-        "tid", "tx", "ty",
-        (F.floor(F.col("tx") / cell) + F.col("__dx")).alias("__cx"),
-        (F.floor(F.col("ty") / cell) + F.col("__dy")).alias("__cy"),
+    tcells = cell_neighbours(
+        t, F.floor(F.col("tx") / cell), F.floor(F.col("ty") / cell), ("__cx", "__cy")
     )
     ring = k.withColumn("__cx", F.floor(F.col("qx") / cell)).withColumn(
         "__cy", F.floor(F.col("qy") / cell)

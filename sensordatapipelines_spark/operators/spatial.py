@@ -143,6 +143,28 @@ def distance(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
     return F.sqrt(dx * dx + dy * dy)
 
 
+def cell_neighbours(
+    df: DataFrame, cx: Column, cy: Column, names: tuple[str, str], reach: int = 1
+) -> DataFrame:
+    """``df`` with each row repeated once per cell of the (2·reach+1)²
+    block around its grid cell ``(cx, cy)``, that cell's index pair in
+    columns ``names`` — the probe side of every grid-cell equi-join and
+    neighbourhood sum: a row joined on its neighbours against the other
+    side's own cell meets every partner within ``reach`` cells exactly
+    once. Offsets run dx-major, dy-minor."""
+    offs = F.array(*[F.lit(d) for d in range(-reach, reach + 1)])
+    return (
+        df.select("*", F.explode(offs).alias("__dx"))
+        .select("*", F.explode(offs).alias("__dy"))
+        .select(
+            "*",
+            (cx + F.col("__dx")).alias(names[0]),
+            (cy + F.col("__dy")).alias(names[1]),
+        )
+        .drop("__dx", "__dy")
+    )
+
+
 def morton_key_expr(ix: Column, iy: Column, bits: int = 8) -> Column:
     """Z-order (Morton) interleave of two non-negative cell indices — the
     space-filling-curve sort key that makes parquet min/max row-group
@@ -375,15 +397,11 @@ def buffer_aggregate(
         # (cell size ≥ max reach), so the exploded 3×3 sensor neighbourhood
         # covers every intersecting pair exactly once: the layer row has ONE
         # cell, and the 9 sensor copies target 9 DISTINCT cells.
-        neighbours = F.array(*[F.lit(d) for d in (-1, 0, 1)])
-        s_pre = (
-            s_pre.select("*", F.explode(neighbours).alias("__dx"))
-            .select("*", F.explode(neighbours).alias("__dy"))
-            .select(
-                "*",
-                (F.floor(F.col(sensor_lon) / F.lit(cell)) + F.col("__dx")).alias("__jx"),
-                (F.floor(F.col(sensor_lat) / F.lit(cell)) + F.col("__dy")).alias("__jy"),
-            )
+        s_pre = cell_neighbours(
+            s_pre,
+            F.floor(F.col(sensor_lon) / F.lit(cell)),
+            F.floor(F.col(sensor_lat) / F.lit(cell)),
+            ("__jx", "__jy"),
         )
         l_pre = l_pre.select(
             "*",
@@ -1314,27 +1332,9 @@ def dbscan_grid(
             "__cy": F.floor(F.col("__y") / F.lit(float(eps))).cast("long"),
         }
     )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    probe = pts.select(
-        "__id",
-        "__x",
-        "__y",
-        F.explode(offsets).alias("__o"),
-        F.col("__cx"),
-        F.col("__cy"),
-    ).select(
-        "__id",
-        "__x",
-        "__y",
-        (F.col("__cx") + F.col("__o.dx")).alias("__px"),
-        (F.col("__cy") + F.col("__o.dy")).alias("__py"),
-    )
+    probe = cell_neighbours(
+        pts, F.col("__cx"), F.col("__cy"), ("__px", "__py")
+    ).select("__id", "__x", "__y", "__px", "__py")
     right = pts.select(
         F.col("__id").alias("__idb"),
         F.col("__x").alias("__xb"),
@@ -1421,19 +1421,8 @@ def density_grid(
         F.floor(F.col(lon_col) / F.lit(float(cell_size))).alias("gx"),
         F.floor(F.col(lat_col) / F.lit(float(cell_size))).alias("gy"),
     ).groupBy("gx", "gy").agg(F.count(F.lit(1)).alias("n"))
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    contrib = g.select(
-        "gx", "gy", "n", F.explode(offs).alias("__o")
-    ).select(
-        (F.col("gx") + F.col("__o.dx")).alias("tx"),
-        (F.col("gy") + F.col("__o.dy")).alias("ty"),
-        F.col("n").alias("cn"),
+    contrib = cell_neighbours(g, F.col("gx"), F.col("gy"), ("tx", "ty")).select(
+        "tx", "ty", F.col("n").alias("cn")
     )
     smooth = contrib.groupBy(
         F.col("tx").alias("gx"), F.col("ty").alias("gy")

@@ -3,28 +3,36 @@
 A GeoPackage is a SQLite database (OGC 12-128r19) whose feature tables
 store geometry as a GeoPackageBinary (GPB) blob: an 8-byte header
 (``GP`` magic, version, flags, srs_id) + optional envelope + standard
-WKB. ``sqlite3`` ships with CPython and WKB decode already exists
+WKB. The .gpkg payloads arrive through the built-in ``binaryFile``
+source, a pure-Python SQLite b-tree parse (``sources/sqlite_reader``)
+reads the feature table, and WKB decode already exists
 (``parse_wkb_polygons``), so the reference's third vector format
-(``gpd.read_file`` accepts .gpkg, ``/root/reference/src/
-data_preprocessing.py:471-475``) closes with ~100 lines of glue.
+(``gpd.read_file`` accepts .gpkg, the reference's
+``src/data_preprocessing.py:471-475``) closes with ~100 lines of glue.
 
-Two read paths share one output contract:
+Where the decode runs follows the size rule the Shapefile reader uses
+(``runtime.place_decode``): up to 8 MiB of .gpkg bytes the files decode
+once on the driver into a ``LocalRelation``; above it, one .gpkg decodes
+in one ``mapInPandas`` task (SQLite is a single-file format), so a
+directory of .gpkg tiles parallelizes file-per-task.
 
-- ``open_geopackage`` — DRIVER-side via stdlib ``sqlite3`` (needs a local
-  file path; ``max_rows``-guarded) — the quick escape hatch for small
-  layers.
-- ``open_geopackage_distributed`` — EXECUTOR-side via ``binaryFile`` + a
-  pure-Python SQLite b-tree parse (``sources/sqlite_reader``), the scale
-  path: a directory of .gpkg tiles parallelizes file-per-task with no
-  driver collect and no size guard.
+WAL rule: the parser reads the main database file only. A write-ahead
+log (``<name>.gpkg-wal``) that is not empty holds commits the main file
+does not have yet, so ``open_geopackage`` raises ``ValueError`` naming it
+rather than return a stale table. A cleanly closed WAL-mode database
+leaves no log (SQLite checkpoints it on close) and reads in full.
 """
 
 from __future__ import annotations
 
 import struct
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sensordatapipelines_spark.runtime import listed_bytes, place_decode
+from sensordatapipelines_spark.sources.sqlite_reader import read_table
 
 
 def strip_gpb_header(blob: bytes) -> bytes:
@@ -46,94 +54,55 @@ def wrap_gpb(wkb: bytes, srs_id: int = 4326) -> bytes:
     return b"GP" + bytes([0, 0x01]) + struct.pack("<i", srs_id) + wkb
 
 
-def list_feature_tables(path: str) -> list[str]:
-    """Feature-table names registered in ``gpkg_contents``."""
-    import sqlite3
-
-    con = sqlite3.connect(path)
-    try:
-        return [
-            r[0]
-            for r in con.execute(
-                "SELECT table_name FROM gpkg_contents "
-                "WHERE data_type = 'features' ORDER BY table_name"
-            )
-        ]
-    finally:
-        con.close()
-
-
 def open_geopackage(
     spark: SparkSession,
     path: str,
     table: str | None = None,
     keep_holes: bool = False,
-    max_rows: int = 1_000_000,
     geometry_kind: str = "polygon",
 ) -> DataFrame:
-    """Read one feature table of a .gpkg into the engine's ring-format
-    vector model — same output contract as ``open_geojson`` /
-    ``open_shapefile``: one row per polygon part with ``fid``,
-    ``properties`` (raw-text map), ``part``, outer ``xs``/``ys`` and,
-    with ``keep_holes``, the full ``rings`` array. Geometry flows
-    GPB → WKB → ``parse_wkb_polygons`` (the existing Arrow decode), so
-    MultiPolygons and interior rings come for free.
+    """Read one feature table of each .gpkg under ``path`` (one file or a
+    directory of them) into the engine's vector model — the same output
+    contract as ``open_geojson`` / ``open_shapefile``: ``polygon`` layers
+    give one row per polygon part with ``fid``, ``properties`` (raw-text
+    map), ``part``, outer ``xs``/``ys`` and, with ``keep_holes``, the full
+    ``rings`` array; ``point`` layers give ``(fid, properties, lon, lat)``.
+    ``fid`` enumerates each file's rows in rowid order. Geometry flows
+    GPB → WKB → ``parse_wkb_polygons``/``parse_wkb_points``, so
+    MultiPolygons and interior rings come for free; invalid geometries
+    drop, per the S1 validate-on-open contract.
 
-    ``table`` defaults to the single feature table registered in
-    ``gpkg_contents`` (ambiguity raises — list with
-    ``list_feature_tables``). ``max_rows`` guards the driver-side SQLite
-    read, the same contract as the GeoJSON sink's collect guard."""
-    import sqlite3
-
-    if table is None:
-        tables = list_feature_tables(path)
-        if len(tables) != 1:
-            raise ValueError(
-                f"gpkg has {len(tables)} feature tables {tables}; pass table="
-            )
-        table = tables[0]
-    con = sqlite3.connect(path)
-    try:
-        (geom_col,) = con.execute(
-            "SELECT column_name FROM gpkg_geometry_columns WHERE table_name = ?",
-            (table,),
-        ).fetchone()
-        cur = con.execute(f'SELECT * FROM "{table}" LIMIT {int(max_rows) + 1}')
-        names = [d[0] for d in cur.description]
-        raw = cur.fetchall()
-    finally:
-        con.close()
-    if len(raw) > max_rows:
+    ``table`` defaults to the single feature table registered in each
+    file's ``gpkg_contents`` (ambiguity raises, naming the candidates).
+    A non-empty ``.gpkg-wal`` beside an input raises ``ValueError`` here.
+    Where the decode runs follows ``runtime.place_decode``: up to 8 MiB of
+    .gpkg bytes the files are read and decoded when this is called (a
+    corrupt file raises ``ValueError`` here), larger inputs decode lazily
+    one file per ``mapInPandas`` task."""
+    if geometry_kind not in ("polygon", "point"):
         raise ValueError(
-            f"{table} exceeds max_rows={max_rows}; export to WKB parquet "
-            "for the distributed path"
+            f"geometry_kind must be 'polygon' or 'point', got {geometry_kind!r}"
         )
-    gi = names.index(geom_col)
-    attr_names = [n for i, n in enumerate(names) if i != gi]
-    rows = []
-    for fid, r in enumerate(raw):
-        props = {
-            n: (None if r[i] is None else str(r[i]))
-            for i, n in zip(
-                (i for i in range(len(names)) if i != gi), attr_names
-            )
-        }
-        wkb = strip_gpb_header(bytes(r[gi])) if r[gi] is not None else None
-        rows.append((fid, props, bytearray(wkb) if wkb else None))
-    df = spark.createDataFrame(
-        rows, "fid long, properties map<string,string>, geometry binary"
+    files = (
+        spark.read.format("binaryFile").option("pathGlobFilter", "*.gpkg").load(path)
     )
-    return _decode_gpb_layer(df, geometry_kind, keep_holes)
+    _check_no_wal(spark, files)
+    payloads = files.select(F.col("path").alias("__path"), F.col("content").alias("__db"))
+    schema = "fid long, properties map<string,string>, geometry binary"
 
+    def decode(batches: Iterator) -> Iterator:
+        import pandas as pd
 
-def _decode_gpb_layer(
-    df: DataFrame, geometry_kind: str, keep_holes: bool
-) -> DataFrame:
-    """Shared geometry dispatch for both GPKG read paths: ``polygon``
-    layers decode through ``parse_wkb_polygons`` into the ring-format
-    vector model; ``point`` layers (the reference's sensor-layer case)
-    through ``parse_wkb_points`` into ``(fid, properties, lon, lat)``.
-    Invalid geometries drop, per the S1 validate-on-open contract."""
+        for pdf in batches:
+            rows = []
+            for file, payload in zip(pdf["__path"], pdf["__db"]):
+                try:
+                    rows.extend(_feature_rows(bytes(payload), table))
+                except (ValueError, struct.error, IndexError, KeyError) as exc:
+                    raise ValueError(f"GeoPackage {file}: {exc!r}") from exc
+            yield pd.DataFrame(rows, columns=["fid", "properties", "geometry"])
+
+    df = place_decode(spark, [files], payloads, decode, schema)
     from sensordatapipelines_spark.operators.spatial import (
         parse_wkb_points,
         parse_wkb_polygons,
@@ -142,100 +111,70 @@ def _decode_gpb_layer(
     if geometry_kind == "point":
         out = parse_wkb_points(df)
         return out.filter(out["lon"].isNotNull()).drop("geometry")
-    if geometry_kind != "polygon":
-        raise ValueError(
-            f"geometry_kind must be 'polygon' or 'point', got {geometry_kind!r}"
-        )
     out = parse_wkb_polygons(df, keep_holes=keep_holes)
     return out.filter(out["xs"].isNotNull())
 
 
-def open_geopackage_distributed(
-    spark: SparkSession,
-    path: str,
-    table: str | None = None,
-    keep_holes: bool = False,
-    geometry_kind: str = "polygon",
-) -> DataFrame:
-    """EXECUTOR-side GeoPackage read: .gpkg payloads arrive via the
-    built-in ``binaryFile`` source (one row per file, file-parallel —
-    the tiles-as-files layout multi-GB vector corpora ship as) and a
-    pure-Python SQLite parse (``sources/sqlite_reader``: b-tree walk,
-    overflow chains, serial-type codec — no sqlite3 file handle needed)
-    runs inside an Arrow ``mapInPandas`` kernel. Output contract is
-    IDENTICAL to the driver-side ``open_geopackage`` (same fid
-    enumeration in rowid order, same stringified properties, same
-    GPB→WKB→``parse_wkb_polygons`` chain), so the two are
-    interchangeable and share oracles; this is the scale path the
-    driver-side escape hatch documents.
+def _check_no_wal(spark: SparkSession, files: DataFrame) -> None:
+    """Raise ``ValueError`` naming each non-empty ``-wal`` log of a listed
+    .gpkg. The logs are listed in the inputs' directories and sized from
+    plan statistics, as the Shapefile reader sizes its .dbf files: no job
+    runs."""
+    inputs = set(files.inputFiles())
+    if not inputs:
+        return
+    listing = spark.read.format("binaryFile").option("pathGlobFilter", "*.gpkg-wal")
+    wal = listing.load(sorted({f.rsplit("/", 1)[0] for f in inputs}))
+    if listed_bytes(wal) == 0:
+        return
+    stale = [
+        w
+        for w in sorted(wal.inputFiles())
+        if w[: -len("-wal")] in inputs and listed_bytes(listing.load(w)) > 0
+    ]
+    if stale:
+        raise ValueError(
+            f"GeoPackage write-ahead log not checkpointed: {stale}; close "
+            "the writer (or run PRAGMA wal_checkpoint) before reading"
+        )
 
-    ``path`` may be one .gpkg or a directory of them; ``table`` defaults
-    to the single feature table registered in ``gpkg_contents`` of each
-    file (ambiguity raises, naming the candidates)."""
-    from sensordatapipelines_spark.runtime import ensure_shipped
 
-    ensure_shipped(spark)  # the decode kernel imports this package on workers
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gpkg")
-        .load(path)
-        .select(F.col("content").alias("__db"))
-    )
-    schema = "fid long, properties map<string,string>, geometry binary"
-
-    def decode(batches):
-        import pandas as pd
-
-        from sensordatapipelines_spark.sources.sqlite_reader import read_table
-
-        for pdf in batches:
-            rows = []
-            for payload in pdf["__db"]:
-                payload = bytes(payload)
-                gcols, git = read_table(payload, "gpkg_geometry_columns")
-                geom_by_table = {}
-                for _rid, vals in git:
-                    d = dict(zip(gcols, vals))
-                    geom_by_table[d["table_name"]] = d["column_name"]
-                tbl = table
-                if tbl is None:
-                    ccols, cit = read_table(payload, "gpkg_contents")
-                    feats = [
-                        dict(zip(ccols, v))["table_name"]
-                        for _r, v in cit
-                        if dict(zip(ccols, v)).get("data_type") == "features"
-                    ]
-                    if len(feats) != 1:
-                        raise ValueError(
-                            f"gpkg has {len(feats)} feature tables {feats}; "
-                            "pass table="
-                        )
-                    tbl = feats[0]
-                gcol = geom_by_table[tbl]
-                cols, it = read_table(payload, tbl)
-                gi = cols.index(gcol)
-                for fid, (_rowid, vals) in enumerate(it):
-                    props = {
-                        n: (None if v is None else str(v))
-                        for i, (n, v) in enumerate(zip(cols, vals))
-                        if i != gi
-                    }
-                    blob = vals[gi]
-                    wkb = (
-                        strip_gpb_header(bytes(blob))
-                        if blob is not None
-                        else None
-                    )
-                    rows.append(
-                        {
-                            "fid": fid,
-                            "properties": props,
-                            "geometry": bytearray(wkb) if wkb else None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["fid", "properties", "geometry"]
+def _feature_rows(payload: bytes, table: str | None) -> list[dict]:
+    """One .gpkg payload → ``{fid, properties, geometry}`` rows of its
+    feature table, ``geometry`` the WKB inside the GPB blob."""
+    gcols, git = read_table(payload, "gpkg_geometry_columns")
+    geom_by_table = {}
+    for _rid, vals in git:
+        d = dict(zip(gcols, vals))
+        geom_by_table[d["table_name"]] = d["column_name"]
+    if table is None:
+        ccols, cit = read_table(payload, "gpkg_contents")
+        feats = [
+            d["table_name"]
+            for d in (dict(zip(ccols, v)) for _r, v in cit)
+            if d.get("data_type") == "features"
+        ]
+        if len(feats) != 1:
+            raise ValueError(
+                f"gpkg has {len(feats)} feature tables {feats}; pass table="
             )
-
-    df = raw.mapInPandas(decode, schema=schema)
-    return _decode_gpb_layer(df, geometry_kind, keep_holes)
+        table = feats[0]
+    cols, it = read_table(payload, table)
+    gi = cols.index(geom_by_table[table])
+    rows = []
+    for fid, (_rowid, vals) in enumerate(it):
+        props = {
+            n: (None if v is None else str(v))
+            for i, (n, v) in enumerate(zip(cols, vals))
+            if i != gi
+        }
+        blob = vals[gi]
+        wkb = strip_gpb_header(bytes(blob)) if blob is not None else None
+        rows.append(
+            {
+                "fid": fid,
+                "properties": props,
+                "geometry": bytearray(wkb) if wkb else None,
+            }
+        )
+    return rows

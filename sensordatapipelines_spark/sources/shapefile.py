@@ -27,36 +27,28 @@ covers the polygon/point layers a pipeline actually exchanges:
   contract as the GeoJSON sink's ``max_rows``-guarded collect.
 
 Scale note: where the decode runs follows the input's file bytes (all
-.shp + .dbf under ``path``), read from the listing-time plan statistics
-of the two ``binaryFile`` relations (no job). Up to
-``_DRIVER_DECODE_MAX_BYTES`` (8 MiB) the payloads are collected in one
-job, decoded on the driver, and returned as a ``LocalRelation``. A lazy
-``mapInPandas`` plan would re-run the decode as a Python task on every
-plan reference (operators join their stats back onto the input and take
-its bounds), and that task's fixed cost (~0.25 s on 4 cores) dwarfs
-decoding a dim layer (~2 ms for 500 points). The cap bounds driver
-memory, not speed: the decode's transient Python peak is ~9x the file
-bytes. Above it, ONE shapefile decodes in one task (the format is not
-splittable), file-parallel across layers; a layer too big for one task
-should be ingested once and persisted as WKB parquet
-(``parse_wkb_polygons`` path) — the same advice any engine gives for
-shapefiles at scale.
+.shp + .dbf under ``path``), under the size rule every Python file decode
+shares (``runtime.place_decode``, SCALE.md): up to 8 MiB the payloads are
+collected in one job, decoded on the driver, and returned as a
+``LocalRelation``. A lazy ``mapInPandas`` plan would re-run the decode as
+a Python task on every plan reference (operators join their stats back
+onto the input and take its bounds), and that task's fixed cost (~0.25 s
+on 4 cores) dwarfs decoding a dim layer (~2 ms for 500 points). Above the
+cap, ONE shapefile decodes in one task (the format is not splittable),
+file-parallel across layers; a layer too big for one task should be
+ingested once and persisted as WKB parquet (``parse_wkb_polygons`` path)
+— the same advice any engine gives for shapefiles at scale.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Inputs (.shp + .dbf bytes) up to this size decode on the driver. From
-# the second plan reference on, the driver decode beat the per-task one at
-# every size measured (50 KB to 60 MB), but its transient Python peak is
-# ~9x the file bytes, so the cap holds that near 70 MB (SCALE.md,
-# shapefile decode table).
-_DRIVER_DECODE_MAX_BYTES = 8 * 1024 * 1024
+from sensordatapipelines_spark.runtime import place_decode
 
 SHP_POINT = 1
 SHP_POLYLINE = 3
@@ -197,14 +189,11 @@ def open_shapefile(
     drops unsupported/degenerate records (< 3 vertices for polygons) — the
     S1 validity filter.
 
-    When the .shp + .dbf files under ``path`` total at most
-    ``_DRIVER_DECODE_MAX_BYTES`` (8 MiB), they are read and decoded on the
-    driver when this is called (snapshot semantics: later file edits are
-    not seen, and a corrupt file raises ``ValueError`` here). Every later
-    plan reference then rescans a ``LocalRelation`` in the JVM instead of
-    paying a Python task to decode again. Larger inputs keep the lazy
-    file-per-task ``mapInPandas`` decode, which raises at the first
-    action."""
+    Where the decode runs follows ``runtime.place_decode``: when the .shp
+    + .dbf files under ``path`` total at most 8 MiB, they are read and
+    decoded on the driver when this is called (a corrupt file raises
+    ``ValueError`` here); larger inputs keep the lazy file-per-task
+    ``mapInPandas`` decode, which raises at the first action."""
     shp_files = (
         spark.read.format("binaryFile").option("pathGlobFilter", "*.shp").load(path)
     )
@@ -321,19 +310,8 @@ def open_shapefile(
                 ],
             )
 
-    # File bytes from the listing-time plan statistics: no job runs here.
-    layer_bytes = sum(
-        f._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        for f in (shp_files, dbf_files)
-    )
     paired = shp.join(F.broadcast(dbf), "__stem", "left")
-    if layer_bytes <= _DRIVER_DECODE_MAX_BYTES:
-        out = _decode_on_driver(spark, paired, decode, schema)
-    else:
-        from sensordatapipelines_spark.runtime import ensure_shipped
-
-        ensure_shipped(spark)  # the decode kernel imports this module on workers
-        out = paired.mapInPandas(decode, schema=schema)
+    out = place_decode(spark, [shp_files, dbf_files], paired, decode, schema)
     if validate:
         # degeneracy floor per type: polygons need a ring (3+), polylines
         # a segment (2+), points are 1-vertex by construction
@@ -351,28 +329,6 @@ def open_shapefile(
             )
         )
     return out
-
-
-def _decode_on_driver(
-    spark: SparkSession,
-    paired: DataFrame,
-    decode: Callable[[Iterator], Iterator],
-    schema: str,
-) -> DataFrame:
-    """Collect a small layer's paired payloads, run ``decode`` here and
-    return the rows as a ``LocalRelation``. The Arrow table keeps it local
-    whether or not ``spark.sql.execution.arrow.pyspark.enabled`` is set."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    struct = StructType.fromDDL(schema)
-    table = pa.Table.from_pandas(
-        next(decode(iter([paired.toPandas()]))),
-        schema=to_arrow_schema(struct),
-        preserve_index=False,
-    )
-    return spark.createDataFrame(table, schema=struct)
 
 
 def _is_clockwise(xs: list, ys: list) -> bool:

@@ -1,24 +1,27 @@
-"""Pure-Python SQLite table reader — the executor-side half of the
-GeoPackage source.
+"""Pure-Python SQLite table reader — the parser behind the GeoPackage
+source.
 
-A GeoPackage is a SQLite database (OGC 12-128r19); the driver-side
-``open_geopackage`` uses the stdlib ``sqlite3`` module, which needs a
-LOCAL FILE PATH — useless on executors that receive file BYTES from the
-``binaryFile`` source. This module parses the SQLite file format
-(https://www.sqlite.org/fileformat2.html) directly from a payload:
-database header, table b-tree traversal (interior/leaf pages), cell
-payload overflow chains, and the record serial-type codec. That is the
-same pattern as ``sources/shapefile.py``'s executor-side .shp/.dbf
-parse, applied to the reference's third vector format
-(``gpd.read_file`` accepts .gpkg, ``/root/reference/src/
-data_preprocessing.py:471-475``).
+A GeoPackage is a SQLite database (OGC 12-128r19). Its payloads arrive as
+file BYTES from the ``binaryFile`` source, on the driver or in an
+executor task (``sources/geopackage``), so this module parses the SQLite
+file format (https://www.sqlite.org/fileformat2.html) directly from a
+payload: database header, table b-tree traversal (interior/leaf pages),
+cell payload overflow chains, and the record serial-type codec. That is
+the same pattern as ``sources/shapefile.py``'s .shp/.dbf parse, applied
+to the reference's third vector format (``gpd.read_file`` accepts .gpkg,
+the reference's ``src/data_preprocessing.py:471-475``).
 
 Scope: rowid table b-trees (every GPKG feature table is one), all five
 serial-type families (NULL / big-endian ints / float64 / blob / text),
 INTEGER-PRIMARY-KEY rowid aliasing, and multi-page payload overflow.
-Not in scope (typed errors): WITHOUT ROWID tables, WAL-mode side files
-(a .gpkg shipped for analysis is a plain main file), indexes (table
-scans read leaves directly).
+Not in scope (typed errors): WITHOUT ROWID tables; indexes (table scans
+read leaves directly).
+
+WAL rule: only the main database file is parsed. Commits still held in a
+write-ahead log are not in it, so the GeoPackage reader raises a typed
+error for a non-empty ``-wal`` file beside its input instead of parsing
+a stale main file; a cleanly closed WAL-mode database has no log and
+parses in full.
 
 Scale contract: one .gpkg file parses in ONE task (SQLite is a
 single-file format — exactly like one .shp); a directory of .gpkg tiles
@@ -194,7 +197,7 @@ def _columns_from_create_sql(
     the paren body at depth 0, skipping table-level constraints.
     REAL-affinity matters because SQLite stores integral REAL values AS
     INTEGERS on disk and converts back on read — a byte-level reader
-    must replay that conversion to match ``sqlite3`` semantics."""
+    must replay that conversion to read the values SQLite returns."""
     body = sql[sql.index("(") + 1 : sql.rindex(")")]
     parts, depth, cur = [], 0, []
     for ch in body:

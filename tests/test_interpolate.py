@@ -65,6 +65,42 @@ def test_kriging_exact_at_sensor_and_shape(spark):
         assert 0.0 <= v <= 50.0
 
 
+def _build_jobs(spark, group, build):
+    """Spark jobs that ``build()`` starts (the plan is built, not run)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "build-time jobs")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_kriging_collects_sensors_once(spark):
+    """With ``extent`` given, building the kriging plan collects the
+    sensors in one job at or under ``max_points`` (no separate count);
+    over the cap a second, ordered collect keeps the first ``max_points``
+    sensors by (x, y, v), as before."""
+    kw = dict(lon_step=0.5, lat_step=0.5, extent=(0.0, 1.5, 0.0, 1.5), variogram=(0.0, 1.0))
+    under, n_under = _build_jobs(
+        spark, "krig_under_cap", lambda: ordinary_kriging(_sensors(spark), "v", **kw)
+    )
+    assert n_under == 1
+    over, n_over = _build_jobs(
+        spark, "krig_over_cap",
+        lambda: ordinary_kriging(_sensors(spark), "v", max_points=3, **kw),
+    )
+    assert n_over == 2
+    first3 = spark.createDataFrame(
+        [(1, 0.0, 0.0, 10.0), (3, 0.0, 1.0, 30.0), (2, 1.0, 0.0, 20.0)],
+        "sensor_id long, lon double, lat double, v double",
+    )
+    first3 = ordinary_kriging(first3, "v", **kw)
+    assert sorted(over.collect()) == sorted(first3.collect())
+    assert sorted(over.collect()) != sorted(under.collect())
+
+
 def test_fit_linear_variogram_recovers_slope():
     import numpy as np
 

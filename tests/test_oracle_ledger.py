@@ -49,6 +49,8 @@ def test_committed_ledger_complete_and_green():
         results = ledger[sf_key]
         missing = qnames - set(results)
         assert not missing, f"{sf_key}: queries without a ledger row: {missing}"
+        stale = set(results) - qnames
+        assert not stale, f"{sf_key}: ledger rows naming no gate: {stale}"
         failed = {n: r["detail"] for n, r in results.items() if r["status"] == "fail"}
         assert not failed, f"{sf_key}: failing ledger rows: {failed}"
         # every oracle-able query must carry a value hash (strict evidence,
@@ -69,6 +71,8 @@ def test_committed_adversarial_ledgers_complete_and_green():
             results = ledger[key]
             missing = qnames - set(results)
             assert not missing, f"{path}:{key}: missing rows: {missing}"
+            stale = set(results) - qnames
+            assert not stale, f"{path}:{key}: rows naming no gate: {stale}"
             failed = {
                 n: r["detail"] for n, r in results.items() if r["status"] == "fail"
             }

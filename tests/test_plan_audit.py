@@ -45,9 +45,6 @@ BNLJ_ALLOWED = {
     # distance/ray-cast join broadcasts the small vector/sensor dim side
     "zones_geojson_ingest", "zones_geojson_holes_agg",
     "zones_shapefile_ingest", "zones_gpkg_ingest",
-    # same ray-cast polygon join via the executor-side gpkg reader (the
-    # old audit had captured its degenerate driver-fallback plan)
-    "zones_gpkg_ingest_dist",
     "sensors_zonal_from_grid",
     "sensors_zonal_from_geotiff",
     "sensors_zonal_from_geotiff_deflate",  # same plan as the uncompressed twin
@@ -90,10 +87,16 @@ def test_committed_plan_audit_complete_and_clean():
             f"{n} has a pickled-row BatchEvalPython node — use Arrow "
             "(useArrow=True / pandas_udf / mapInArrow)"
         )
-    # A small Shapefile layer decodes once on the driver into a local
-    # relation; a Python node here means every plan reference to the layer
-    # pays a decode task again.
+    # A small Shapefile or GeoPackage input decodes once on the driver
+    # into a local relation; a MapInPandas node here means every plan
+    # reference to it pays a decode task again.
     for n in ("sensors_shapefile_export", "zones_shapefile_ingest"):
         assert audit[n]["python_eval"] == 0, (
             f"{n} decodes its Shapefile in a Python task"
+        )
+    # The GeoPackage gates keep their Arrow WKB-decode UDFs, so only
+    # Python nodes beyond those (MapInPandas) count.
+    for n in ("sensors_gpkg_points", "zones_gpkg_ingest"):
+        assert audit[n]["python_eval"] == audit[n]["arrow_eval_python"], (
+            f"{n} decodes its GeoPackage in a MapInPandas task"
         )

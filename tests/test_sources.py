@@ -515,22 +515,23 @@ def test_open_ascii_grid_decode(spark, tmp_path):
 
 
 @contextlib.contextmanager
-def _shapefile_decode_cap(max_bytes):
-    """Run ``open_shapefile`` with its driver-decode size cap at
-    ``max_bytes`` (``None`` keeps the default, under which every test
-    layer decodes on the driver; -1 sends every layer to mapInPandas)."""
-    from sensordatapipelines_spark.sources import shapefile
+def _decode_cap(max_bytes):
+    """Run the file readers (``open_shapefile``, ``open_geopackage``) with
+    their shared driver-decode size cap at ``max_bytes`` (``None`` keeps
+    the default, under which every test input decodes on the driver; -1
+    sends every input to mapInPandas)."""
+    from sensordatapipelines_spark import runtime
 
-    saved = shapefile._DRIVER_DECODE_MAX_BYTES
+    saved = runtime._DRIVER_DECODE_MAX_BYTES
     if max_bytes is not None:
-        shapefile._DRIVER_DECODE_MAX_BYTES = max_bytes
+        runtime._DRIVER_DECODE_MAX_BYTES = max_bytes
     try:
         yield
     finally:
-        shapefile._DRIVER_DECODE_MAX_BYTES = saved
+        runtime._DRIVER_DECODE_MAX_BYTES = saved
 
 
-# both sides of open_shapefile's size rule: driver decode, mapInPandas
+# both sides of the readers' size rule: driver decode, mapInPandas
 _DECODE_CAPS = (None, -1)
 
 
@@ -576,7 +577,7 @@ def test_shapefile_roundtrip_multipart_holes_points(spark, tmp_path):
     assert len(recs[0][2]) == 2 and len(recs[1][2]) == 2  # flat ring counts
 
     for cap in _DECODE_CAPS:
-        with _shapefile_decode_cap(cap):
+        with _decode_cap(cap):
             df = open_shapefile(spark, str(tmp_path))
             out = {(r["fid"], r["part"]): r for r in df.collect()}
         assert set(out) == {(1, 0), (1, 1), (2, 0)}, cap
@@ -640,7 +641,7 @@ def test_shapefile_point_polyline_writers_roundtrip(spark, tmp_path):
     assert len(loop[2][0][0]) == 5
 
     for cap in _DECODE_CAPS:
-        with _shapefile_decode_cap(cap):
+        with _decode_cap(cap):
             got = (
                 open_shapefile(spark, str(d))
                 .select("fid", "geom_type", "properties", "xs", "ys")
@@ -671,7 +672,7 @@ def test_shapefile_point_polyline_writers_roundtrip(spark, tmp_path):
     names, rows2 = parse_dbf((d / "sensors.dbf").read_bytes())
     assert rows2[1] is None and rows2[2] == ["s3", "3.75"]
     for cap in _DECODE_CAPS:
-        with _shapefile_decode_cap(cap):
+        with _decode_cap(cap):
             got2 = {
                 r.fid: r.properties
                 for r in open_shapefile(spark, str(d)).collect()
@@ -703,7 +704,7 @@ def test_shapefile_driver_and_executor_decode_agree(spark, tmp_path):
     write_dbf(str(two / "b.dbf"), ["k"], [["b1"]])
 
     def opened(path, cap):
-        with _shapefile_decode_cap(cap):
+        with _decode_cap(cap):
             df = open_shapefile(spark, str(path))
             rows = sorted(df.collect(), key=lambda r: (r.layer, r.fid, r.part))
         return rows, df.schema, df._jdf.queryExecution().executedPlan().toString()
@@ -739,20 +740,47 @@ def test_shapefile_small_layer_errors_at_open(spark, tmp_path):
     with pytest.raises(ValueError, match="corrupt shapefile"):
         open_shapefile(spark, str(tmp_path))
 
-    with _shapefile_decode_cap(-1):
+    with _decode_cap(-1):
         df = open_shapefile(spark, str(tmp_path))
         with pytest.raises(Exception, match="corrupt shapefile"):
             df.collect()
 
 
-def test_geopackage_roundtrip(spark, tmp_path):
-    """GPB wrap/strip symmetry, gpkg_contents discovery, attribute map,
-    MultiPolygon part fan-out through the WKB decode."""
+def _new_gpkg(path, tables, wal=False):
+    """Open a SQLite connection on a fresh .gpkg at ``path`` with the OGC
+    registry tables and one feature table per ``{name: create_sql}`` of
+    ``tables``, each with geometry column ``geom``."""
     import sqlite3
 
+    con = sqlite3.connect(str(path))
+    if wal:
+        con.execute("PRAGMA journal_mode=WAL")
+    con.execute("CREATE TABLE gpkg_contents (table_name TEXT, data_type TEXT)")
+    con.execute(
+        "CREATE TABLE gpkg_geometry_columns (table_name TEXT, column_name TEXT)"
+    )
+    for name, create_sql in tables.items():
+        con.execute("INSERT INTO gpkg_contents VALUES (?, 'features')", (name,))
+        con.execute("INSERT INTO gpkg_geometry_columns VALUES (?, 'geom')", (name,))
+        con.execute(create_sql)
+    return con
+
+
+def _point_gpb(x, y):
+    import struct
+
+    from sensordatapipelines_spark.sources.geopackage import wrap_gpb
+
+    return wrap_gpb(b"\x01" + struct.pack("<I", 1) + struct.pack("<dd", x, y))
+
+
+def test_geopackage_roundtrip(spark, tmp_path):
+    """GPB wrap/strip symmetry, gpkg_contents discovery, attribute map,
+    MultiPolygon part fan-out through the WKB decode, on both sides of
+    the size rule; a second feature table makes discovery ambiguous
+    until ``table=`` names one."""
     from sensordatapipelines_spark.operators.spatial import encode_wkb_polygon
     from sensordatapipelines_spark.sources.geopackage import (
-        list_feature_tables,
         open_geopackage,
         strip_gpb_header,
         wrap_gpb,
@@ -762,12 +790,7 @@ def test_geopackage_roundtrip(spark, tmp_path):
     assert strip_gpb_header(wrap_gpb(wkb)) == wkb
 
     p = tmp_path / "z.gpkg"
-    con = sqlite3.connect(str(p))
-    con.execute("CREATE TABLE gpkg_contents (table_name TEXT, data_type TEXT)")
-    con.execute("CREATE TABLE gpkg_geometry_columns (table_name TEXT, column_name TEXT)")
-    con.execute("INSERT INTO gpkg_contents VALUES ('zones', 'features')")
-    con.execute("INSERT INTO gpkg_geometry_columns VALUES ('zones', 'geom')")
-    con.execute("CREATE TABLE zones (zone_id INTEGER, name TEXT, geom BLOB)")
+    con = _new_gpkg(p, {"zones": "CREATE TABLE zones (zone_id INTEGER, name TEXT, geom BLOB)"})
     con.execute(
         "INSERT INTO zones VALUES (1, 'tri', ?)",
         (wrap_gpb(encode_wkb_polygon([[(0.0, 0.0), (1.0, 0.0), (0.5, 1.0)]])),),
@@ -782,15 +805,98 @@ def test_geopackage_roundtrip(spark, tmp_path):
     con.commit()
     con.close()
 
-    assert list_feature_tables(str(p)) == ["zones"]
-    out = {
-        (r["properties"]["zone_id"], r["part"]): r
-        for r in open_geopackage(spark, str(p)).collect()
-    }
-    assert set(out) == {("1", 0), ("2", 0), ("2", 1)}
-    assert out[("1", 0)]["properties"]["name"] == "tri"
-    assert out[("1", 0)]["xs"] == [0.0, 1.0, 0.5]
-    assert out[("2", 1)]["xs"] == [4.0, 5.0, 4.5]
+    for cap in _DECODE_CAPS:
+        with _decode_cap(cap):
+            out = {
+                (r["properties"]["zone_id"], r["part"]): r
+                for r in open_geopackage(spark, str(p)).collect()
+            }
+        assert set(out) == {("1", 0), ("2", 0), ("2", 1)}, cap
+        assert out[("1", 0)]["properties"]["name"] == "tri"
+        assert out[("1", 0)]["xs"] == [0.0, 1.0, 0.5]
+        assert out[("2", 1)]["xs"] == [4.0, 5.0, 4.5]
+
+    two = tmp_path / "two" / "t.gpkg"
+    two.parent.mkdir()
+    con = _new_gpkg(two, {
+        "a": "CREATE TABLE a (k TEXT, geom BLOB)",
+        "b": "CREATE TABLE b (k TEXT, geom BLOB)",
+    })
+    con.execute("INSERT INTO a VALUES ('a1', ?)", (_point_gpb(1.0, 2.0),))
+    con.execute("INSERT INTO b VALUES ('b1', ?)", (_point_gpb(3.0, 4.0),))
+    con.commit()
+    con.close()
+    with pytest.raises(ValueError, match=r"2 feature tables \['a', 'b'\]"):
+        open_geopackage(spark, str(two), geometry_kind="point")
+    (row,) = open_geopackage(spark, str(two), table="b", geometry_kind="point").collect()
+    assert (row["properties"], row["lon"], row["lat"]) == ({"k": "b1"}, 3.0, 4.0)
+
+
+def test_geopackage_cap_boundary_and_errors_at_open(spark, tmp_path):
+    """The size rule compares the exact .gpkg bytes: at the cap the file
+    decodes on the driver (no Python node in the executed plan beyond
+    the WKB UDF), one byte under it in a mapInPandas task. A corrupt
+    small file raises ValueError at the call; above the cap the same
+    failure waits for the first action."""
+    from sensordatapipelines_spark.sources.geopackage import open_geopackage
+
+    p = tmp_path / "pts.gpkg"
+    con = _new_gpkg(p, {"pts": "CREATE TABLE pts (name TEXT, geom BLOB)"})
+    con.execute("INSERT INTO pts VALUES ('a', ?)", (_point_gpb(1.0, 2.0),))
+    con.commit()
+    con.close()
+
+    def plan(cap):
+        with _decode_cap(cap):
+            df = open_geopackage(spark, str(p), geometry_kind="point")
+            assert [tuple(r) for r in df.select("lon", "lat").collect()] == [(1.0, 2.0)]
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    size = p.stat().st_size
+    assert "MapInPandas" not in plan(size)
+    assert "MapInPandas" in plan(size - 1)
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "cut.gpkg").write_bytes(p.read_bytes()[:1500])
+    with pytest.raises(ValueError, match="cut.gpkg"):
+        open_geopackage(spark, str(bad))
+    (bad / "cut.gpkg").write_bytes(b"not a database" * 8)
+    with pytest.raises(ValueError, match="not a SQLite database"):
+        open_geopackage(spark, str(bad))
+    with _decode_cap(-1):
+        df = open_geopackage(spark, str(bad))
+        with pytest.raises(Exception, match="not a SQLite database"):
+            df.collect()
+
+
+def test_geopackage_uncheckpointed_wal_raises(spark, tmp_path):
+    """The parser reads the main file only, so commits still in a
+    non-empty ``-wal`` log would be missed: the reader raises, naming the
+    log, for a file path and for its directory. Once the writer closes
+    (SQLite checkpoints and removes the log), every row reads."""
+    from sensordatapipelines_spark.sources.geopackage import open_geopackage
+
+    p = tmp_path / "w.gpkg"
+    con = _new_gpkg(p, {"pts": "CREATE TABLE pts (name TEXT, geom BLOB)"}, wal=True)
+    for i in range(10):
+        con.execute("INSERT INTO pts VALUES (?, ?)", (f"p{i}", _point_gpb(float(i), 0.0)))
+    con.commit()
+    con.execute("PRAGMA wal_checkpoint(TRUNCATE)")
+    for i in range(10, 60):
+        con.execute("INSERT INTO pts VALUES (?, ?)", (f"p{i}", _point_gpb(float(i), 0.0)))
+    con.commit()
+    assert (tmp_path / "w.gpkg-wal").stat().st_size > 0
+    try:
+        for path in (p, tmp_path):
+            with pytest.raises(ValueError, match=r"w\.gpkg-wal"):
+                open_geopackage(spark, str(path), geometry_kind="point")
+    finally:
+        con.close()
+    assert not (tmp_path / "w.gpkg-wal").exists()
+    for path in (p, tmp_path):
+        got = open_geopackage(spark, str(path), geometry_kind="point")
+        assert sorted(r["lon"] for r in got.collect()) == [float(i) for i in range(60)]
 
 
 def test_geotiff_roundtrip_dtypes_and_cell_table(spark, tmp_path):
@@ -1363,33 +1469,24 @@ def test_geotiff_float_predictor3_roundtrip(tmp_path):
 
 
 def test_geopackage_distributed_matches_driver_side(spark, tmp_path):
-    """The executor-side pure-SQLite path must be row-for-row identical
-    to the sqlite3 driver-side reader on a fixture that exercises the
-    file format's hard parts: multi-page b-trees (interior pages),
+    """The mapInPandas decode and the driver decode give identical rows,
+    and both match what SQLite itself reads, on a fixture that exercises
+    the file format's hard parts: multi-page b-trees (interior pages),
     payload overflow chains (big geometry blobs), INTEGER PRIMARY KEY
     rowid aliasing (stored as NULL), REAL-affinity integral values
     (stored as INTEGER on disk), NULL attributes and NULL geometry."""
-    import sqlite3
-
     from sensordatapipelines_spark.operators.spatial import encode_wkb_polygon
     from sensordatapipelines_spark.sources.geopackage import (
         open_geopackage,
-        open_geopackage_distributed,
         wrap_gpb,
     )
 
     p = tmp_path / "big.gpkg"
-    con = sqlite3.connect(str(p))
-    con.execute("CREATE TABLE gpkg_contents (table_name TEXT, data_type TEXT)")
-    con.execute(
-        "CREATE TABLE gpkg_geometry_columns (table_name TEXT, column_name TEXT)"
-    )
-    con.execute("INSERT INTO gpkg_contents VALUES ('feat', 'features')")
-    con.execute("INSERT INTO gpkg_geometry_columns VALUES ('feat', 'geom')")
-    con.execute(
+    con = _new_gpkg(p, {"feat": (
         "CREATE TABLE feat (fid INTEGER PRIMARY KEY AUTOINCREMENT, "
         "name TEXT, score REAL, cnt INTEGER, geom BLOB)"
-    )
+    )})
+    rings = {}
     for i in range(800):  # forces interior b-tree pages
         # every 7th: a many-vertex ring -> record overflows the page
         nv = 700 if i % 7 == 0 else 3
@@ -1398,6 +1495,8 @@ def test_geopackage_distributed_matches_driver_side(spark, tmp_path):
             for k in range(nv)
         ]
         blob = wrap_gpb(encode_wkb_polygon([ring])) if i % 11 else None
+        if blob is not None:
+            rings[i] = ring
         con.execute(
             "INSERT INTO feat (name, score, cnt, geom) VALUES (?,?,?,?)",
             (
@@ -1408,66 +1507,55 @@ def test_geopackage_distributed_matches_driver_side(spark, tmp_path):
             ),
         )
     con.commit()
+    cur = con.execute("SELECT fid, name, score, cnt FROM feat ORDER BY fid")
+    names = [d[0] for d in cur.description]
+    want = {
+        i: {n: (None if v is None else str(v)) for n, v in zip(names, r)}
+        for i, r in enumerate(cur.fetchall())
+        if i in rings
+    }
     con.close()
 
-    key = lambda r: (r["fid"], r["part"])
-    drv = {key(r): r for r in open_geopackage(spark, str(p)).collect()}
-    dst = {
-        key(r): r
-        for r in open_geopackage_distributed(spark, str(tmp_path)).collect()
-    }
-    assert set(drv) == set(dst) and len(drv) > 600
-    for k in drv:
-        a, b = drv[k], dst[k]
-        assert a["properties"] == b["properties"], k
-        assert a["xs"] == b["xs"] and a["ys"] == b["ys"], k
+    def rows(cap):
+        with _decode_cap(cap):
+            df = open_geopackage(spark, str(tmp_path))
+            return sorted(
+                (r["fid"], r["part"], sorted(r["properties"].items()), r["xs"], r["ys"])
+                for r in df.collect()
+            )
+
+    drv, dst = rows(None), rows(-1)
+    assert drv == dst and len(drv) == len(want) > 600
+    for fid, part, props, xs, ys in drv:
+        assert part == 0 and dict(props) == want[fid], fid
+        assert list(zip(xs, ys)) == rings[fid], fid
 
 
 def test_geopackage_point_layer_both_paths(spark, tmp_path):
-    """GPKG point layers decode through both read paths with identical
-    (fid, properties, lon, lat) output; polygon-kind rejects bad kinds."""
-    import sqlite3
-    import struct
-
-    import pytest
-
-    from sensordatapipelines_spark.sources.geopackage import (
-        open_geopackage,
-        open_geopackage_distributed,
-        wrap_gpb,
-    )
+    """GPKG point layers decode on both sides of the size rule with
+    identical (fid, properties, lon, lat) output; bad kinds raise."""
+    from sensordatapipelines_spark.sources.geopackage import open_geopackage
 
     p = tmp_path / "pts.gpkg"
-    con = sqlite3.connect(str(p))
-    con.execute("CREATE TABLE gpkg_contents (table_name TEXT, data_type TEXT)")
-    con.execute(
-        "CREATE TABLE gpkg_geometry_columns (table_name TEXT, column_name TEXT)"
-    )
-    con.execute("INSERT INTO gpkg_contents VALUES ('pts', 'features')")
-    con.execute("INSERT INTO gpkg_geometry_columns VALUES ('pts', 'geom')")
-    con.execute("CREATE TABLE pts (name TEXT, geom BLOB)")
+    con = _new_gpkg(p, {"pts": "CREATE TABLE pts (name TEXT, geom BLOB)"})
     coords = [(-122.41, 37.77), (2.3522, 48.8566), (139.69, 35.68)]
     for i, (x, y) in enumerate(coords):
-        wkb = b"\x01" + struct.pack("<I", 1) + struct.pack("<dd", x, y)
-        con.execute(
-            "INSERT INTO pts VALUES (?, ?)", (f"city{i}", wrap_gpb(wkb))
-        )
+        con.execute("INSERT INTO pts VALUES (?, ?)", (f"city{i}", _point_gpb(x, y)))
     con.execute("INSERT INTO pts VALUES ('nogeom', NULL)")  # dropped
     con.commit()
     con.close()
 
-    drv = {
-        r["properties"]["name"]: (r["lon"], r["lat"])
-        for r in open_geopackage(spark, str(p), geometry_kind="point").collect()
-    }
-    dst = {
-        r["properties"]["name"]: (r["lon"], r["lat"])
-        for r in open_geopackage_distributed(
-            spark, str(tmp_path), geometry_kind="point"
-        ).collect()
-    }
-    want = {f"city{i}": c for i, c in enumerate(coords)}
-    assert drv == want and dst == want
+    def rows(cap):
+        with _decode_cap(cap):
+            df = open_geopackage(spark, str(tmp_path), geometry_kind="point")
+            return sorted(
+                (r["fid"], r["properties"]["name"], r["lon"], r["lat"])
+                for r in df.collect()
+            )
+
+    drv = rows(None)
+    assert drv == rows(-1)
+    assert drv == [(i, f"city{i}", x, y) for i, (x, y) in enumerate(coords)]
 
     with pytest.raises(ValueError, match="geometry_kind"):
         open_geopackage(spark, str(p), geometry_kind="line")

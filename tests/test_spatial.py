@@ -393,6 +393,22 @@ def test_morton_key_matches_reference_interleave(spark):
     assert {(r[0], r[1]): r[2] for r in duck} == got
 
 
+def test_cell_neighbours_block(spark):
+    """Each row comes back once per cell of the (2r+1)² block around its
+    own cell, dx-major, with its columns kept; r = 0 is the cell itself."""
+    from sensordatapipelines_spark.operators.spatial import cell_neighbours
+
+    df = spark.createDataFrame([("a", 5, -3)], "k string, cx long, cy long")
+    for reach in (0, 1, 2):
+        rows = cell_neighbours(
+            df, F.col("cx"), F.col("cy"), ("nx", "ny"), reach
+        ).collect()
+        offs = range(-reach, reach + 1)
+        assert [(r.k, r.cx, r.cy, r.nx, r.ny) for r in rows] == [
+            ("a", 5, -3, 5 + dx, -3 + dy) for dx in offs for dy in offs
+        ], reach
+
+
 def test_polygon_filter_ray_cast(spark):
     from sensordatapipelines_spark.operators.spatial import (
         point_in_polygon_predicate,
